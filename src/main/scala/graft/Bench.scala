@@ -29,7 +29,7 @@ import org.apache.spark.sql.SparkSession
   * column that does not affect cardinality — measured on the r13 code:
   * q_win_range's Window node is REMOVED ENTIRELY from the optimized
   * count plan (its flat 0.15 s at a 3.1M-row hot partition in the first
-  * WindowSkewAb run was a scan-count, not a window), the whole §2.5
+  * skew ladder was a scan-count, not a window), the whole §2.5
   * window family loses its output-only window expressions, the scalar
   * queries (§2.8) lose their expressions, and EliminateSorts drops
   * every final orderBy. The declared result is the full column set in
@@ -42,9 +42,8 @@ import org.apache.spark.sql.SparkSession
   * cross-round diffs never silently mix them.
   */
 object Bench {
-  /** Shared-asset warm list — the single definition, referenced by
-    * SurfaceScaling and WarmAudit so the copies can't drift. Contract
-    * (r9, measured by WarmAudit at sf0.1): one entry per MULTI-consumer
+  /** Shared-asset warm list — the single definition. Contract (r9,
+    * BASELINE.md "Bench warm-list trim"): one entry per MULTI-consumer
     * corpus-snapshot asset's first-toucher, nothing else. Assets with one
     * consumer need no warming — their population cost belongs to their
     * only query and the median-of-reps sheds the first-touch rep; the r8
@@ -54,10 +53,31 @@ object Bench {
     * docToks(×5)+nearPairs(×2), q_dedup_minhash→vocab(×3, an asset the
     * r8 list MISSED — its population was charged to whichever consumer
     * ran first), q_range_bin→eventSessions(×2), q_basket_pairs→
-    * basketPairs(×3). Re-run WarmAudit after adding/re-wiring any
-    * cached() asset. */
+    * basketPairs(×3). Re-check the `warm_assets` artifact entry after
+    * adding/re-wiring any cached() asset. */
   val warmQs = Seq("q_tfidf", "q_dedup_near", "q_dedup_minhash",
     "q_range_bin", "q_basket_pairs")
+
+  /** Window index basket (r14, quiet-band item): the index is the median
+    * over these cheap, PLAN-STABLE heads of (this run's median / the
+    * head's calibration median). The basket is scan+compute shapes no
+    * graft dial can move, spread across scan/filter/scalar/sort/window/
+    * union plan classes, so the ratio isolates HOST speed from plan
+    * changes: watch heads grazing their thresholds at window_index ~1.4
+    * is a slow host, not a regression. Constants are deliberately FROZEN
+    * to a record line rather than re-derived per session: a
+    * self-recalibrating basket would let a genuine whole-surface
+    * regression re-zero its own yardstick. Only meaningful at the close
+    * shape (sf0.1, v2 noop). RE-FROZEN r16 to the per-head medians of
+    * BENCH_HISTORY ts 2026-08-19T00:01, commit be31851f4 (OPTIMIZATION_r16.md
+    * §1). tools/close.sh re-normalizes every history line's total with a
+    * copy of these constants (WINDOW_BASKET); DriftSpec fails on
+    * drift between the two. */
+  private[graft] val windowBasket = Seq(
+    "q_project" -> 0.767, "q_filter" -> 0.319, "q_math" -> 0.736,
+    "q_str" -> 0.310, "q_case" -> 0.365, "q_date" -> 0.340,
+    "q_array" -> 0.341, "q_map" -> 1.032, "q_sort" -> 0.553,
+    "q_agg_pricing" -> 0.462, "q_win_lag" -> 0.668, "q_union" -> 0.376)
 
   /** Short HEAD commit of the enclosing git work tree, resolved by
     * reading `.git` directly (no `git` subprocess — Bench must not
@@ -152,7 +172,7 @@ object Bench {
     // as warmup_sec below, and single-consumer assets' population lands in
     // their own query's rep 1 (visible as the queries-vs-queries_min
     // spread; the median is the incremental cost). See `warmQs` scaladoc
-    // and graft.tools.WarmAudit for the measured basis.
+    // for the measured basis.
     // Per-asset first-touch seconds ride along in the summary line (r9
     // verdict item 4): the r9 artifact's 57.7 s warmup on a trimmed warm
     // list was indistinguishable from a warm-list regression without a
@@ -205,40 +225,8 @@ object Bench {
     def obj(kvs: Iterable[(String, Double)]): String =
       kvs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = med.collect { case (_, v) if v >= 0 => v }.sum
-    // Window index (r14, quiet-band item): median over a basket of cheap,
-    // PLAN-STABLE heads of (this run's median / the same head's median in
-    // the calibration record). The basket is scan+compute shapes no graft
-    // dial can move, spread across scan/filter/scalar/sort/window/union
-    // plan classes, so the ratio isolates HOST speed from plan changes:
-    // watch heads grazing their thresholds at window_index ~1.4 is a slow
-    // host, not a regression (the r14 cold-boot bracket measured exactly
-    // that — basket median 1.445 vs whole-surface inflation 1.46).
-    // Calibration constants are deliberately FROZEN to the record line
-    // rather than re-derived per session: a self-recalibrating basket
-    // would let a genuine whole-surface regression re-zero its own
-    // yardstick. Only meaningful at the close shape (sf0.1, v2 noop);
-    // -1.0 when the run's shape has no basket heads (e.g. a filtered
-    // head list).
-    //
-    // RE-FROZEN r16 (r15 verdict item 1): the r15 Tables schema cache
-    // sped the basket heads themselves, per-head UNEVENLY (q_case −22%
-    // of calibration, q_date +25% — plans unchanged, footer-inference
-    // jobs removed), so the r14 constants (96.9 s close record,
-    // 967898f31) had the index reading ~2–13% optimistic depending on
-    // which heads straddled the median. New constants = the per-head
-    // MEDIANS of the quietest post-schema-cache record on file:
-    // BENCH_HISTORY line ts 2026-08-19T00:01 commit be31851f4
-    // (src=local, total 105.86 s, basket min-sum 5.30 s — the lowest on
-    // record, below even the r14 record's 5.48). Calibration run and
-    // cross-checks recorded in BASELINE.md (r16). tools/close.sh's
-    // quiet-band guard re-normalizes EVERY history line's total with
-    // these constants from the line's own per-query medians, so the
-    // band and new runs read one yardstick.
-    val windowBasket = Seq(
-      "q_project" -> 0.767, "q_filter" -> 0.319, "q_math" -> 0.736,
-      "q_str" -> 0.310, "q_case" -> 0.365, "q_date" -> 0.340,
-      "q_array" -> 0.341, "q_map" -> 1.032, "q_sort" -> 0.553,
-      "q_agg_pricing" -> 0.462, "q_win_lag" -> 0.668, "q_union" -> 0.376)
+    // Window index: see `windowBasket`; -1.0 when the run's shape has no
+    // basket heads (e.g. a filtered head list).
     val medLookup = med.toMap
     val windowIndex = {
       val rs = windowBasket.flatMap { case (q, cal) =>
@@ -280,11 +268,11 @@ object Bench {
     // q_topk_group <= 2x q_topk_group_native's median at sf0.1,
     // q_dedup_clusters <= 4.5 s — the r8 verdict's two named watch items
     // (linkage Σblock² growth, cube ordering rewrite), the r9 artifact's
-    // one >2x mover (topk_group, A/B-resolved as host jitter by
-    // graft.tools.TopkGroupAb), and the r10 artifact's one min-level
-    // mover (clusters, adjudicated as the seventh window artifact by
-    // graft.tools.ClustersProbe — quiet band 2.3-3.2 s, criterion set
-    // above the band's window-inflated edge) are machine-tracked here so
+    // one >2x mover (topk_group, A/B-resolved as host jitter — BASELINE
+    // r10 "q_topk_group A/B"), and the r10 artifact's one min-level
+    // mover (clusters, adjudicated as a window artifact — BASELINE r11,
+    // quiet band 2.3-3.2 s, criterion set above the band's
+    // window-inflated edge) are machine-tracked here so
     // every future artifact tail carries them.
     val watchQs = Seq("q_dedup_ngram", "q_dedup_embed", "q_record_linkage",
       "q_cube", "q_topk_group", "q_topk_group_native", "q_dedup_clusters")

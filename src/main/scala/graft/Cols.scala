@@ -78,8 +78,8 @@ object Cols {
     * unstable coin flip on exactly the boundary population, at every
     * scale. MoneyLaneSpec pins the divergence-class law (every lane diff
     * is a one-cent flip on a boundary cell) and the order-independence
-    * proof; tools/MoneyGrownAb demonstrates the class cannot fire across
-    * partitionings at grown volume.
+    * proof; BASELINE.md round 15 "DECIMAL money lane" shows the class
+    * cannot fire across partitionings at grown volume.
     */
   def moneySum(c: Column): Column =
     if (org.apache.spark.sql.SparkSession.active.conf

@@ -16,8 +16,8 @@ object Verify {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // q_recursive's deployment dial (BASELINE r12, measured by
-      // HeadsOctave): Spark's recursive-CTE guard caps TOTAL rows across
+      // q_recursive's deployment dial (BASELINE r12 "Non-dedup bench
+      // heads"): Spark's recursive-CTE guard caps TOTAL rows across
       // iterations at 1e6 by default — a foot-gun fence, not a memory
       // bound — and the walk produces |customers|·depth rows, which
       // clears 1e6 somewhere around 60k customers. The harness sets the

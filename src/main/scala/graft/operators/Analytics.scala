@@ -34,9 +34,10 @@ object Analytics {
         count(lit(1)).as("n"))
       // r15: examined for the final-sort barrier and left UNWRAPPED — a
       // repartition on the grouping key merges into the aggregate's own
-      // ENSURE_REQUIREMENTS exchange (static no-op), and the 7-rep
-      // CkptSortAb showed no real win (shuffle −12.4%): the sampling
-      // re-exec above the last exchange is only the |groups|-row final agg
+      // ENSURE_REQUIREMENTS exchange (static no-op), and the 7-rep A/B
+      // showed no real win (shuffle −12.4%, OPTIMIZATION_r15.md §6): the
+      // sampling re-exec above the last exchange is only the |groups|-row
+      // final agg
       .orderBy("event_type")
 
   /** Sample moments + correlation of value with the JSON-extracted k. */
@@ -174,8 +175,9 @@ object Analytics {
     // l_shipdate alone, 1-row output — while routing bounds through a
     // checkpointed rollup serializes the plan behind an eager
     // materialization barrier and measured 2.53x slower at sf0.1
-    // (ScanFixAb: 0.161 -> 0.408 s). Recompute beats materializing when
-    // the recompute is a single-column scan (the q_tfidf doctrine);
+    // (0.161 -> 0.408 s, BASELINE.md round 10 "Batch 2"). Recompute
+    // beats materializing when the recompute is a single-column scan
+    // (the q_tfidf doctrine);
     // the x2 per-run count is inside the pinned ScanAuditSpec budget.
     val rev = li
       .groupBy(date_trunc("day", col("l_shipdate")).as("day"))

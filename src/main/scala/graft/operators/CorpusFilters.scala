@@ -58,7 +58,7 @@ object CorpusFilters {
       .withColumn("repetitive", col("top2_frac") > 0.2)
       .select(col("doc_id"), col("n_tok"), col("top2_cnt"), col("top2_frac"),
         col("dist2_frac"), col("repetitive"))
-      .transform(TrainingData.sortedOutput(s, col("doc_id")))
+      .transform(TrainingData.sortedOutput(col("doc_id")))
 
   /** Benchmark decontamination: docs with doc_id % 100 == 0 act as the
     * held-out eval suite; every other (training) doc reports how many of its
@@ -346,7 +346,7 @@ object CorpusFilters {
       .select(col("doc_id"), col("lang"), col("n_tok"), col("mean_tok_len"),
         col("alpha_frac"), col("n_stop"), col("gate_len"), col("gate_word_len"),
         col("gate_alpha"), col("gate_stop"), col("keep"))
-      .transform(TrainingData.sortedOutput(s, col("doc_id")))
+      .transform(TrainingData.sortedOutput(col("doc_id")))
   }
 
   /** CCNet-style LM quality score: score every document by its mean token
@@ -390,7 +390,7 @@ object CorpusFilters {
       .withColumn("low_quality", col("mean_logp") < col("p10"))
       .select(col("doc_id"), col("lang"), col("n_tok"), col("mean_logp"),
         col("p10"), col("low_quality"))
-      .transform(TrainingData.sortedOutput(s, col("doc_id")))
+      .transform(TrainingData.sortedOutput(col("doc_id")))
   }
 
   /** DSIR-style importance weight (data selection via importance
@@ -513,7 +513,7 @@ object CorpusFilters {
       .withColumn("low_quality", col("mean_logp") < col("p10"))
       .select(col("doc_id"), col("lang"), col("n_bigrams"), col("mean_logp"),
         col("p10"), col("low_quality"))
-      .transform(TrainingData.sortedOutput(s, col("doc_id")))
+      .transform(TrainingData.sortedOutput(col("doc_id")))
   }
 
   /** Deterministic train/valid/test split (80/10/10) with per-(split, lang)

@@ -68,7 +68,7 @@ object EventTime {
       // r15: final-sort barrier (TrainingData.sortedOutput) — the range
       // exchange's boundary sampling was re-executing the session
       // aggregation; (user_id, start_us) is unique by session construction
-      .transform(TrainingData.sortedOutput(s, col("user_id"), col("start_us")))
+      .transform(TrainingData.sortedOutput(col("user_id"), col("start_us")))
 
   /** Stream dedup: keep the earliest occurrence per event_id (full column
     * tiebreak so the survivor is unique even for exact-duplicate rows).
@@ -157,11 +157,11 @@ object EventTime {
       // segment the sampling job re-runs is only the final-merge
       // HashAggregate above the aggregate's own exchange (map-side
       // partials are reused across jobs). Re-measured r16 with the
-      // rotated CkptSortAb (−28%) AND paired two-JVM ABBA at sf0.1
+      // rotated four-arm A/B (−28%) AND paired two-JVM ABBA at sf0.1
       // (false 1.151 vs shuffle 1.452 min-of-medians, −21%) AND at the
       // ×8 grown corpus (false 1.21/1.57 vs shuffle 1.58/2.89 — false
       // wins both positions): the wrap loses in every instrument at
-      // every scale probed.
+      // every scale probed (OPTIMIZATION_r16.md §5b).
       .orderBy(col("user_id"), col("start_us"))
   }
 
@@ -222,8 +222,8 @@ object EventTime {
     // untouched; the oracle mirrors the same greatest() clamp AT THE
     // DEFAULT — parity is defined at maxSpanHours=8760 (the oracle SQL is
     // static); re-dialing the clamp changes declared output size by
-    // design and must not be pointed at the parity gate (ClampOctave's
-    // dial sweep measures exactly that rows track the dial).
+    // design and must not be pointed at the parity gate (BASELINE.md
+    // round 8 "Clamp-octave probe": rows track the dial).
     val maxSpanHours =
       s.conf.get("spark.graft.resample.maxSpanHours", "8760").toInt
     val bounds = obs.agg(min(col("hr")).as("mn0"), max(col("hr")).as("mx"))
@@ -254,7 +254,7 @@ object EventTime {
         col("v").isNotNull.as("observed"))
       // r15: sort barrier — sampling was re-running BOTH interpolation
       // windows; the grid makes (event_type, hr_us) unique
-      .transform(TrainingData.sortedOutput(s, col("event_type"), col("hr_us")))
+      .transform(TrainingData.sortedOutput(col("event_type"), col("hr_us")))
   }
 
   /** Batch last-touch click attribution — the declared twin of the
@@ -296,7 +296,7 @@ object EventTime {
         when(col("attributed"), col("us") - col("lc_us")).as("lag_us"),
         col("attributed"))
       // r15: sort barrier — sampling was re-running the as-of union window
-      .transform(TrainingData.sortedOutput(s, col("purchase_id")))
+      .transform(TrainingData.sortedOutput(col("purchase_id")))
   }
 
   val queries: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(

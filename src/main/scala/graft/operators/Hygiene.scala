@@ -70,7 +70,7 @@ object Hygiene {
               struct(col("seg_idx"), col("seg"))))),
             x => x.getField("seg")),
           " ")).as("clean_md5"))
-      .transform(TrainingData.sortedOutput(s, col("doc_id")))
+      .transform(TrainingData.sortedOutput(col("doc_id")))
   }
 
   /** k-anonymity audit: generalize the customer quasi-identifier to
@@ -102,27 +102,15 @@ object Hygiene {
     * fixed at ~125 blocks), so Σ block² is still quadratic in n: measured
     * 88 → 8,965 → 901,746 candidate pairs across sf0.001/0.01/0.1 (×100
     * per 10× data). `spark.graft.linkage.strategy` selects the candidate
-    * generator; all three produce the IDENTICAL match set (every
+    * generator; both lanes produce the IDENTICAL match set (every
     * candidate passes the same bounded Levenshtein verify — O(len·k)
     * banded DP, −1 past the bound — and RecordLinkageBlockSpec pins the
-    * three-way equality on clean + adversarial corpora):
+    * equality on clean + adversarial corpora):
     *
-    *  - `block`: the plain within-block join. Fastest at the
-    *    declared fixture SFs (≤ sf0.1, where the quadratic candidate
-    *    mass is still cheap next to the fixed costs) and the declared
-    *    bench shape; measured ×4 candidates per 2× rows, so it loses
-    *    the wall from ~sf0.2 up (see the symdel note).
-    *  - `band`: end-anchored band pigeonhole — the last 9 chars split
-    *    into three disjoint 3-char bands; ≤ 2 edits damage ≤ 2 bands, the
-    *    survivor appears at end-relative shift ≤ 2, so candidates come
-    *    from an equi-join on (block, band idx, band text) vs ±2-shift
-    *    probe substrings (short names take a per-block catch-all lane).
-    *    Sound always; MEASURED USELESS on this corpus (LinkageAb:
-    *    cand_band == cand_plain at every SF) because the fixture's
-    *    zero-padded sequential IDs make band 0 a constant "000" — one
-    *    entropy-free band reverts any-band-OR blocking to all-pairs.
-    *    Kept as the lane for corpora whose name entropy spreads across
-    *    the band region; the measurement is the documentation.
+    *  - `block`: the plain within-block join. Fastest at the declared
+    *    fixture SFs (≤ sf0.1, where the quadratic candidate mass is still
+    *    cheap next to the fixed costs); measured ×4 candidates per 2×
+    *    rows, so it loses the wall from ~sf0.2 up.
     *  - `symdel`: symmetric deletion neighborhoods (the SymSpell
     *    technique). ed(a,b) ≤ 2 ⟹ deleting ≤ 2 chars from EACH side can
     *    equalize them (map an optimal script: substitution → delete on
@@ -130,42 +118,21 @@ object Hygiene {
     *    ≤2-deletion variants (1 + L + C(L,2), deduped in-row) and
     *    candidates are the within-block self-join on variant equality.
     *    Immune to the constant-prefix/suffix failure mode of positional
-    *    schemes — a shared variant certifies closeness directly. The
-    *    ~L²/2-row variant inflation buys a near-true-pair candidate
-    *    set. Round-9 measurement history, in full because the first
-    *    read was wrong: an initial LinkageCrossover run (fixture grown
-    *    honestly to ×10 = ~sf1) appeared to REFUTE the extrapolated
-    *    asymptotic-lane claim — block re-winning ×1.75 at sf1 — but
-    *    that run was confounded by the explode-blind broadcast mis-plan
-    *    documented at the join below (SymdelPlanProbe: the statically
-    *    chosen broadcast is 6.5× slower than shuffle at sf1 and OOMs at
-    *    sf2). With the variant join pinned to shuffle, the re-measured
-    *    crossover (crossover_v3, 3 reps, matches_agree at every scale)
-    *    is real and EARLY: block wins only at sf0.1 (2.2 s vs 4.5 s);
-    *    symdel wins from sf0.2 (5.0 vs 5.8), ×2.6 at sf0.5, ×3.6 at
-    *    sf1 (9.5 vs 34.3), ×4.7 at sf2 (18.1 vs 85.1) with 38× fewer
-    *    candidates — block's candidate mass is exactly quadratic while
-    *    symdel's grows near-linearly.
-    *  - `auto` (r10, the measured crossover operationalized; the
-    *    DEFAULT since r13): one cheap
-    *    pre-aggregate computes BOTH lanes' decision variables — block's
-    *    candidate mass Σ cnt·(cnt−1)/2 and symdel's variant-row mass
-    *    Σ (1 + L + C(L,2)) — and picks the lane whose wall the
-    *    crossover_v3 measurement says is lower: symdel iff
-    *    block_pairs > 0.6 · variant_rows (the fixture family sits at
-    *    ratio 0.35 at sf0.1 → block, 0.70 at sf0.2 → symdel, matching
-    *    the measured winner at every scale; see [[linkageAutoChoice]]).
-    *    DEFAULT since r13 (r12 verdict item 1): every lane returns the
-    *    identical match set — the bounded-Levenshtein verify is the
-    *    single source of truth, so the dispatch is a pure cost choice
-    *    with no correctness dimension (unlike simpairs `auto`, whose
-    *    lsh lane is probabilistic — see the written decision at
-    *    [[graft.operators.LlmPipeline.qSimPairs]]). The one-aggregate
-    *    decision pass costs ~free next to either lane, and a 100 TB
-    *    deployment runs auto — the ×8 grown corpus measured the block
-    *    default burning 26.1 s where auto picked the ×6.2-fewer-
-    *    candidates symdel lane at 20.0 s (BASELINE r12). Manual
-    *    override stays available for operators who know their corpus. */
+    *    schemes — a shared variant certifies closeness directly. Block's
+    *    candidate mass is exactly quadratic while symdel's grows
+    *    near-linearly: symdel wins from sf0.2, ×4.7 at sf2 with 38× fewer
+    *    candidates (BASELINE.md round 9, "Record-linkage crossover,
+    *    measured — twice").
+    *  - `auto` (the DEFAULT since r13): one cheap pre-aggregate computes
+    *    BOTH lanes' decision variables and picks the lane the measured
+    *    crossover says is faster (see [[linkageAutoChoice]]). Every lane
+    *    returns the identical match set, so the dispatch is a pure cost
+    *    choice with no correctness dimension (unlike simpairs `auto`,
+    *    whose lsh lane is probabilistic — see
+    *    [[graft.operators.LlmPipeline.qSimPairs]]). At the ×8 grown
+    *    corpus block burned 26.1 s where auto picked symdel at 20.0 s
+    *    (BASELINE r12). Manual override stays available for operators
+    *    who know their corpus. */
   def qRecordLinkage(s: SparkSession, d: String): DataFrame = {
     val strategy =
       s.conf.get("spark.graft.linkage.strategy", "auto")
@@ -174,21 +141,18 @@ object Hygiene {
       .where(col("dist") >= 0)
       .select(col("a_key"), col("b_key"), col("nationkey").cast("int"),
         col("segment"), col("dist").cast("long"))
-      .transform(TrainingData.sortedOutput(s, col("a_key"), col("b_key")))
+      .transform(TrainingData.sortedOutput(col("a_key"), col("b_key")))
   }
 
-  /** Candidate-pair generator behind [[qRecordLinkage]], shared with the
-    * [[graft.tools.LinkageAb]] measurement tool so the tool's reported
-    * candidate counts are BY CONSTRUCTION the ones the operator executes
-    * (they were copy-pasted before round 9 and could silently drift).
-    * Returns (a_key, a_name, b_key, b_name, nationkey, segment) with
+  /** Candidate-pair generator behind [[qRecordLinkage]]. Returns
+    * (a_key, a_name, b_key, b_name, nationkey, segment) with
     * a_key < b_key; every strategy yields a candidate SUPERSET of the true
     * ed ≤ 2 within-block pairs — the bounded-Levenshtein verify in
     * qRecordLinkage is the single source of truth for matches. */
   def linkageCandidates(s: SparkSession, d: String,
       strategy: String): DataFrame = {
-    require(Set("block", "band", "symdel", "auto")(strategy),
-      s"spark.graft.linkage.strategy must be block|band|symdel|auto, got $strategy")
+    require(Set("block", "symdel", "auto")(strategy),
+      s"spark.graft.linkage.strategy must be block|symdel|auto, got $strategy")
     if (strategy == "auto")
       return linkageCandidates(s, d, linkageAutoChoice(s, d)._1)
     val c = customer(s, d)
@@ -200,7 +164,7 @@ object Hygiene {
           .join(c.toDF("b_key", "b_name", "nationkey", "segment"),
             Seq("nationkey", "segment"))
           .where(col("a_key") < col("b_key"))
-      else if (strategy == "symdel") {
+      else {
         val base = c.toDF("key", "name", "nationkey", "segment")
           .where(col("name").isNotNull)
           .withColumn("len", length(col("name")))
@@ -226,10 +190,10 @@ object Hygiene {
         // Generate's size estimate does not see that, so the static
         // planner broadcasts a corpus-sized table: measured 6.5× slower
         // than shuffle at ×10 growth and "Not enough memory to build and
-        // broadcast" (hard failure) at ×20 (round-9 SymdelPlanProbe /
-        // LinkageCrossover). Stats are structurally wrong below an
-        // explode, so this join is hint-pinned to shuffle — the exception
-        // that proves the repo's let-stats-decide rule.
+        // broadcast" (hard failure) at ×20 (BASELINE.md round 9). Stats
+        // are structurally wrong below an explode, so this join is
+        // hint-pinned to shuffle — the exception that proves the repo's
+        // let-stats-decide rule.
         v.toDF("a_key", "a_name", "nationkey", "segment", "v")
           .hint("shuffle_merge")
           .join(v.toDF("b_key", "b_name", "nationkey", "segment", "v"),
@@ -237,58 +201,6 @@ object Hygiene {
           .where(col("a_key") < col("b_key"))
           .select(col("a_key"), col("a_name"), col("b_key"), col("b_name"),
             col("nationkey"), col("segment"))
-          .distinct()
-      } else {
-        val base = c.toDF("key", "name", "nationkey", "segment")
-          .where(col("name").isNotNull)
-          .withColumn("len", length(col("name")))
-        // exact bands: band j = 3 chars ending (6 − 3j) from the end
-        val bandStructs = (0 until 3).map { j =>
-          struct(lit(j).as("j"),
-            expr(s"substring(name, len - ${8 - 3 * j}, 3)").as("bs"))
-        }
-        val idx = base.where(col("len") >= 9)
-          .select(col("key").as("b_key"), col("name").as("b_name"),
-            col("nationkey"), col("segment"),
-            explode(array(bandStructs: _*)).as("b"))
-          .select(col("b_key"), col("b_name"), col("nationkey"),
-            col("segment"), col("b.j").as("j"), col("b.bs").as("bs"))
-        // probe substrings: band j's position shifted by δ ∈ [−2, 2];
-        // invalid starts/overruns yield <3-char strings and are dropped
-        // a start that clamps to <1 yields a <3-char or duplicate-position
-        // substring — the length filter drops the former and the latter is a
-        // harmless candidate superset (soundness needs only the VALID
-        // positions to be present)
-        val probeStructs = for (j <- 0 until 3; delta <- -2 to 2) yield
-          struct(lit(j).as("j"),
-            expr(s"substring(name, len - ${8 - 3 * j} + $delta, 3)").as("bs"))
-        val probe = base.where(col("len") >= 9)
-          .select(col("key").as("a_key"), col("name").as("a_name"),
-            col("nationkey"), col("segment"),
-            explode(array(probeStructs: _*)).as("p"))
-          .where(length(col("p.bs")) === 3)
-          .select(col("a_key"), col("a_name"), col("nationkey"),
-            col("segment"), col("p.j").as("j"), col("p.bs").as("bs"))
-        // Same explode-blind-stats hazard as the symdel lane (probe side
-        // is ×15, index side ×3): pin the shuffle join.
-        val bandPairs = probe
-          .hint("shuffle_merge")
-          .join(idx, Seq("nationkey", "segment", "j", "bs"))
-          .where(col("a_key") < col("b_key"))
-        // catch-all lane for names the scheme can't cover
-        val short = base.where(col("len") < 11)
-        val shortPairs = short
-          .select(col("key").as("a_key"), col("name").as("a_name"),
-            col("nationkey"), col("segment"))
-          .join(short.select(col("key").as("b_key"),
-              col("name").as("b_name"), col("nationkey"), col("segment")),
-            Seq("nationkey", "segment"))
-          .where(col("a_key") < col("b_key"))
-        bandPairs
-          .select(col("a_key"), col("a_name"), col("b_key"), col("b_name"),
-            col("nationkey"), col("segment"))
-          .union(shortPairs.select(col("a_key"), col("a_name"), col("b_key"),
-            col("b_name"), col("nationkey"), col("segment")))
           .distinct()
       }
     cand.select(col("a_key"), col("a_name"), col("b_key"), col("b_name"),
@@ -391,42 +303,29 @@ object Hygiene {
     // re-runs passed). The merge hint survives AQE replanning; the cost
     // is the honest linear re-shuffle of wins on h.
     //
-    // r16 SPLIT lane (verdict item 4 — "reduce what the pinned SMJ
-    // sorts"): n_win needs NO join (it is a per-doc count over wins),
-    // and n_dup only needs the h values with nd >= 2 — organic text is
-    // mostly unique shingles, so the duplicated-h set is a small
-    // fraction of freq. The split keeps the merge pin (the dup set is
-    // still corpus-linear in the worst case) but the SMJ's right side
+    // Dup-only split (OPTIMIZATION_r16.md §3): n_win needs NO join (it is
+    // a per-doc count over wins), and n_dup only needs the h values with
+    // nd >= 2 — organic text is mostly unique shingles, so the
+    // duplicated-h set is a small fraction of freq. The SMJ's right side
     // sorts |dup h| rows instead of |distinct h|, and only dup win rows
     // flow into the per-doc aggregate; the two |docs|-bounded per-doc
-    // frames then join once. Dial: spark.graft.subdup.split = true|false.
-    if (s.conf.get("spark.graft.subdup.split", "true").toBoolean) {
-      val nWin = wins.groupBy(col("doc_id")).agg(count(lit(1)).as("n_win"))
-      val dupH = freq.where(col("nd") >= 2).select(col("h"))
-      val nDup = wins.join(dupH.hint("merge"), Seq("h"), "left_semi")
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("nd_"))
-      // merge-pinned too: BOTH per-doc sides are corpus-linear in |docs|
-      // (the same compressed-small/deserialized-huge AQE-flip hazard as
-      // freq), and both arrive hash-partitioned by doc_id from their own
-      // aggregates, so the merge join reuses those exchanges — the pin
-      // costs sorts only, never a new shuffle.
-      nWin.join(nDup.hint("merge"), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_win"),
-          coalesce(col("nd_"), lit(0L)).as("n_dup"))
-        .withColumn("dup_frac",
-          graft.Cols.r6(col("n_dup").cast("double") / col("n_win")))
-        .withColumn("flagged", col("dup_frac") >= 0.5)
-        .transform(TrainingData.sortedOutput(s, col("doc_id")))
-    } else {
-      wins.join(freq.hint("merge"), "h")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_win"),
-          count(when(col("nd") >= 2, lit(1))).as("n_dup"))
-        .withColumn("dup_frac",
-          graft.Cols.r6(col("n_dup").cast("double") / col("n_win")))
-        .withColumn("flagged", col("dup_frac") >= 0.5)
-        .transform(TrainingData.sortedOutput(s, col("doc_id")))
-    }
+    // frames then join once.
+    val nWin = wins.groupBy(col("doc_id")).agg(count(lit(1)).as("n_win"))
+    val dupH = freq.where(col("nd") >= 2).select(col("h"))
+    val nDup = wins.join(dupH.hint("merge"), Seq("h"), "left_semi")
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("nd_"))
+    // merge-pinned too: BOTH per-doc sides are corpus-linear in |docs|
+    // (the same compressed-small/deserialized-huge AQE-flip hazard as
+    // freq), and both arrive hash-partitioned by doc_id from their own
+    // aggregates, so the merge join reuses those exchanges — the pin
+    // costs sorts only, never a new shuffle.
+    nWin.join(nDup.hint("merge"), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_win"),
+        coalesce(col("nd_"), lit(0L)).as("n_dup"))
+      .withColumn("dup_frac",
+        graft.Cols.r6(col("n_dup").cast("double") / col("n_win")))
+      .withColumn("flagged", col("dup_frac") >= 0.5)
+      .transform(TrainingData.sortedOutput(col("doc_id")))
   }
 
   val queries: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(

@@ -146,7 +146,7 @@ object Insights {
       .drop("rc", "fc", "mc")
       // r15: examined for the final-sort barrier and left unwrapped — the
       // repartition merges into the per-customer aggregate's exchange
-      // (static no-op; 7-rep CkptSortAb −1.2%), same as qPercentile
+      // (static no-op; −1.2%, OPTIMIZATION_r15.md §6), same as qPercentile
       .orderBy("o_custkey")
   }
 
@@ -557,7 +557,7 @@ object Insights {
         Cols.r6(col("dau").cast("double") /
           nullif(col("wau7"), lit(0L))).as("stickiness"))
       // r15: sort barrier — sampling was re-running the wau-dau join
-      .transform(TrainingData.sortedOutput(s, col("day")))
+      .transform(TrainingData.sortedOutput(col("day")))
   }
 
   /** Winsorization (percentile clipping) per event type: values clipped to
@@ -781,7 +781,7 @@ object Insights {
     deg.join(perNode.hint("merge"), Seq("v"), "left")
       .select(col("v").as("part"), col("deg").as("degree"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
-      .transform(TrainingData.sortedOutput(s, col("part")))
+      .transform(TrainingData.sortedOutput(col("part")))
   }
 
   /** Hop-bounded BFS (shortest hop distance) over the co-purchase graph

@@ -169,7 +169,8 @@ object LlmPipeline {
       // (21 keeps a partial-agg buffer at 8 MiB; past that a single-group
       // histogram should tree-merge rather than fan every task's buffer
       // into one reducer — the conf override exists for that experiment).
-      // Measured honestly (SkewDiag, ×1..×8 skew shards): candidate volume
+      // Measured on ×1..×8 skew shards (BASELINE.md round 6 "Skew octave"):
+      // candidate volume
       // is essentially INSENSITIVE to resolution (bits=21 vs 16: −4% at
       // ×8), because the skew corpus's super-linear candidate growth
       // (397k→9.3M for ×8 data) comes from copies genuinely SHARING their
@@ -294,7 +295,7 @@ object LlmPipeline {
         (size(col("sha")) + size(col("shb")) - col("c")).cast("double"))
       .where(col("jac") >= theta)
       .select(col("a_id"), col("b_id"), col("lang"), Cols.r6(col("jac")).as("jac"))
-      .transform(TrainingData.sortedOutput(s, col("a_id"), col("b_id")))
+      .transform(TrainingData.sortedOutput(col("a_id"), col("b_id")))
   }
 
   /** Embedding-cosine near-dup: candidate pairs from AXIS-ALIGNED SIGN-LSH
@@ -326,7 +327,8 @@ object LlmPipeline {
     // vectors) at the cost of per-band recall (a true pair must agree
     // on all `width` sign bits in some band) — the same
     // resolution-scales-with-corpus octave as q_dedup_ngram's
-    // sketchBits. Measured ladder in BASELINE (EmbedGrowthProbe).
+    // sketchBits. Measured ladder in BASELINE r9 "Embedding LSH geometry
+    // at scale".
     val bandBits = s.conf.get("spark.graft.embed.bandBits", "8").toInt
     require(Seq(8, 16, 32).contains(bandBits),
       s"spark.graft.embed.bandBits must be 8, 16 or 32, got $bandBits")
@@ -334,9 +336,9 @@ object LlmPipeline {
     // declared oracle-replayed geometry above) | `proj` (random-
     // hyperplane SimHash via [[graft.functions.SignProjBands]]). Axis
     // banding partitions the vector's OWN 64 dims, so its total bit
-    // budget is 64 and the measured ladder (BASELINE, EmbedGrowthProbe)
-    // shows widening bands guts recall exactly when the corpus needs
-    // the width. `proj` draws bands×bits INDEPENDENT hyperplane signs,
+    // budget is 64 and the measured ladder (BASELINE r9) shows widening
+    // bands guts recall exactly when the corpus needs the width. `proj`
+    // draws bands×bits INDEPENDENT hyperplane signs,
     // so collision odds and recall tune independently of the embedding
     // dimension — the lane for corpora that saturate axis-8's
     // 8×2^8-bucket space. Like the geometry dial, re-dialing changes
@@ -402,7 +404,8 @@ object LlmPipeline {
     // the join, so the static size estimate is blind to the inflation —
     // the same explode-blind hazard that mis-broadcast the linkage
     // symdel lane (BASELINE r9 crossover_v3 / gen_join_audit). Pin the
-    // shuffle: measured a tie at sf0.1 (0.497 vs 0.490 s, BcastAb), and
+    // shuffle: measured a tie at sf0.1 (0.497 vs 0.490 s, BASELINE r11
+    // "BroadcastAudit"), and
     // it closes the OOM window at the grown scales this band join
     // exists for.
     banded.toDF("a_id", "ea", "na", "bva", "bi", "bv")
@@ -414,7 +417,7 @@ object LlmPipeline {
         (fdot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos_sim"))
       .where(col("cos_sim") >= 0.4)
       .select(col("a_id"), col("b_id"), Cols.r6(col("cos_sim")).as("cos_sim"))
-      .transform(TrainingData.sortedOutput(s, col("a_id"), col("b_id")))
+      .transform(TrainingData.sortedOutput(col("a_id"), col("b_id")))
   }
 
   /** Near-dup CLUSTERS: the step after pair generation that an actual dedup
@@ -462,7 +465,7 @@ object LlmPipeline {
     // The fusion moved a whole union+aggregate into that doubled
     // subtree; the persist paid columnar encode + storage pressure to
     // avoid work Spark wasn't repeating. Phase profile
-    // (graft.tools.ClustersPhases, sf0.1 warm): edges ckpt ~0.8 s,
+    // (OPTIMIZATION_r16.md §2, sf0.1 warm): edges ckpt ~0.8 s,
     // 5 rounds × (~0.36 s materialize + ~0.04 s convergence check),
     // output ~0.5 s — the loop is round-trip-latency-bound exactly as
     // the r15 floor argument said.
@@ -502,7 +505,7 @@ object LlmPipeline {
       .withColumn("is_survivor", col("doc_id") === col("cluster_id"))
       // r15: sort barrier — sampling was re-running the corpus-scaled
       // label join + cluster-size window; doc_id is unique
-      .transform(TrainingData.sortedOutput(s, col("doc_id")))
+      .transform(TrainingData.sortedOutput(col("doc_id")))
   }
 
   /** Top-10 cosine neighbors of probe vec_id=0 (brute force, broadcast probe;
@@ -759,7 +762,7 @@ object LlmPipeline {
     (choice, boundary, blockPairs)
   }
 
-  /** Measured block→lsh crossover (BASELINE r11, SimPairsProbe cell 3):
+  /** Measured block→lsh crossover (BASELINE r11 "q_sim_pairs lanes"):
     * Σ block² below which the block lane's single equi-join beats the
     * lsh lane's band explode + join on a boundary-desert corpus — block
     * 0.52 s vs lsh 1.49 s at 8.1M pairs, 2.90 vs 2.24 at 72M; the walls
@@ -926,7 +929,7 @@ object LlmPipeline {
       .where(col("rk") <= 5)
       .select(col("lang"), col("term"), col("tf"), col("df"), col("score"), col("rk"))
       // r15: sort barrier — sampling was re-running the tf join + rank window
-      .transform(TrainingData.sortedOutput(s, col("lang"), col("rk")))
+      .transform(TrainingData.sortedOutput(col("lang"), col("rk")))
   }
 
   /** Multimodal row: text ⋈ vector on doc_id=vec_id with per-modality

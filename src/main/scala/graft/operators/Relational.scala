@@ -180,7 +180,7 @@ object Relational {
       // r15: final-sort barrier (TrainingData.sortedOutput) — the range
       // exchange's boundary sampling was re-executing the as-of window;
       // event_id is unique, so the barriered sort is row-identical
-      .transform(TrainingData.sortedOutput(s, col("event_id")))
+      .transform(TrainingData.sortedOutput(col("event_id")))
   }
 
   /** Skew-safe equi-join: enrich every event with its user's totals. Hot
@@ -303,8 +303,8 @@ object Relational {
     * over the cluster and the iteration count is the hierarchy DEPTH
     * (log₂ max-key ≈ 25 even at 100 TB key spaces), not the row count.
     * Same execution family as q_dedup_clusters' Pregel loop, but
-    * declaratively planned. One deployment dial (measured by
-    * tools/HeadsOctave, BASELINE r12): Spark fences recursive CTEs with
+    * declaratively planned. One deployment dial (measured in BASELINE
+    * r12 "Non-dedup bench heads"): Spark fences recursive CTEs with
     * `spark.sql.cteRecursionRowLimit` (default 1e6 TOTAL rows across
     * iterations, a foot-gun guard rather than a memory bound — each
     * iteration's frontier is still bounded); at ≳60k walking rows ×
@@ -375,7 +375,7 @@ object Relational {
         col("best.s_acctbal").as("s_acctbal"),
         col("best.unit_cost").as("unit_cost"))
       // r15: sort barrier — sampling was re-running the argmin final agg
-      .transform(TrainingData.sortedOutput(s, col("p_partkey")))
+      .transform(TrainingData.sortedOutput(col("p_partkey")))
   }
 
   // ---- §2.4 aggregations ---------------------------------------------------

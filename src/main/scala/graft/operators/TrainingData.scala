@@ -32,9 +32,9 @@ import graft.functions.VectorFunctions._
   */
 object TrainingData {
 
-  /** k-means dials for [[qAnnIvf]] — shared with the generated oracle. */
-  /** IVF constants are MEASURED choices (tools/IvfTune sweep, BASELINE.md
-    * round-6 section): k=24 sits on the recall/scan frontier in BOTH
+  /** k-means dials for [[qAnnIvf]] — shared with the generated oracle.
+    * IVF constants are MEASURED choices (BASELINE.md round 6, "IVF
+    * retune"): k=24 sits on the recall/scan frontier in BOTH
     * regimes — on the fixture's isotropic-noise neighbors (the adversarial
     * workload, where every bucketed index degenerates toward scanning) it
     * is the best config at every scan fraction ≤ 15%, and on planted
@@ -63,7 +63,6 @@ object TrainingData {
     scala.collection.concurrent.TrieMap[(Int, String, String), DataFrame]()
   private[operators] def cached(name: String, s: SparkSession, d: String)
     (build: => DataFrame): DataFrame = {
-    accessLog.foreach(_.add(name))
     shared.getOrElseUpdate((System.identityHashCode(s), d, name), {
       val df = build.persist()
       if (eagerAssetTiming) {
@@ -92,24 +91,6 @@ object TrainingData {
     scala.collection.concurrent.TrieMap[String, Double]()
   private[graft] def assetBuildSecs: Map[String, Double] = assetSecs.toMap
 
-  /** Measurement hook for [[graft.tools.WarmAudit]]: while a log is
-    * installed, every `cached()` touch records its asset name, so the tool
-    * can attribute assets to queries (which query populates what, which
-    * assets have >1 consumer — the facts Bench's warm list is built from).
-    * Single-threaded tool use only, but the set is a concurrent one (r9
-    * advice) so a stray concurrent `cached()` call in the same JVM
-    * degrades to a mis-attributed NAME, never a corrupted set. */
-  @volatile private var accessLog
-      : Option[java.util.Set[String]] = None
-  private[graft] def loggedAccesses[T](f: => T): (T, Set[String]) = {
-    val log = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    accessLog = Some(log)
-    try {
-      val r = f
-      (r, scala.jdk.CollectionConverters.SetHasAsScala(log).asScala.toSet)
-    } finally accessLog = None
-  }
-
   /** Eager localCheckpoint whose materialized blocks are REGISTERED for
     * [[unpersistAll]] teardown. Plain `df.localCheckpoint(true)` persists
     * an RDD that only ContextCleaner GC can ever release — in a long-lived
@@ -128,116 +109,20 @@ object TrainingData {
     out
   }
 
-  /** Final-output global sort with a materialization barrier
-    * (`spark.graft.sort.ckpt` ∈ `shuffle` (DEFAULT since r15) | `false`
-    * | `true` | `persist`).
+  /** Final-output global sort behind a hash-repartition on the sort keys.
     * A global `orderBy` plans a RangePartitioning exchange whose
-    * boundary-sampling job RE-EXECUTES the stage feeding the sort
-    * (shuffle outputs of earlier stages are reused across the two jobs,
-    * but the segment between the last exchange and the sort — typically
-    * the verify join or window itself — runs twice). Measured on
-    * q_record_linkage at sf0.1 under the v2 bench action
-    * (SortCostProbe): declared 4.41 s, sort stripped 2.26 s, barrier
-    * 2.47 s — i.e. ~90% of the sort's apparent cost was the sampling
-    * recompute, and a barrier on the RESULT (whose IO the sink pays
-    * anyway) removes it. Two barrier flavors:
-    *  - `true`: eager tracked localCheckpoint — strongest (materializes
-    *    before ANY downstream job) but truncates lineage.
-    *  - `persist` (r14, r13 verdict item 3): lazy `df.persist()` —
-    *    the sampling job materializes the cache, the sort job reads it,
-    *    and lineage SURVIVES (an executor lost between the jobs
-    *    recomputes the lost blocks instead of failing the job), so this
-    *    flavor keeps cluster survivability. Registered for
-    *    [[unpersistAll]] like every other snapshot asset.
-    *
-    * Why the default is now `shuffle` (r15 optimization round — the
-    * decision the r14 "default stays false" writeup was waiting for; the
-    * r14 objections are quoted and answered in order):
-    *  1. FAULT TOLERANCE ruled out `true` (localCheckpoint truncates
-    *     lineage; an executor lost between barrier and sink FAILS the
-    *     job). `shuffle` keeps lineage: a lost shuffle file recomputes
-    *     through the ordinary stage-retry path.
-    *  2. MEMORY FOOTPRINT ruled out `persist` (pins every wrapped head's
-    *     full result in executor storage until teardown — at 100 TB that
-    *     evicts the shared `cached()` assets). `shuffle` pins nothing:
-    *     shuffle files live on local disk, the medium every stage
-    *     already uses, and are dropped with the normal shuffle GC.
-    *  3. PLAN TRANSPARENCY ruled out `true` (LogicalRDD collapse blinds
-    *     the plan audits). `shuffle` keeps the full logical plan; the
-    *     barrier is one visible Exchange node the audits count.
-    * Measured four-arm interleave (CkptSortAb, sf0.1, reps 3, r15 —
-    * OPTIMIZATION_r15.md): Σ over the 14 wrapped heads 25.37 s
-    * unbarriered → 14.36 s `shuffle` (vs 15.73 `true`, 14.86 `persist`),
-    * with `shuffle` winning on EVERY head (17.7%–62.3%) — it is the only
-    * flavor that dominates `false` per-head, because the result stream
-    * is materialized exactly once into the cheapest medium available.
-    * The `ckptsort` / `persistsort` / `plainsort` ConfParity arms
-    * hash-prove result identity across the full surface for all
-    * flavors against the shuffle default.
-    *
-    * AUTO-PROBE DECISION (r15, r14 verdict item 7): the flavor dial
-    * STAYS MANUAL — no per-head estimator. Written reasons, in the
-    * order they kill the idea: (1) the estimator's inputs don't exist
-    * where they're needed — result width × estimated rows requires the
-    * optimizer's cardinality estimate of a post-join/post-window plan
-    * root, exactly where Spark's stats are weakest (join selectivity
-    * guesses, no NDV after windows), so the probe would be confidently
-    * wrong on the heads where the choice matters most; (2) the
-    * persist-vs-ckpt split is a WORKLOAD-CLASS property, not a size
-    * property — the r14 three-arm table shows recompute-cheap /
-    * cache-bulky pre-sort streams (vocab-exploded logprob heads,
-    * triangles) want `true` while everything else wants `persist`, and
-    * "is the pre-sort stream cheap to recompute" is not computable
-    * from size stats at plan time; (3) the failure mode is silent — a
-    * wrong auto-persist taxes executor storage memory invisibly (the
-    * same reason `persist` isn't the DEFAULT), whereas a wrong manual
-    * setting is a written, greppable line in the cluster conf. The dial
-    * ships with written guidance instead: the r15 `shuffle` default is
-    * safe everywhere (no memory tax, lineage kept); single-node /
-    * batch-rerun deployments chasing the last seconds can flip the
-    * named recompute-cheap heads to `true`, and `false` restores the
-    * unbarriered sort for calibration. */
-  private[graft] def sortedOutput(s: SparkSession, cols: Column*)(
-      df: DataFrame): DataFrame =
-    s.conf.get("spark.graft.sort.ckpt", "shuffle") match {
-      case "true" => checkpointed(df).orderBy(cols: _*)
-      case "persist" =>
-        sortPersists.add(df.persist())
-        df.orderBy(cols: _*)
-      // DEFAULT since r15 (optimization round): a hash-repartition on the
-      // sort keys between the result stream and the global sort. The
-      // RangePartitioning exchange's boundary-sampling job re-executes
-      // whatever sits between the LAST exchange and the sort (the verify
-      // join / window itself — measured ~90% of the sort's apparent cost
-      // on q_record_linkage, SortCostProbe r13); interposing a shuffle
-      // makes the sampling job materialize the result ONCE into shuffle
-      // files (map stages are shared across jobs), and the sort job
-      // re-reads those files instead of recomputing the stream. Unlike
-      // `persist` it pins nothing in executor storage memory (shuffle
-      // files live on disk, the medium every stage already uses), and
-      // unlike `true` it keeps lineage (a lost shuffle file recomputes
-      // via the normal stage-retry path) — so it is the first barrier
-      // flavor that is defensible as a DEFAULT at 1000-executor scale:
-      // its cost is one extra shuffle of the RESULT rows (already tiny
-      // next to each head's inputs), its win is not re-running the
-      // head's most expensive segment. Keys: the sort columns — a
-      // near-unique combination on every wrapped head, so the
-      // intermediate hash partitioning cannot concentrate load. Measured
-      // four-arm interleave (CkptSortAb, sf0.1, OPTIMIZATION_r15.md):
-      // captures the persist/ckpt win on every wrapped head with none of
-      // their footprint. Result identity across the full surface is
-      // hash-proven by the `shufflesort`-vs-`false` ConfParity arms (a
-      // partitioning step cannot move rows).
-      case "shuffle" => df.repartition(cols: _*).orderBy(cols: _*)
-      case "false" => df.orderBy(cols: _*)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.sort.ckpt must be false, shuffle, true or persist, got $other")
-    }
-
-  /** Results persisted by sortedOutput's `persist` flavor, queued for
-    * [[unpersistAll]] teardown (same lifetime as `cached()` assets). */
-  private val sortPersists =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    * boundary-sampling job RE-EXECUTES the stage feeding the sort (the
+    * verify join or window itself — ~90% of the sort's apparent cost on
+    * q_record_linkage). The interposed shuffle makes the sampling job
+    * materialize the result ONCE into shuffle files, which the sort job
+    * re-reads instead of recomputing the stream; unlike a persist it pins
+    * nothing in executor storage, and unlike a checkpoint it keeps
+    * lineage. Keys: the sort columns — near-unique on every wrapped head,
+    * so the intermediate partitioning cannot concentrate load. Measured
+    * against the unbarriered, checkpoint and persist flavors in
+    * OPTIMIZATION_r15.md §0 and §6 and OPTIMIZATION_r16.md §5. */
+  private[graft] def sortedOutput(cols: Column*)(df: DataFrame): DataFrame =
+    df.repartition(cols: _*).orderBy(cols: _*)
 
   /** Chained-call sugar for [[checkpointed]]:
     * `df.trackedCheckpoint()` ≡ `df.localCheckpoint(true)` + teardown
@@ -246,25 +131,17 @@ object TrainingData {
     def trackedCheckpoint(): DataFrame = checkpointed(df)
   }
 
-  /** Drop every persisted intermediate — long-lived services call this per
-    * corpus snapshot so the cache can't grow without bound. (Driver runs
-    * exit the JVM anyway; Verify/Bench call it in teardown for hygiene.) */
+  /** Drop every persisted intermediate and tracked checkpoint, and forget
+    * the asset build timings — long-lived services call this per corpus
+    * snapshot so the cache can't grow without bound and a later snapshot's
+    * `warm_assets` carry no stale timings. (Driver runs exit the JVM
+    * anyway; Verify/Bench call it in teardown for hygiene.) */
   def unpersistAll(): Unit = {
     shared.values.foreach(df => df.unpersist(blocking = false))
     shared.clear()
-    releaseBarriers()
-  }
-
-  /** Drop only the BARRIER artifacts — tracked checkpoints and
-    * sortedOutput's persisted results — keeping the `cached()` shared
-    * corpus assets warm. Measurement harnesses (CkptSortAb) call this
-    * between arms so the barrier arms' storage doesn't accumulate
-    * without cold-starting every head's dictionary/token assets. */
-  def releaseBarriers(): Unit = {
+    assetSecs.clear()
     ckpts.values.foreach(_.unpersist(blocking = false))
     ckpts.clear()
-    var p = sortPersists.poll()
-    while (p != null) { p.unpersist(blocking = false); p = sortPersists.poll() }
   }
 
   /** Distinct (doc_id, lang, tok) triples. */
@@ -339,9 +216,10 @@ object TrainingData {
     * (lanes), `.r` (rows per band, bands = k/r) and `.threshold` default
     * to the declared 8 / 4 / 0.75 — the oracle replays those defaults and
     * the defaults are pinned bit-identical by MinhashConfSpec — while e.g.
-    * k=64, r=5..8 runs the measured production curve (BASELINE.md round-7
-    * MinhashAb table: recall 0.99–1.00 at J≥0.8 with k=60–64) through the
-    * identical join shape, trading only sketch bytes and band count. */
+    * k=64, r=5..8 runs the measured production curve (BASELINE.md round
+    * 7, "MinHash r/b retune": recall 0.99–1.00 at J≥0.8 with k=60–64)
+    * through the identical join shape, trading only sketch bytes and band
+    * count. */
   def qDedupMinhash(s: SparkSession, d: String): DataFrame = {
     val k = s.conf.get("spark.graft.minhash.k", "8").toInt
     val r = s.conf.get("spark.graft.minhash.r", "4").toInt
@@ -394,7 +272,7 @@ object TrainingData {
       .withColumn("est_jac", nMatch.cast("double") / k.toDouble)
       .where(col("est_jac") >= theta)
       .select(col("a_id"), col("b_id"), col("lang"), col("est_jac"))
-      .transform(sortedOutput(s, col("a_id"), col("b_id")))
+      .transform(sortedOutput(col("a_id"), col("b_id")))
   }
 
   /** 16-bit SimHash over the token dictionary; near-dup = same-language pair
@@ -451,7 +329,7 @@ object TrainingData {
       .withColumn("hamming", bit_count(x).cast("long"))
       .where(col("hamming") <= 2)
       .select(col("a_id"), col("b_id"), col("lang"), col("hamming"))
-      .transform(sortedOutput(s, col("a_id"), col("b_id")))
+      .transform(sortedOutput(col("a_id"), col("b_id")))
   }
 
   /** Language-ID by corpus-derived unigram profiles (Cavnar–Trenkle style):
@@ -865,7 +743,7 @@ object TrainingData {
         when(col("exact_dup"), "exact_dup")
           .when(col("near_dup"), "near_dup")
           .otherwise("new").as("status"))
-      .transform(sortedOutput(s, col("doc_id")))
+      .transform(sortedOutput(col("doc_id")))
   }
 
   val queries: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(

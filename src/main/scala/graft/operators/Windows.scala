@@ -35,7 +35,7 @@ object Windows {
       .where(col("rn") <= 3)
       // r15: measured for the final-sort barrier and left unwrapped —
       // the orders-scaled window is too cheap for the sampling re-exec
-      // to beat the barrier exchange (CkptSortAb 5-rep: shuffle −7.5%)
+      // to beat the barrier exchange (−7.5%, OPTIMIZATION_r15.md §6)
       .orderBy("o_custkey", "rn")
   }
 
@@ -105,7 +105,8 @@ object Windows {
         Cols.r6(col("o_totalprice") /
           nullif(sum(col("o_totalprice")).over(w), lit(0.0))).as("share"))
       // r15: measured for the final-sort barrier and left unwrapped
-      // (orders-scaled share window too cheap; CkptSortAb −3.5%)
+      // (orders-scaled share window too cheap; −3.5%, OPTIMIZATION_r15.md
+      // §6)
       .orderBy("o_orderkey")
   }
 
@@ -120,8 +121,8 @@ object Windows {
         ntile(4).over(w).cast("long").as("quartile"),
         Cols.r6(percent_rank().over(w)).as("pct_rank"),
         Cols.r6(cume_dist().over(w)).as("cume"))
-      .transform(TrainingData.sortedOutput(s,
-        col("o_orderpriority"), col("o_orderkey")))
+      .transform(
+        TrainingData.sortedOutput(col("o_orderpriority"), col("o_orderkey")))
   }
 
   /** RANGE frame (vs [[qWinFrame]]'s ROWS frames): per user, the count and
@@ -131,8 +132,8 @@ object Windows {
     * whose time falls in the bound, regardless of how many). One shuffle on
     * user_id; frame evaluation is a per-partition sliding two-pointer.
     *
-    * Skew lanes (`spark.graft.winrange.strategy`, r13 — the WindowSkewAb
-    * ladder's verdict, BASELINE r13):
+    * Skew lanes (`spark.graft.winrange.strategy`, r13 — the window-head
+    * skew ladder's verdict, BASELINE r13):
     *
     *  - `plain`: the one-shuffle per-user window above. The
     *    100 TB hazard is a single hot user: the whole stream sorts in
@@ -153,7 +154,7 @@ object Windows {
     *    tasks: measured 22.8 s → 3.63 s (×6.3) at the ×32 hot cell
     *    (3.1M-row hot key), near-linear across the whole ladder, at
     *    the cost of a 2× pre-shuffle row mass — 0.42 → 0.52 s at the
-    *    skew-free ×1 cell (WindowSkewAb table, BASELINE r13).
+    *    skew-free ×1 cell (BASELINE r13 "Window-head skew ladder").
     *  - `auto` (r14, the DEFAULT — the linkage-auto doctrine applied):
     *    [[winRangeAutoChoice]]'s one cheap pre-aggregate picks the lane
     *    from the corpus's own hot-user mass. Both lanes are
@@ -169,7 +170,8 @@ object Windows {
     *    so a default that cannot see the corpus must buy the cheap
     *    insurance: one map-side-combined single-column aggregate over
     *    events. Its measured price at the declared shape is +0.25 s on
-    *    plain's 0.47 s (WinRangeLaneAb, sf0.1) — dominated by fixed
+    *    plain's 0.47 s (sf0.1, BASELINE r14 "q_win_range auto lane") —
+    *    dominated by fixed
     *    job-launch overhead at local scale, NOT by the pass itself,
     *    and the trade inverts with size: the decision reads one column
     *    and combines map-side while the window shuffles and sorts full
@@ -177,7 +179,7 @@ object Windows {
     *    exactly where plain's unbounded hot-key loss grows. The
     *    per-call decision is deliberate (no per-corpus memo): one real
     *    deployment query pays it once; the bench repping it is the
-    *    honest per-query cost, the sort.ckpt default-false doctrine.
+    *    honest per-query cost.
     *    Manual `plain` stays available for operators who KNOW their
     *    corpus is skew-free and want the decision pass back. */
   def qWinRange(s: SparkSession, d: String): DataFrame = {
@@ -245,7 +247,7 @@ object Windows {
     * unbounded; bucketed's below it is the bounded ~×1.25 tax — the
     * threshold must lean toward bucketed, the safe loser (linkage leans
     * toward block for the mirror-image reason). The measured bracket
-    * agrees: the WindowSkewAb ladder's ×1 cell (hot/share ≈ 0.06 at
+    * agrees: the BASELINE r13 skew ladder's ×1 cell (hot/share ≈ 0.06 at
     * P=32) has plain winning ×1.25 and its ×2 cell (hot/share = 16) has
     * bucketed winning ×1.6 — C = 2 sits inside the bracket at the
     * physical knee.

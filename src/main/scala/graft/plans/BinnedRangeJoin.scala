@@ -51,9 +51,10 @@ import org.apache.spark.sql.functions._
   * bins, so the estimate is off by a small constant, not the ×172 of a
   * deletion-variant explode, and a mis-broadcast is at worst a few ×
   * the intended size rather than corpus-sized. The broadcast plan is
-  * also measured 3.9× faster at sf0.1 (BcastAb, q_overlap_join 0.49 vs
-  * 1.92 s); past the threshold the estimate crosses honestly (within
-  * that same small constant) and the join degrades to the shuffled
+  * also measured 3.9× faster at sf0.1 (q_overlap_join 0.49 vs 1.92 s;
+  * BASELINE.md "BroadcastAudit"); past the threshold the estimate
+  * crosses honestly (within that same small constant) and the join degrades
+  * to the shuffled
   * equi-join the scale analysis above describes.
   */
 object BinnedRangeJoin {

@@ -114,22 +114,6 @@ object ConfParity {
       "spark.graft.linkage.strategy" -> "symdel",
       "spark.graft.winrange.strategy" -> "bucketed",
       "spark.graft.simpairs.strategy" -> "auto")),
-    // Round-13 arm: checkpoint barrier before every wrapped head's final
-    // output sort (TrainingData.sortedOutput — default-off for the
-    // written fault-tolerance/transparency reasons there). A barrier
-    // cannot change rows, only lineage; zero diffs pins that.
-    Arm("ckptsort", Map("spark.graft.sort.ckpt" -> "true")),
-    // Round-14 arm: the lineage-preserving persist flavor of the same
-    // barrier (sortedOutput's r14 `persist` mode). A cache read cannot
-    // change rows, only storage; zero diffs pins that for every
-    // wrapped head.
-    Arm("persistsort", Map("spark.graft.sort.ckpt" -> "persist")),
-    // Round-15 arm: the DEFAULT flipped to the `shuffle` barrier this
-    // round, so the base pass runs it — this arm restores the
-    // unbarriered sort and proves shuffle ≡ false across the full
-    // surface (a hash-repartition below a global sort cannot move
-    // rows, only where they sit before the range exchange).
-    Arm("plainsort", Map("spark.graft.sort.ckpt" -> "false")),
   )
 
   /** Negative control, NOT in the default arm set: a session-timezone flip

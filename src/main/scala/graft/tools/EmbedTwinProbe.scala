@@ -3,28 +3,16 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Planted-twin recall curves for q_dedup_embed's LSH geometries at the
-  * HIGH-cosine tier an actual 100 TB near-dup dedup runs at — the r7
-  * minhash S-curve discipline applied to the embedding lane, because the
-  * fixture family tops out below cos 0.7 and the growth-ladder recall
-  * (EmbedGrowthProbe) therefore only measured the declared 0.4 tier;
-  * the BASELINE claim "proj16x16 recall ≈ 96% at cos 0.9" was SimHash
-  * theory until this probe.
+/** Planted-twin embedding corpus for q_dedup_embed's LSH recall floors
+  * at the high-cosine tier (BASELINE.md, "Embed LSH follow-through:
+  * planted-twin recall").
   *
-  * Corpus: N uniform synthetic vectors (xxhash64-derived dims, the
-  * growth generator's family) + one planted twin per vector in the
-  * first PLANT ids, at exact target cosine c cycling over
-  * {0.80, 0.85, 0.90, 0.95}: twin = c·v + √(1−c²)·|v|·ŵ with ŵ the
-  * unit rejection of an independent hash-random u off v — cos(v,twin)
-  * = c and |twin| = |v| by construction (verified per pair in-probe
-  * via vec_dot_f before scoring recall). Twin ids live at id + 10^9.
-  *
-  * Per arm (axis8 declared / proj16x16 / proj16x8): recall = fraction
-  * of planted pairs present in the full q_dedup_embed result, bucketed
-  * by target cosine. The 0.4 result threshold keeps every planted pair
-  * eligible, so a miss is a BAND miss, never a filter artifact.
-  *
-  * Usage: runMain graft.tools.EmbedTwinProbe [workDir] [n] [plant]
+  * Corpus: N uniform synthetic vectors (xxhash64-derived dims) + one
+  * planted twin per vector in the first PLANT ids, at exact target cosine
+  * c cycling over {0.80, 0.85, 0.90, 0.95}: twin = c·v + √(1−c²)·|v|·ŵ
+  * with ŵ the unit rejection of an independent hash-random u off v —
+  * cos(v,twin) = c and |twin| = |v| by construction. Twin ids live at
+  * id + 10^9.
   */
 object EmbedTwinProbe {
 
@@ -92,66 +80,5 @@ object EmbedTwinProbe {
         (fdot(col("va"), col("vb")) /
           (sqrt(fdot(col("va"), col("va"))) * sqrt(fdot(col("vb"), col("vb")))))
           .as("cos"))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val workDir = args.headOption.getOrElse("/tmp/graft_embed_twins")
-    val n = args.drop(1).headOption.map(_.toInt).getOrElse(20000)
-    val plant = args.drop(2).headOption.map(_.toInt).getOrElse(2000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val dir = plantCorpus(spark, workDir, n, plant)
-    // verify the plant: measured cosine of every planted pair must sit
-    // on its target (float rounding aside)
-    val planted = plantedPairs(spark, dir, plant)
-    val bad = planted.where(abs(col("cos") - col("c")) > 0.001).count()
-    println(s"""{"metric":"embed_twin_plant","n":$n,"plant":$plant,"off_target":$bad}""")
-
-    case class Arm(name: String, confs: Map[String, String])
-    val arms = Seq(
-      Arm("axis8", Map("spark.graft.embed.lsh" -> "axis",
-        "spark.graft.embed.bandBits" -> "8")),
-      Arm("proj16x16", Map("spark.graft.embed.lsh" -> "proj",
-        "spark.graft.embed.projBands" -> "16",
-        "spark.graft.embed.projBits" -> "16")),
-      Arm("proj16x8", Map("spark.graft.embed.lsh" -> "proj",
-        "spark.graft.embed.projBands" -> "16",
-        "spark.graft.embed.projBits" -> "8")),
-      Arm("proj32x16", Map("spark.graft.embed.lsh" -> "proj",
-        "spark.graft.embed.projBands" -> "32",
-        "spark.graft.embed.projBits" -> "16")))
-    for (arm <- arms) {
-      arm.confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      val res = graft.operators.LlmPipeline.qDedupEmbed(spark, dir)
-        .select(col("a_id"), col("b_id"))
-      val found = planted.select(col("a_id"), col("c"))
-        .join(res.where(col("b_id") >= 1000000000L && col("a_id") < 1000000000L)
-            .select(col("a_id").as("r_a"), (col("b_id") - 1000000000L).as("t_id"))
-            .where(col("r_a") === col("t_id"))
-            .select(col("t_id")),
-          col("a_id") === col("t_id"), "left")
-        .groupBy(col("c"))
-        .agg(count(lit(1)).as("planted"),
-          count(col("t_id")).as("found"))
-        .orderBy(col("c"))
-        .collect()
-      val cells = found.map(r =>
-        f""""${r.getDouble(0)}%.2f":{"planted":${r.getLong(1)},"found":${r.getLong(2)}}""")
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"embed_twin_recall","arm":"${arm.name}","by_cos":$cells}""")
-      Seq("spark.graft.embed.lsh", "spark.graft.embed.bandBits",
-        "spark.graft.embed.projBands", "spark.graft.embed.projBits")
-        .foreach(spark.conf.unset)
-    }
-    spark.stop()
   }
 }

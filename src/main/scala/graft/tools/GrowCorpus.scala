@@ -1,17 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Consistent ×f corpus grower for FULL-SURFACE scale evidence (r12):
-  * unlike the per-head shard builders (ScalingProbe grows documents,
-  * HeadsOctave grows one table per head), this writes ALL TEN fixture
-  * tables grown together with FOREIGN KEYS PRESERVED, so the entire
-  * 138-query surface — joins, multi-table pipelines, multimodal
-  * doc⋈embedding — runs against the grown corpus and hash-compares
-  * against DuckDB on the identical files. At f = 8 over sf0.1 this is
-  * row mass at ~sf0.8: 4.8M lineitem / 1.2M orders / 800k events —
-  * an order of magnitude past the driver's sf0.01 correctness gate.
+  * writes ALL TEN fixture tables grown together with FOREIGN KEYS
+  * PRESERVED, so the entire 138-query surface — joins, multi-table
+  * pipelines, multimodal doc⋈embedding — runs against the grown corpus
+  * and hash-compares against DuckDB on the identical files. At f = 8
+  * over sf0.1 this is row mass at ~sf0.8: 4.8M lineitem / 1.2M orders /
+  * 800k events — an order of magnitude past the driver's sf0.01 correctness
+  * gate.
   *
   * Growth model per table (copy c = 0..f−1; catalog tables stay base):
   *  - customer: c_custkey + c·10⁷
@@ -24,22 +23,39 @@ import org.apache.spark.sql.functions._
   *    "more transactions, same catalog" model)
   *  - events:   event_id + c·10¹⁰, ts + c·(span+2 days) (same users,
   *    longer history — the axis where event-time plans stay linear)
-  *  - documents: doc_id + c·10⁷, every token suffixed `_c` (the
-  *    ScalingProbe trick: copies reproduce internal near-dup structure
-  *    without being near-dups of each other), n_chars recomputed
+  *  - documents: doc_id + c·10⁷, every token suffixed `_c` (copies
+  *    reproduce internal near-dup structure without being near-dups of
+  *    each other), n_chars recomputed — [[growDocuments]]
   *  - embeddings: vec_id + c·10⁷ (stays aligned with doc_id for the
   *    multimodal join), vectors and labels copied as-is. NOTE: identical
   *    cross-copy vectors make every copy-pair an exact similarity match,
   *    so q_sim_pairs/q_dedup_embed OUTPUT grows ~×f² within a label —
   *    deliberate here: this corpus measures CORRECTNESS at volume (the
-  *    oracle is quadratic over labels regardless); the perf-scaling
-  *    curves live in the per-head probes, which grow the non-quadratic
-  *    axis.
+  *    oracle is quadratic over labels regardless).
   *  - region/nation/supplier/part: copied unchanged (bounded catalog).
   *
   * Usage: runMain graft.tools.GrowCorpus [sfDir] [outDir] [factor]
   */
 object GrowCorpus {
+  private def grown(base: DataFrame, factor: Int)(
+      shift: (DataFrame, Int) => DataFrame): DataFrame =
+    (0 until factor).map(c => if (c == 0) base else shift(base, c))
+      .reduce(_ unionByName _)
+
+  /** `outDir/documents.parquet` = `factor` copies of the sf documents:
+    * copy c shifts doc_id by c·10⁷ and suffixes every token with `_c`,
+    * n_chars recomputed. */
+  private[graft] def growDocuments(
+      spark: SparkSession, sfDir: String, outDir: String, factor: Int): Unit =
+    grown(graft.Tables.documents(spark, sfDir), factor) { (df, c) =>
+      val txt = array_join(
+        transform(split(col("text"), " "), t => concat(t, lit(s"_$c"))), " ")
+      df.select(
+        (col("doc_id") + lit(c * 10000000L)).as("doc_id"),
+        txt.as("text"), col("lang"), col("source"),
+        length(txt).cast("long").as("n_chars"))
+    }.write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-grown-x8"
@@ -59,12 +75,7 @@ object GrowCorpus {
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
 
-    def grown(base: org.apache.spark.sql.DataFrame)(
-        shift: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame) =
-      (0 until factor).map(c => if (c == 0) base else shift(base, c))
-        .reduce(_ unionByName _)
-
-    grown(graft.Tables.customer(spark, sfDir)) { (df, c) =>
+    grown(graft.Tables.customer(spark, sfDir), factor) { (df, c) =>
       df.withColumn("c_custkey", col("c_custkey") + lit(c * 10000000L))
     }.write.mode("overwrite").parquet(s"$outDir/customer.parquet")
 
@@ -76,12 +87,12 @@ object GrowCorpus {
     // diff (the oracle replays inserts as fresh keys; the full-outer
     // merge saw them as updates). The corpus must honor the declared
     // generators' key-space contract, like every fixture does.
-    grown(graft.Tables.orders(spark, sfDir)) { (df, c) =>
+    grown(graft.Tables.orders(spark, sfDir), factor) { (df, c) =>
       df.withColumn("o_orderkey", col("o_orderkey") + lit(c * 10000000000L))
         .withColumn("o_custkey", col("o_custkey") + lit(c * 10000000L))
     }.write.mode("overwrite").parquet(s"$outDir/orders.parquet")
 
-    grown(graft.Tables.lineitem(spark, sfDir)) { (df, c) =>
+    grown(graft.Tables.lineitem(spark, sfDir), factor) { (df, c) =>
       df.withColumn("l_orderkey", col("l_orderkey") + lit(c * 10000000000L))
     }.write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
 
@@ -89,22 +100,15 @@ object GrowCorpus {
     val Array(spanDays) = ev
       .agg((datediff(max(col("ts")), min(col("ts"))) + 2).cast("int"))
       .collect().map(_.getInt(0))
-    grown(ev) { (df, c) =>
+    grown(ev, factor) { (df, c) =>
       df.withColumn("event_id", col("event_id") + lit(c * 10000000000L))
         .withColumn("ts",
           col("ts") + expr(s"make_dt_interval(${c.toLong * spanDays}, 0, 0, 0)"))
     }.write.mode("overwrite").parquet(s"$outDir/events.parquet")
 
-    grown(graft.Tables.documents(spark, sfDir)) { (df, c) =>
-      val txt = array_join(
-        transform(split(col("text"), " "), t => concat(t, lit(s"_$c"))), " ")
-      df.select(
-        (col("doc_id") + lit(c * 10000000L)).as("doc_id"),
-        txt.as("text"), col("lang"), col("source"),
-        length(txt).cast("long").as("n_chars"))
-    }.write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+    growDocuments(spark, sfDir, outDir, factor)
 
-    grown(graft.Tables.embeddings(spark, sfDir)) { (df, c) =>
+    grown(graft.Tables.embeddings(spark, sfDir), factor) { (df, c) =>
       df.withColumn("vec_id", col("vec_id") + lit(c * 10000000L))
     }.write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
 

@@ -12,11 +12,26 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.tools.HeadTime [sfDir] [reps] q [q ...]
   */
 object HeadTime {
+  /** Parses a whole-JVM dial pin, `SPARK_GRAFT_CONF="k=v;k2=v2"`, for the
+    * paired two-JVM A/B design: one JVM per arm, so arm order cannot bias
+    * the reading. Keys must be spark.graft.* so a typo cannot silently
+    * reshape the engine confs. */
+  private[graft] def confPins(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      require(kv.contains("="),
+        s"SPARK_GRAFT_CONF entries must be key=value, got $kv")
+      val Array(k, v) = kv.split("=", 2)
+      require(k.startsWith("spark.graft."),
+        s"SPARK_GRAFT_CONF keys must be spark.graft.*, got $k")
+      (k, v)
+    }
+
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
     val heads = args.drop(2).toSeq
     require(heads.nonEmpty, "name at least one declared head")
+    val pins = sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(confPins)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -26,23 +41,7 @@ object HeadTime {
       .config("spark.sql.cteRecursionRowLimit", "2000000000")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // Whole-JVM flavor pin for unbiased sort-barrier A/B: CkptSortAb
-    // interleaves arms within one JVM with a fixed arm order, which
-    // showed a first-arm bias on cheap heads — two HeadTime JVMs (one
-    // per flavor) measure without ordering effects.
-    sys.env.get("SPARK_GRAFT_SORT_CKPT")
-      .foreach(v => spark.conf.set("spark.graft.sort.ckpt", v))
-    // Generic whole-JVM conf pin for the same paired two-JVM design on
-    // any graft dial (r16): SPARK_GRAFT_CONF="k=v;k2=v2" — keys must be
-    // spark.graft.* so a typo cannot silently reshape the engine confs.
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        require(k.startsWith("spark.graft."),
-          s"SPARK_GRAFT_CONF keys must be spark.graft.*, got $k")
-        spark.conf.set(k, v)
-      }
+    pins.foreach { case (k, v) => spark.conf.set(k, v) }
     // session + scan-path warmup, then shared-asset warmup for any head
     // that reads a multi-consumer cached() asset (same doctrine as Bench)
     spark.range(1000).selectExpr("sum(id)").collect()

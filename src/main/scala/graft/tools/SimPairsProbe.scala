@@ -1,39 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-import graft.operators.LlmPipeline
-
-/** Measurement basis for the r11 q_sim_pairs lanes (BASELINE round 11).
-  * Three cells:
-  *
-  *  1. FIXTURE RECALL — on the real sf embeddings at the declared
-  *     theta = 0.25, per geometry: the lsh lane's found-pair count vs
-  *     the block lane's (recall), and the band-join candidate mass vs
-  *     block's Σ label-block². This is the cell that CORRECTS the r10
-  *     verdict's premise: no geometry is simultaneously exact and
-  *     sub-quadratic, because qualifying pairs sit flush at the
-  *     threshold (no cosine gap) and the output itself is ~2% of all
-  *     within-label pairs.
-  *
-  *  2. GAP EQUALITY — a dedup-shaped corpus (random unit background,
-  *     planted near-identical twins at cos ≈ 0.99, nothing in between)
-  *     at theta = 0.7: lsh must equal block EXACTLY (both directions of
-  *     exceptAll empty — deterministic under the fixed SignProjBands
-  *     seed), with sub-quadratic candidates; and simPairsAutoChoice must
-  *     report a boundary desert and pick lsh once block mass clears the
-  *     crossover.
-  *
-  *  3. CROSSOVER — block vs lsh wall-clock, interleaved same-JVM, on
-  *     gap corpora of growing size; the Σ block² where the walls cross
-  *     calibrates `spark.graft.simpairs.crossover`.
-  *
-  * Usage: runMain graft.tools.SimPairsProbe [reps] [sfDir] [n,n,...]
-  * A third argument (comma-separated corpus sizes) runs ONLY the
-  * crossover cell at those sizes — for extending the growth table
-  * without re-paying cells 1–2.
-  */
+/** Gap-corpus generator behind the q_sim_pairs lane measurements
+  * (BASELINE.md, "q_sim_pairs lanes — the r10 prescription, measured and
+  * corrected"). */
 object SimPairsProbe {
   /** Deterministic dedup-shaped corpus: random background, planted
     * near-identical twins (cos ≈ 0.9998), nothing in between — the
@@ -60,9 +31,7 @@ object SimPairsProbe {
     * [theta, captureBound) by sheer mass — measured around ~50k
     * rows/label at theta = 0.7 — and simPairsAutoChoice then (correctly)
     * reports a populated boundary and flips auto to block. Crossover
-    * cells past that size must measure the lanes directly (the probe's
-    * crossover mode calls the lanes, not auto, so the recorded table is
-    * unaffected). */
+    * cells past that size must call the lanes directly, not auto. */
   def mkGap(spark: SparkSession, n: Int, labels: Int,
       twins: Int, dir: String): Unit = {
     // deterministic base vectors; twin j duplicates base row (j % labels)
@@ -84,92 +53,5 @@ object SimPairsProbe {
          as embedding""")
     base.unionByName(twinRows)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-  }
-
-  private def withConf(spark: SparkSession, kvs: (String, String)*)(
-      body: => Unit): Unit = {
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val reps = args.headOption.map(_.toInt).getOrElse(3)
-    val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val crossoverOnly = args.drop(2).headOption
-      .map(_.split(",").map(_.trim.toInt).toSeq)
-    if (crossoverOnly.isDefined) {
-      runCrossover(spark, reps, crossoverOnly.get)
-      graft.operators.TrainingData.unpersistAll()
-      spark.stop()
-      return
-    }
-
-    // ---- cell 1: fixture recall at the declared theta ----
-    val blockRes = LlmPipeline.simPairsBlock(spark, sfDir, 0.25).persist()
-    val nBlock = blockRes.count()
-    val blockMass = LlmPipeline
-      .simPairsAutoChoice(spark, sfDir, 0.25, 32, 16)._3
-    for ((bands, bits) <- Seq((16, 16), (32, 16), (32, 8), (64, 8))) {
-      val lsh = LlmPipeline.simPairsLsh(spark, sfDir, 0.25, bands, bits)
-      val nLsh = lsh.count()
-      val missed = blockRes.exceptAll(lsh).count()
-      val extra = lsh.exceptAll(blockRes).count()
-      val cands = LlmPipeline.simPairsLsh(spark, sfDir, -1.0, bands, bits)
-        .count() // theta = -1: every candidate passes the verify
-      val cHi = LlmPipeline.lshCaptureBound(bands, bits, 1e-6)
-      println(f"""{"metric":"simpairs_fixture","sf":"$sfDir","geometry":"${bands}x$bits","capture_bound":$cHi%.4f,"block_pairs":$nBlock,"lsh_pairs":$nLsh,"missed":$missed,"extra":$extra,"candidates":$cands,"block_candidates":$blockMass}""")
-    }
-    blockRes.unpersist()
-
-    // ---- cell 2: gap-corpus equality + auto desert ----
-    val gapDir = "/tmp/simpairs_gap"
-    mkGap(spark, 4000, 4, 40, gapDir)
-    withConf(spark) {
-      val block = LlmPipeline.simPairsBlock(spark, gapDir, 0.7).persist()
-      val lsh = LlmPipeline.simPairsLsh(spark, gapDir, 0.7, 32, 16).persist()
-      val equal = block.exceptAll(lsh).isEmpty && lsh.exceptAll(block).isEmpty
-      val cands = LlmPipeline.simPairsLsh(spark, gapDir, -1.0, 32, 16).count()
-      val (choice, boundary, mass) =
-        LlmPipeline.simPairsAutoChoice(spark, gapDir, 0.7, 32, 16)
-      println(s"""{"metric":"simpairs_gap","n":4040,"theta":0.7,"geometry":"32x16","equal":$equal,"pairs":${block.count()},"candidates":$cands,"block_candidates":$mass,"auto":{"choice":"$choice","boundary_pairs":$boundary,"block_pairs":$mass}}""")
-      block.unpersist(); lsh.unpersist()
-    }
-
-    // ---- cell 3: crossover on growing gap corpora ----
-    runCrossover(spark, reps, Seq(2000, 8000, 24000))
-    graft.operators.TrainingData.unpersistAll()
-    spark.stop()
-  }
-
-  private def runCrossover(spark: SparkSession, reps: Int,
-      ns: Seq[Int]): Unit = {
-    for (n <- ns) {
-      val dir = s"/tmp/simpairs_gap_$n"
-      mkGap(spark, n, 4, 40, dir)
-      val arms = Seq(
-        "block" -> (() => LlmPipeline.simPairsBlock(spark, dir, 0.7)),
-        "lsh" -> (() => LlmPipeline.simPairsLsh(spark, dir, 0.7, 32, 16)))
-      for ((_, fn) <- arms) fn().count() // warm
-      val times = scala.collection.mutable.Map(
-        arms.map { case (a, _) => a -> List.empty[Double] }: _*)
-      for (_ <- 1 to reps; (arm, fn) <- arms) {
-        val t0 = System.nanoTime()
-        fn().count()
-        times(arm) = (System.nanoTime() - t0) / 1e9 :: times(arm)
-      }
-      val mass = LlmPipeline.simPairsAutoChoice(spark, dir, 0.7, 32, 16)._3
-      def med(xs: List[Double]) = xs.sorted.apply(xs.size / 2)
-      println(f"""{"metric":"simpairs_crossover","n":$n,"block_pairs":$mass,"block_med":${med(times("block"))}%.3f,"lsh_med":${med(times("lsh"))}%.3f}""")
-    }
   }
 }

@@ -16,7 +16,7 @@ import graft.operators.TrainingData
   *    ≥ 0.8 / ≥ 0.9 of them at a small scan fraction.
   *  - **Noise neighbors**: the fixture's own top-10 are barely-correlated
   *    random points — the ADVERSARIAL workload, where every bucketed
-  *    index degenerates toward scanning (tools/IvfTune measured the
+  *    index degenerates toward scanning (BASELINE.md round 6 measured the
   *    full (k, init, nprobe, assign) frontier: nothing clears 0.9 recall
   *    under 15% scan on noise; production k=24 is the measured best).
   *    Graded as a ceiling: recall must rise monotonically with nprobe,
@@ -186,7 +186,7 @@ class AnnRecallSpec extends SparkSpec {
     val (rec, scanned) = stats(np)
     assert(rec >= 0.7 && scanned <= 0.15,
       f"production nprobe=$np must reach recall@10 >= 0.7 on NOISE neighbors scanning <= 15%%, " +
-        f"got recall=$rec%.3f at $scanned%.3f scanned (IvfTune: no bucketed index clears 0.9 here)")
+        f"got recall=$rec%.3f at $scanned%.3f scanned (BASELINE r6: no bucketed index clears 0.9 here)")
   }
 
   test("IVF production index: recall@10 >= 0.9 at <= 15% scan on structured neighbors") {

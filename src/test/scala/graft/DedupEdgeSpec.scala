@@ -65,7 +65,7 @@ class DedupEdgeSpec extends SparkSpec {
   test("q_dedup_ngram: verify-join Bloom reduction changes no rows (A/B parity)") {
     // the Bloom probe on the shingle-array side has no false negatives, so
     // the plans with and without it must agree row-for-row — the same
-    // parity tools/NgramAb measures for time on the shard corpora
+    // parity BASELINE.md round 5 measured for time on the shard corpora
     def run(): Seq[(Long, Long, String, Double)] =
       LlmPipeline.qDedupNgram(spark, sfDir("sf0.001")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
@@ -210,5 +210,21 @@ class DedupEdgeSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir2/documents.parquet"),
       java.nio.file.Paths.get(s"$dir/documents.parquet"))
     assert(LlmPipeline.qDedupNear(spark, dir2).collect().toSeq === timed)
+  }
+
+  test("unpersistAll forgets asset build timings") {
+    // a later snapshot's warm_assets must not carry an earlier snapshot's
+    // (or another directory's) build seconds
+    val dir = Files.createTempDirectory("graft-staleassets").toString
+    Seq((1L, "hello world hello again", "en", "web", 23L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    TrainingData.eagerAssetTiming = true
+    try LlmPipeline.qDedupNear(spark, dir).collect()
+    finally TrainingData.eagerAssetTiming = false
+    assert(TrainingData.assetBuildSecs.nonEmpty)
+    TrainingData.unpersistAll()
+    assert(TrainingData.assetBuildSecs.isEmpty,
+      s"stale asset timings survived unpersistAll: ${TrainingData.assetBuildSecs}")
   }
 }

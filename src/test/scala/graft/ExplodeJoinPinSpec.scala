@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHash
   *
   *  - q_dedup_embed: the band self-join's inputs are scan → posexplode
   *    (×8, carrying full vectors) — the symdel hazard shape; pinned
-  *    shuffle_merge (measured a tie at sf0.1, BcastAb).
+  *    shuffle_merge (measured a tie at sf0.1, BASELINE.md round 9).
   *  - q_join_salted: the ×SALT-exploded aggregate side is pinned
   *    shuffle_hash because the operator demonstrates the skew-safe
   *    salted shuffle — under a broadcast plan the salt replication is

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.ExplainMode
   * lived only in BASELINE prose, so a Spark upgrade that silently moved
   * a flip point would surface as a bench mystery, not a test failure.
   * This spec builds the same grown corpus the round-5 probe measured
-  * (×4 documents over sf0.1 via ScalingProbe's suffix-token grower) and
+  * (×4 documents over sf0.1 via GrowCorpus.growDocuments) and
   * asserts the EXPECTED plan on each side of the flip:
   *
   *  - q_dedup_ngram verify joins at base sf0.1: the shingle-array sides
@@ -25,7 +25,7 @@ class GrownPlanShapeSpec extends SparkSpec {
 
   private val grownDir = "/tmp/graft-grownplan-x4"
   private lazy val mkGrownOnce: Unit = {
-    tools.ScalingProbe.buildShards(spark, sfDir("sf0.1"), grownDir, 4)
+    tools.GrowCorpus.growDocuments(spark, sfDir("sf0.1"), grownDir, 4)
     // q_dedup_ngram reads only documents; nothing else needed in the dir
   }
 
@@ -44,7 +44,8 @@ class GrownPlanShapeSpec extends SparkSpec {
     val (bhj, _) = joinCounts(sfDir("sf0.1"))
     assert(bhj >= 1,
       s"expected the array-side verify joins to broadcast at sf0.1 ($bhj BHJ) — " +
-        "if Spark moved the threshold, re-measure NgramAb and update " +
+        "if Spark moved the threshold, re-measure q_dedup_ngram with " +
+        "HeadTime and update " +
         "BASELINE r5 before accepting this")
   }
 
@@ -58,6 +59,6 @@ class GrownPlanShapeSpec extends SparkSpec {
     assert(smj >= 3,
       s"expected >= 3 SortMergeJoin at x4 grown stats, got $smj (BHJ=$bhj) — " +
         "either Spark moved the broadcast threshold or a hint crept in; " +
-        "re-measure NgramAb before accepting")
+        "re-measure q_dedup_ngram with HeadTime before accepting")
   }
 }

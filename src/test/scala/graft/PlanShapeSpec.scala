@@ -217,15 +217,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q_repetition computes entirely inside the row — no shuffle before the sort") {
-    // core property, asserted with the sort barrier off: the SIGNALS need no
-    // shuffle — any hashpartitioning here means a join/agg crept in
-    spark.conf.set("spark.graft.sort.ckpt", "false")
-    try {
-      val p = planOf(CorpusFilters.qRepetition(spark, d))
-      assert(!p.contains("hashpartitioning"),
-        s"repetition signals must need no shuffle (only the output sort), got:\n$p")
-    } finally spark.conf.unset("spark.graft.sort.ckpt")
-    // under the r15 default the ONLY hash exchange is the final-sort barrier
+    // the SIGNALS need no shuffle: the ONLY hash exchange is the final-sort
+    // barrier — a second one means a join/agg crept in
     val pd = planOf(CorpusFilters.qRepetition(spark, d))
     val hashEx = pd.linesIterator.count(_.contains("Arguments: hashpartitioning"))
     assert(hashEx == 1, s"expected exactly the sort-barrier exchange, got:\n$pd")
@@ -288,15 +281,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q_gopher_gate folds every signal inside the row (no hash shuffle, no window)") {
-    // core property with the sort barrier off: the gate SIGNALS never shuffle
-    spark.conf.set("spark.graft.sort.ckpt", "false")
-    try {
-      val p = planOf(CorpusFilters.qGopherGate(spark, d))
-      val hashEx = p.linesIterator.count(_.contains("Arguments: hashpartitioning"))
-      assert(hashEx == 0, s"gate signals must not shuffle:\n$p")
-      assert(!p.contains("Window"), s"gate must not need a window:\n$p")
-    } finally spark.conf.unset("spark.graft.sort.ckpt")
-    // under the r15 default the ONLY hash exchange is the final-sort barrier
+    // the gate SIGNALS never shuffle: the ONLY hash exchange is the
+    // final-sort barrier
     val pd = planOf(CorpusFilters.qGopherGate(spark, d))
     val hashEx = pd.linesIterator.count(_.contains("Arguments: hashpartitioning"))
     assert(hashEx == 1, s"expected exactly the sort-barrier exchange, got:\n$pd")
@@ -408,13 +394,11 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("q_substring_dup: wins distinct per (doc_id, h); split lane equals unsplit lane") {
+  test("q_substring_dup: wins distinct per (doc_id, h)") {
     // Premise of the r16 count(1)-for-countDistinct swap: ShingleHashes
     // emits the sorted DISTINCT hash set per document, so the exploded
     // (doc_id, h) stream carries no duplicate rows — count(1) per h IS
-    // the distinct-doc count. Pin the premise on the fixture corpus,
-    // then pin the split lane (n_win aggregated without a join, n_dup
-    // via the dup-only semi join) row-identical to the unsplit lane.
+    // the distinct-doc count. Pinned on the fixture corpus.
     import org.apache.spark.sql.functions._
     val shingles = graft.functions.ShingleHashes.shingles(spark) _
     val wins = Tables.documents(spark, d)
@@ -422,12 +406,6 @@ class PlanShapeSpec extends SparkSpec {
       .select(col("doc_id"), explode(shingles(col("text"), 30)).as("h"))
     assert(wins.count() === wins.distinct().count(),
       "wins carries duplicate (doc_id, h) rows — the count(1) freq is unsound")
-    def rows(split: String) = {
-      spark.conf.set("spark.graft.subdup.split", split)
-      try Hygiene.qSubstringDup(spark, d).collect().toSeq
-      finally spark.conf.unset("spark.graft.subdup.split")
-    }
-    assert(rows("true") === rows("false"))
   }
 
   test("hygiene frequency join-backs never broadcast the corpus-linear aggregate side") {

@@ -4,13 +4,11 @@ import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
-/** Pins qRecordLinkage's three candidate strategies
-  * (`spark.graft.linkage.strategy` = block | band | symdel) to one match
-  * set: band rests on the pigeonhole superset argument (≤ 2 edits damage
-  * ≤ 2 of 3 disjoint bands; the survivor appears at end-relative shift
-  * ≤ 2), symdel on the symmetric-deletion argument (an optimal ≤2-edit
-  * script maps to ≤ 2 deletions per side), so any divergence is a
-  * soundness bug, not a tuning choice.
+/** Pins qRecordLinkage's candidate strategies
+  * (`spark.graft.linkage.strategy` = block | symdel | auto) to one match
+  * set: symdel rests on the symmetric-deletion argument (an optimal
+  * ≤2-edit script maps to ≤ 2 deletions per side), so any divergence is
+  * a soundness bug, not a tuning choice.
   *
   * Beyond the fixture (whose names are uniform-length with digit
   * suffixes), the adversarial table exercises exactly the shapes that
@@ -27,7 +25,7 @@ class RecordLinkageBlockSpec extends SparkSpec {
 
   private def ab(d: String): Unit = {
     val plain = canon(d) // default strategy = auto (r13 flip)
-    for (arm <- Seq("block", "band", "symdel")) {
+    for (arm <- Seq("block", "symdel")) {
       spark.conf.set("spark.graft.linkage.strategy", arm)
       val got = try canon(d)
         finally spark.conf.unset("spark.graft.linkage.strategy")
@@ -39,16 +37,16 @@ class RecordLinkageBlockSpec extends SparkSpec {
     assert(plain.nonEmpty, "A/B is vacuous: zero pairs on all paths")
   }
 
-  test("band blocking matches the plain block join on the clean fixture") {
+  test("symdel and block lanes match auto on the clean fixture") {
     ab(sfDir("sf0.001"))
   }
 
-  test("band blocking matches the plain path on adversarial name shapes") {
+  test("symdel and block lanes match auto on adversarial name shapes") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-linkage-adv").toString
     val rows = Seq(
-      // insert/delete twins: suffix shifts by 1 — positional bands must
-      // still catch them through the ±2 probe shifts
+      // insert/delete twins: suffix shifts by 1 — the shapes that break
+      // positional blocking schemes
       (1L, "Customer#000000123", 1, 10.0, "AUTO"),
       (2L, "Customer#0000000123", 1, 10.0, "AUTO"),   // 1 insert
       (3L, "Customer#00000123", 1, 10.0, "AUTO"),     // 1 delete
@@ -83,13 +81,12 @@ class RecordLinkageBlockSpec extends SparkSpec {
   }
 
   /** Round-9 regression pin for the explode-blind-stats mis-plan: the
-    * symdel variant self-join and the band probe-index join both sit
-    * above a Generate (~172× / ~15× row inflation the static size
-    * estimate cannot see), so an unhinted plan broadcasts a corpus-sized
-    * table — measured 6.5× slower at ×10 growth and a hard
-    * "cannot build and broadcast" OOM at ×20 (BASELINE r9 crossover_v3 /
-    * SymdelPlanProbe). The fix is a `shuffle_merge` hint on exactly those
-    * joins; this test fails if a refactor drops the hint or a Spark
+    * symdel variant self-join sits above a Generate (~172× row inflation
+    * the static size estimate cannot see), so an unhinted plan
+    * broadcasts a corpus-sized table — measured 6.5× slower at ×10
+    * growth and a hard "cannot build and broadcast" OOM at ×20 (BASELINE
+    * r9 crossover_v3). The fix is a `shuffle_merge` hint on that join;
+    * this test fails if a refactor drops the hint or a Spark
     * upgrade stops honoring it. AQE is disabled because the hazard is the
     * STATIC planner's choice (AQE re-plans from accurate runtime sizes,
     * where a broadcast demotion would be legitimate); the plan is
@@ -99,25 +96,22 @@ class RecordLinkageBlockSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      for (arm <- Seq("symdel", "band")) {
-        val plan = operators.Hygiene.linkageCandidates(spark, d, arm)
-          .queryExecution.executedPlan
-        val blind = plan.collect {
-          case b: BroadcastHashJoinExec
-              if b.exists(_.isInstanceOf[GenerateExec]) => b
-        }
-        assert(blind.isEmpty,
-          s"$arm lane planned a broadcast join over a Generate subtree " +
-            s"(the r9 OOM mis-plan):\n${blind.mkString("\n")}")
-        // the pinned join must actually be there as a sort-merge
-        val pinned = plan.collect {
-          case j: SortMergeJoinExec
-              if j.exists(_.isInstanceOf[GenerateExec]) => j
-        }
-        assert(pinned.nonEmpty,
-          s"$arm lane has no sort-merge join over its Generate — " +
-            s"hint lost?\n$plan")
+      val plan = operators.Hygiene.linkageCandidates(spark, d, "symdel")
+        .queryExecution.executedPlan
+      val blind = plan.collect {
+        case b: BroadcastHashJoinExec
+            if b.exists(_.isInstanceOf[GenerateExec]) => b
       }
+      assert(blind.isEmpty,
+        "symdel lane planned a broadcast join over a Generate subtree " +
+          s"(the r9 OOM mis-plan):\n${blind.mkString("\n")}")
+      // the pinned join must actually be there as a sort-merge
+      val pinned = plan.collect {
+        case j: SortMergeJoinExec
+            if j.exists(_.isInstanceOf[GenerateExec]) => j
+      }
+      assert(pinned.nonEmpty,
+        s"symdel lane has no sort-merge join over its Generate — hint lost?\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 

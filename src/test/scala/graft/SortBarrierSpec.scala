@@ -1,54 +1,16 @@
 package graft
 
-/** Laws of the final-sort materialization barrier
-  * (TrainingData.sortedOutput; r13 `true`, r14 `persist` — the measured
-  * basis is BASELINE r14 "Final-sort barrier, three arms"):
-  *
-  *  - RESULT IDENTITY: either barrier flavor returns the exact rows of
-  *    the unbarriered sort (full-surface hash proof is the ckptsort /
-  *    persistsort ConfParity arms; one wrapped head pinned here in CI).
-  *  - SURVIVABILITY SHAPE: `persist` keeps the logical plan (no
-  *    LogicalRDD collapse) — the property that preserves lineage
-  *    recompute AND plan-audit transparency; `true` collapses to an RDD
-  *    scan by design.
-  *  - LOUD DIAL: an unknown conf value errors instead of silently
-  *    running unbarriered.
-  *  - TEARDOWN: releaseBarriers drops the persisted result blocks.
-  */
+/** Shape of the final-sort shuffle barrier (TrainingData.sortedOutput;
+  * measured basis in OPTIMIZATION_r15.md §0): a hash-repartition on the
+  * sort keys sits below the global sort's range exchange, and the logical
+  * plan stays intact (no LogicalRDD collapse), so lineage recompute and
+  * the plan audits both keep working. */
 class SortBarrierSpec extends SparkSpec {
-
-  private def withDial[T](v: String)(f: => T): T = {
-    spark.conf.set("spark.graft.sort.ckpt", v)
-    try f
-    finally {
-      spark.conf.unset("spark.graft.sort.ckpt")
-      operators.TrainingData.releaseBarriers()
-    }
-  }
-
-  test("persist, ckpt and shuffle flavors return the unbarriered rows exactly") {
-    val d = sfDir("sf0.001")
-    val base = withDial("false") {
-      operators.Hygiene.qLineDedup(spark, d).collect().toSeq
-    }
-    val p = withDial("persist") {
-      operators.Hygiene.qLineDedup(spark, d).collect().toSeq
-    }
-    val c = withDial("true") {
-      operators.Hygiene.qLineDedup(spark, d).collect().toSeq
-    }
-    val sh = withDial("shuffle") {
-      operators.Hygiene.qLineDedup(spark, d).collect().toSeq
-    }
-    assert(base.nonEmpty && p == base && c == base && sh == base)
-  }
 
   test("shuffle flavor (the r15 default) keeps the logical plan and " +
       "interposes a repartition below the sort") {
     val d = sfDir("sf0.001")
-    val sh = withDial("shuffle") {
-      operators.Hygiene.qLineDedup(spark, d).queryExecution
-    }
+    val sh = operators.Hygiene.qLineDedup(spark, d).queryExecution
     val logical = sh.optimizedPlan.toString
     assert(!logical.contains("LogicalRDD"), logical)
     // physical shape: the global Sort's range exchange sits on top of a
@@ -57,34 +19,5 @@ class SortBarrierSpec extends SparkSpec {
     val phys = sh.executedPlan.toString
     assert(phys.contains("rangepartitioning"), phys)
     assert(phys.contains("hashpartitioning"), phys)
-  }
-
-  test("persist keeps the logical plan; ckpt collapses it (by design)") {
-    val d = sfDir("sf0.001")
-    val p = withDial("persist") {
-      operators.Hygiene.qLineDedup(spark, d)
-        .queryExecution.optimizedPlan.toString
-    }
-    assert(!p.contains("LogicalRDD"), p)
-    val c = withDial("true") {
-      operators.Hygiene.qLineDedup(spark, d)
-        .queryExecution.optimizedPlan.toString
-    }
-    assert(c.contains("LogicalRDD"), c)
-  }
-
-  test("unknown dial value is a loud error; teardown unpins storage") {
-    val d = sfDir("sf0.001")
-    intercept[IllegalArgumentException] {
-      withDial("bogus") { operators.Hygiene.qLineDedup(spark, d) }
-    }
-    withDial("persist") {
-      operators.Hygiene.qLineDedup(spark, d).count()
-      assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
-    }
-    // releaseBarriers ran in withDial's finally; unpersist is async
-    // (blocking = false) but the registry itself must be drained —
-    // a second release is a no-op rather than a double-unpersist
-    operators.TrainingData.releaseBarriers()
   }
 }

@@ -73,7 +73,7 @@ note() { summary+=("$1"); echo "CLOSE: $1"; }
 # calibrations). quiet_p90 therefore RE-NORMALIZES every line from its
 # own per-query medians with the CURRENT constants, and only falls back
 # to the stored index when the per-query map is absent. This literal must
-# match Bench.scala's windowBasket.
+# match Bench.scala's windowBasket (DriftSpec checks it).
 WINDOW_BASKET='{"q_project":0.767,"q_filter":0.319,"q_math":0.736,"q_str":0.310,"q_case":0.365,"q_date":0.340,"q_array":0.341,"q_map":1.032,"q_sort":0.553,"q_agg_pricing":0.462,"q_win_lag":0.668,"q_union":0.376}'
 export WINDOW_BASKET
 quiet_p90() {

@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark over the full `SparkEntry.queries` surface.
@@ -128,6 +130,27 @@ object Bench {
     full.take(9)
   }.toOption.filter(_.nonEmpty)
 
+  /** Runs `body`; None on success, else the failure as
+    * `"<class>: <first message line>"`. Only non-fatal throwables are
+    * caught — an OutOfMemoryError or an interrupt ends the run instead of
+    * being booked as one failed query. */
+  private[graft] def attempt(body: => Unit): Option[String] =
+    try { body; None }
+    catch {
+      case NonFatal(e) =>
+        val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+          .getOrElse("")
+        Some(s"${e.getClass.getName}: $msg")
+    }
+
+  /** JSON string literal: quotes, backslashes and control chars escaped. */
+  private def jsonStr(v: String): String = "\"" + v.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -161,7 +184,7 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").collect()
     try spark.read.parquet(s"$sfDir/region.parquet")
       .groupBy("r_name").count().collect()
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     // Shared-asset warm-up: the TrainingData.cached() intermediates are
     // corpus-snapshot assets amortized across the suite — at cluster scale
     // you materialize them once, not once per query. Populating the
@@ -191,8 +214,8 @@ object Bench {
     graft.operators.TrainingData.eagerAssetTiming = true
     val warmTimes = try warmQs.map { q =>
       val t0 = System.nanoTime()
-      try run(SparkEntry.queries(q)(spark, sfDir))
-      catch { case _: Throwable => }
+      // a failure here recurs in the timed reps, which record its cause
+      attempt(run(SparkEntry.queries(q)(spark, sfDir)))
       q -> (System.nanoTime() - t0) / 1e9
     } finally graft.operators.TrainingData.eagerAssetTiming = false
     val warmAssets = graft.operators.TrainingData.assetBuildSecs
@@ -201,16 +224,20 @@ object Bench {
     // Fixed query order shared by every pass (stable map iteration order
     // per JVM, but pin it explicitly so passes are strictly comparable).
     val order = SparkEntry.queries.keys.toSeq
-    // times(q) = seconds per successful rep; a throwing rep records nothing.
+    // times(q) = seconds per successful rep; a throwing rep records no
+    // time, and the first cause per query lands in the full line's errors.
     val times = scala.collection.mutable.Map[String, List[Double]]()
       .withDefaultValue(Nil)
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     for (_ <- 1 to reps; name <- order) {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      val ok = try { run(fn(spark, sfDir)); true }
-               catch { case _: Throwable => false }
+      val err = attempt(run(fn(spark, sfDir)))
       val dt = (System.nanoTime() - t0) / 1e9
-      if (ok) times(name) = dt :: times(name)
+      err match {
+        case None => times(name) = dt :: times(name)
+        case Some(e) => if (!errors.contains(name)) errors(name) = e
+      }
     }
     def median(xs: List[Double]): Double = {
       val s = xs.sorted
@@ -251,7 +278,9 @@ object Bench {
     // run's shape has no index (non-sf0.1). close.sh's norm_total prefers
     // this field.
     val normTotal = if (windowIndex > 0) f3(total / windowIndex) else "-1.000"
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","warmup_sec":$warmup,"reps":$reps,"window_index":$widx,"normalized_total":$normTotal,"queries":${obj(med)},"queries_min":${obj(mins)},"sf":"$sfDir"}"""
+    val errorsObj = errors.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
+      .mkString("{", ",", "}")
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","warmup_sec":$warmup,"reps":$reps,"window_index":$widx,"normalized_total":$normTotal,"queries":${obj(med)},"queries_min":${obj(mins)},"errors":$errorsObj,"sf":"$sfDir"}"""
     // Compact summary printed LAST: artifact collectors that keep only the
     // tail of stdout (the driver stores 2000 chars) must still see the
     // totals, rep count, the slowest queries, the dedup-family

@@ -127,9 +127,7 @@ object Hygiene {
     *    BOTH lanes' decision variables and picks the lane the measured
     *    crossover says is faster (see [[linkageAutoChoice]]). Every lane
     *    returns the identical match set, so the dispatch is a pure cost
-    *    choice with no correctness dimension (unlike simpairs `auto`,
-    *    whose lsh lane is probabilistic — see
-    *    [[graft.operators.LlmPipeline.qSimPairs]]). At the ×8 grown
+    *    choice with no correctness dimension. At the ×8 grown
     *    corpus block burned 26.1 s where auto picked symdel at 20.0 s
     *    (BASELINE r12). Manual override stays available for operators
     *    who know their corpus. */

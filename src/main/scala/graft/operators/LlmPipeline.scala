@@ -143,13 +143,13 @@ object LlmPipeline {
         .where(length(col("text")) >= 5)
         .select(col("doc_id"), col("lang"), shingles(col("text"), 5).as("shs"))
     }
-    // Rarity ordering comes from a FIXED-SIZE frequency sketch (2^16 int
+    // Rarity ordering comes from a FIXED-SIZE frequency sketch (int
     // buckets over the hash space), not a per-shingle dictionary join: the
     // one-pass [[graft.functions.BucketHistAgg]] histogram map-side
-    // combines 256 KiB buffers and collects a SINGLE row bounded by the
-    // sketch size (a dial, independent of corpus size — the k-means-
-    // centroid kind of driver state, not a corpus-sized one; measured: the
-    // sketch halves the candidate count vs a frequency-blind hash order).
+    // combines its buffers and collects a SINGLE row bounded by the sketch
+    // size (at most 2^21 buckets — the k-means-centroid kind of driver
+    // state, not a corpus-sized one; measured: the sketch halves the
+    // candidate count vs a frequency-blind hash order).
     // PPJoin needs only a CONSISTENT total order for correctness, so
     // bucket collisions can only perturb candidate counts, never the
     // verified result. Prefix selection then runs entirely in the array
@@ -158,37 +158,27 @@ object LlmPipeline {
     // window that profiled at 3.0 s (corpus-wide shuffle + partition sort).
     // Both sides of the candidate self-join scan the prefix set — persist
     // it once rather than running the subtree twice.
-    // The resolved sketchBits conf is part of the cache key: flipping
-    // spark.graft.ngram.sketchBits mid-session must rebuild the prefix,
-    // not silently return the one built under the old bits (an A/B that
-    // forgot unpersistAll() would otherwise compare identical arms).
-    val sketchBitsConf = s.conf.get("spark.graft.ngram.sketchBits", "auto")
-    val prefix = TrainingData.cached(s"ngramPrefix:$sketchBitsConf", s, d) {
-      // SKETCH RESOLUTION SCALES WITH THE CORPUS (round-6 skew octave).
-      // Auto targets ~8 shingle instances per bucket, clamped to [16, 21]
-      // (21 keeps a partial-agg buffer at 8 MiB; past that a single-group
+    val prefix = TrainingData.cached("ngramPrefix", s, d) {
+      // SKETCH RESOLUTION SCALES WITH THE CORPUS (round-6 skew octave):
+      // ~8 shingle instances per bucket, clamped to [16, 21] bits (21
+      // keeps a partial-agg buffer at 8 MiB; past that a single-group
       // histogram should tree-merge rather than fan every task's buffer
-      // into one reducer — the conf override exists for that experiment).
-      // Measured on ×1..×8 skew shards (BASELINE.md round 6 "Skew octave"):
-      // candidate volume
-      // is essentially INSENSITIVE to resolution (bits=21 vs 16: −4% at
-      // ×8), because the skew corpus's super-linear candidate growth
-      // (397k→9.3M for ×8 data) comes from copies genuinely SHARING their
-      // rare shingles — rare-feature collisions any prefix-filter scheme
-      // must verify, not rank noise. The adaptive sketch is cheap
-      // insurance for much larger corpora, where a fixed 2^16's per-bucket
-      // load (already ~130 instances at ×8) would eventually drown the
-      // rare-vs-common distinction that DOES matter; it is measured
-      // cost-neutral end-to-end at every factor probed.
-      val sketchBits = sketchBitsConf match {
-        case "auto" =>
-          // coalesce: sum over an EMPTY corpus is NULL (all-empty totality)
-          val instances = docsSh
-            .agg(coalesce(sum(size(col("shs"))), lit(0L))).head().getLong(0)
-          math.min(21, math.max(16,
-            64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, instances / 8 - 1))))
-        case v => v.toInt
-      }
+      // into one reducer). Measured on ×1..×8 skew shards (BASELINE.md
+      // round 6 "Skew octave"): candidate volume is essentially
+      // INSENSITIVE to resolution (bits=21 vs 16: −4% at ×8), because the
+      // skew corpus's super-linear candidate growth (397k→9.3M for ×8
+      // data) comes from copies genuinely SHARING their rare shingles —
+      // rare-feature collisions any prefix-filter scheme must verify, not
+      // rank noise. The adaptive sketch is cheap insurance for much
+      // larger corpora, where a fixed 2^16's per-bucket load (already
+      // ~130 instances at ×8) would eventually drown the rare-vs-common
+      // distinction that DOES matter; it is measured cost-neutral
+      // end-to-end at every factor probed (BASELINE r6, r16).
+      // coalesce: sum over an EMPTY corpus is NULL (all-empty totality)
+      val instances = docsSh
+        .agg(coalesce(sum(size(col("shs"))), lit(0L))).head().getLong(0)
+      val sketchBits = math.min(21, math.max(16,
+        64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, instances / 8 - 1))))
       val freqs = docsSh
         .select(graft.functions.BucketHistAgg.hist(s)(col("shs"), sketchBits))
         .head().getSeq[Int](0).toArray
@@ -307,47 +297,35 @@ object LlmPipeline {
     * and the DuckDB oracle replays the identical pipeline at the default
     * geometry. Bands bound the join to same-bucket pairs (~3% of all
     * pairs here) with NO blocking key needed — at 100 TB this is the
-    * shape that replaces the label-blocked quadratic of [[qSimPairs]],
-    * with `spark.graft.embed.bandBits` widening the bucket space as the
-    * corpus outgrows the default's 2^8-per-band capacity (see the dial
-    * note in the body and the measured growth ladder in BASELINE). */
+    * shape that replaces the label-blocked quadratic of [[qSimPairs]].
+    * Corpora that outgrow the axis bands' 2^8-per-band capacity switch to
+    * the `proj` family (`spark.graft.embed.lsh`; see the notes in the body
+    * and the measured growth ladder in BASELINE r9). */
   def qDedupEmbed(s: SparkSession, d: String): DataFrame = {
     val fdot = graft.functions.FloatVectorDot.dotF(s) _
-    // BAND GEOMETRY DIAL (round 9): `spark.graft.embed.bandBits` picks
-    // the width of each axis-aligned sign band (64 dims / width bands).
-    // The default 8 is the DECLARED geometry the DuckDB oracle replays —
-    // parity is defined at the default, like qResample's maxSpanHours;
-    // re-dialing changes the declared (sketch-tier) result by design.
-    // Why the dial exists: each band's bucket space is fixed at
-    // 2^width, so with width 8 the per-bucket load — and therefore the
-    // band join's output — grows QUADRATICALLY once the corpus dwarfs
-    // 256·8 buckets (this fixture family's sign bits are near-uniform:
-    // measured Σcnt² within 1.12× of N²/256 per band). Wider bands
-    // re-bound the join mass (collision odds 2^-width for unrelated
-    // vectors) at the cost of per-band recall (a true pair must agree
-    // on all `width` sign bits in some band) — the same
-    // resolution-scales-with-corpus octave as q_dedup_ngram's
-    // sketchBits. Measured ladder in BASELINE r9 "Embedding LSH geometry
-    // at scale".
-    val bandBits = s.conf.get("spark.graft.embed.bandBits", "8").toInt
-    require(Seq(8, 16, 32).contains(bandBits),
-      s"spark.graft.embed.bandBits must be 8, 16 or 32, got $bandBits")
+    // BAND GEOMETRY (round 9): 8 axis-aligned sign bands of 8 bits each
+    // (band t = the sign bits of dims 8t..8t+7) is the DECLARED geometry
+    // the DuckDB oracle replays. Each band's bucket space is fixed at 2^8,
+    // so the per-bucket load — and the band join's output — grows
+    // QUADRATICALLY once the corpus dwarfs 256·8 buckets (this fixture
+    // family's sign bits are near-uniform: measured Σcnt² within 1.12× of
+    // N²/256 per band). Wider axis bands do not help: a true pair must
+    // agree on every bit of some band, and at 16 bits recall fell to 0.3%
+    // (BASELINE r9 "Embedding LSH geometry at scale") — the `proj` family
+    // below is the lane for corpora that saturate axis-8.
     // LSH FAMILY DIAL: `spark.graft.embed.lsh` = `axis` (default — the
     // declared oracle-replayed geometry above) | `proj` (random-
     // hyperplane SimHash via [[graft.functions.SignProjBands]]). Axis
     // banding partitions the vector's OWN 64 dims, so its total bit
-    // budget is 64 and the measured ladder (BASELINE r9) shows widening
-    // bands guts recall exactly when the corpus needs the width. `proj`
-    // draws bands×bits INDEPENDENT hyperplane signs,
+    // budget is 64. `proj` draws bands×bits INDEPENDENT hyperplane signs,
     // so collision odds and recall tune independently of the embedding
     // dimension — the lane for corpora that saturate axis-8's
-    // 8×2^8-bucket space. Like the geometry dial, re-dialing changes
-    // the declared sketch-tier result by design; parity stays defined
-    // at the default.
+    // 8×2^8-bucket space. Re-dialing changes the declared sketch-tier
+    // result by design; parity stays defined at the default.
     val lsh = s.conf.get("spark.graft.embed.lsh", "axis")
     val projBands = s.conf.get("spark.graft.embed.projBands", "16").toInt
     val projBits = s.conf.get("spark.graft.embed.projBits", "16").toInt
-    // validated like bandBits above (r9 advice): projBits > 64 would only
+    // validated at the conf boundary (r9 advice): projBits > 64 would only
     // surface as a generic AnalysisException from SignProjBands' type
     // check, and an absurd projBands passes analysis then allocates a
     // nBands·width·512-byte sign table per task — fail at the conf
@@ -357,7 +335,7 @@ object LlmPipeline {
     require(projBits >= 1 && projBits <= 64,
       s"spark.graft.embed.projBits must be in [1, 64], got $projBits")
     val nBands = lsh match {
-      case "axis" => 64 / bandBits
+      case "axis" => 8
       case "proj" => projBands
       case other => throw new IllegalArgumentException(
         s"spark.graft.embed.lsh must be axis or proj, got $other")
@@ -371,7 +349,7 @@ object LlmPipeline {
     // checks, not a re-extraction of 64 sign bits per joined row.
     val bandsCol = lsh match {
       case "axis" =>
-        graft.functions.SignBands.bands(s)(col("embedding"), nBands, bandBits)
+        graft.functions.SignBands.bands(s)(col("embedding"), nBands, 8)
       case _ =>
         graft.functions.SignProjBands.bands(s)(
           col("embedding"), 0x67726166L, nBands, projBits)
@@ -526,330 +504,41 @@ object LlmPipeline {
       .limit(10)
   }
 
-  // ---- q_sim_pairs lanes (r10 verdict item 3, premise CORRECTED by ------
-  // ---- measurement — BASELINE round 11 "q_sim_pairs lanes") --------------
-
-  /** Cosine above which a (bands × bits) sign-projection sketch misses a
-    * pair (shares NO band) with probability ≤ `missTarget`, from the
-    * standard SimHash collision law P(bit agrees) = 1 − angle/π:
-    * miss(c) = (1 − p(c)^bits)^bands ≤ missTarget solved for c. This is
-    * the lsh lane's GUARANTEED-capture boundary — between `theta` and
-    * this bound, capture is probabilistic (sketch-tier), which is why
-    * the auto dispatcher demands a measured desert there. */
-  def lshCaptureBound(bands: Int, bits: Int, missTarget: Double): Double = {
-    val pStar =
-      math.pow(1.0 - math.pow(missTarget, 1.0 / bands), 1.0 / bits)
-    math.cos(math.Pi * (1.0 - pStar))
-  }
-
-  /** Declared/exact lane: all within-label pairs, cosine verified at
-    * `theta`. L2 norms are computed ONCE PER ROW below the join (a Join
-    * is a projection-collapse barrier, so Catalyst cannot inline the
-    * norm fold back into the per-pair expression); per pair only the
-    * dot-product fold runs — 3× fewer array folds than naive
-    * cosine-per-pair, numerically identical (dot/(na*nb) ==
-    * dot/(||a||*||b||)). Candidate mass is Σ label-block² — see
-    * [[qSimPairs]] for why that is within a small constant of optimal
-    * at the declared threshold. */
-  private[graft] def simPairsBlock(s: SparkSession, d: String,
-      theta: Double): DataFrame = {
+  /** All-pairs cosine >= 0.25, blocked by label (the fixture's natural
+    * cluster key): all within-label pairs, exact null-guarded cosine.
+    * L2 norms are computed ONCE PER ROW below the join (a Join is a
+    * projection-collapse barrier, so Catalyst cannot inline the norm fold
+    * back into the per-pair expression); per pair only the dot-product
+    * fold runs — 3× fewer array folds than naive cosine-per-pair,
+    * numerically identical (dot/(na*nb) == dot/(||a||*||b||)). The den
+    * guard is TrainingData.cosCol's: a zero-norm or NaN-element vector has
+    * no cosine, and its null falls out of the >= 0.25 filter.
+    *
+    * Candidate mass is Σ label-block², and that is within a small
+    * constant of optimal at this threshold (BASELINE round 11 "q_sim_pairs
+    * lanes"): the OUTPUT itself is ~2% of all within-label pairs (293
+    * pairs at n=500 → 4,321 at n=2,000 — ratio 14.7 vs the 16 of pure
+    * n²), and qualifying pairs sit flush against 0.25 (min 0.2500069 at
+    * sf0.1, 6,660 more in [0.20, 0.25)), so any 100%-recall sketch emits
+    * essentially all within-label pairs as candidates anyway. A
+    * quadratic-output query has no sub-quadratic plan; the label blocking
+    * is the scale lever. */
+  def qSimPairs(s: SparkSession, d: String): DataFrame = {
     val fdot = graft.functions.FloatVectorDot.dotF(s) _
     val e = embeddings(s, d).select(col("vec_id"), col("label"),
       col("embedding").as("v"),
       sqrt(fdot(col("embedding"), col("embedding"))).as("nrm"))
     val a = e.toDF("a_id", "label", "va", "na")
     val b = e.toDF("b_id", "label", "vb", "nb")
-    simPairsVerify(s, a.join(b, Seq("label"))
-      .where(col("a_id") < col("b_id")), theta)
-  }
-
-  /** Shared exact-verify tail of both lanes: null-guarded cosine at
-    * `theta` (den guard as in TrainingData.cosCol — a zero-norm or
-    * NaN-element vector has no cosine; null falls out of the >= theta
-    * filter), declared output columns, deterministic order. Input must
-    * carry (a_id, b_id, label, va, vb, na, nb). */
-  private def simPairsVerify(s: SparkSession, cand: DataFrame,
-      theta: Double): DataFrame = {
-    val fdot = graft.functions.FloatVectorDot.dotF(s) _
-    cand
+    a.join(b, Seq("label"))
+      .where(col("a_id") < col("b_id"))
       .withColumn("cos_sim", when(
         !isnan(col("na") * col("nb")) && col("na") * col("nb") > 0,
         fdot(col("va"), col("vb")) / (col("na") * col("nb"))))
-      .where(col("cos_sim") >= theta)
+      .where(col("cos_sim") >= 0.25)
       .select(col("a_id"), col("b_id"), col("label"),
         Cols.r6(col("cos_sim")).as("cos_sim"))
       .orderBy("a_id", "b_id")
-  }
-
-  private val SimSeed = 0x73696d70L // "simp"
-
-  /** Scale lane: within-label sign-projection band candidates
-    * ([[graft.functions.SignProjBands]], the qDedupEmbed machinery),
-    * then the SAME exact cosine verify at `theta`. By construction the
-    * result is a SUBSET of the block lane's — equal exactly when every
-    * qualifying pair shares at least one band. Capture is GUARANTEED
-    * (miss ≤ 1e-6) only above [[lshCaptureBound]](bands, bits, 1e-6);
-    * between theta and that bound it is probabilistic, which is why this
-    * lane is opt-in / auto-gated rather than the default (the fixture
-    * corpus measures NO geometry that is both exact at theta = 0.25 and
-    * sub-quadratic — see [[qSimPairs]]). Candidate pairs surface once:
-    * the earlier-band dedup predicate is the native zero-allocation
-    * [[graft.functions.BandsMatchBefore]] loop, as in qDedupEmbed.
-    *
-    * POST-HOC BOUNDARY CHECK (r13, r12 verdict item 3; `boundaryCheck`):
-    * auto's desert test is sample-based, so its premise — zero pairs
-    * with cosine in [theta, captureBound) — can be wrong for the full
-    * corpus. The bands themselves provide a cheap partial audit: count
-    * CANDIDATE pairs in that band. Nonzero ⟹ the desert premise was
-    * definitively wrong (the corpus has boundary pairs, and there may
-    * be MORE the bands missed — the check is one-sided by construction:
-    * band-missed pairs are exactly the ones absent from the candidate
-    * set, so zero does NOT certify the desert). The check is EAGER: it
-    * runs Spark jobs at DataFrame-CONSTRUCTION time (the count below,
-    * plus the full block lane on a hit+block response), so merely
-    * building this plan — explain(), plan-audit tooling, spec setup —
-    * executes work whenever the check is on; the checked candidate set
-    * is materialized ONCE via an eager tracked localCheckpoint (r14,
-    * r13 verdict item 2 — before that the banded self-join executed
-    * twice: once for the audit count, once rebuilt for the verify) and
-    * the verify reads the checkpointed blocks, so the audit's marginal
-    * cost really is the one documented Ω(candidates) pass, not two.
-    * On a hit, `spark.graft.simpairs.onBoundaryHit` picks the response;
-    * its DEFAULT depends on who engaged the check (`engagedByAuto`,
-    * r14 — before that an explicit lsh+boundaryCheck user was silently
-    * rerouted to the quadratic block lane):
-    * `block` (default when AUTO engaged the check — auto's premise was
-    * wrong, so auto re-decides to the exact lane; the wasted candidate
-    * pass is the price), `warn` (default for a USER-chosen lsh — the
-    * user accepted sketch-tier semantics; log and keep the lsh result),
-    * or `fail` (throw — for pipelines that must not silently choose). */
-  private[graft] def simPairsLsh(s: SparkSession, d: String,
-      theta: Double, bands: Int, bits: Int,
-      boundaryCheck: Boolean = false,
-      engagedByAuto: Boolean = false): DataFrame = {
-    val fdot = graft.functions.FloatVectorDot.dotF(s) _
-    val bandsCol = graft.functions.SignProjBands.bands(s)(
-      col("embedding"), SimSeed, bands, bits)
-    val banded = embeddings(s, d)
-      .select(col("vec_id"), col("label"), col("embedding").as("v"),
-        sqrt(fdot(col("embedding"), col("embedding"))).as("nrm"),
-        bandsCol.as("bvs"))
-      // zero-norm / NaN-element vectors have no cosine direction: the
-      // block lane nulls them out at verify; excluding them up front is
-      // the same result without a per-candidate guard
-      .where(!isnan(col("nrm")) && col("nrm") > 0)
-      .select(col("vec_id"), col("label"), col("v"), col("nrm"), col("bvs"),
-        posexplode(col("bvs")).as(Seq("bi", "bv")))
-    val lowerBandMatches = graft.functions.BandsMatchBefore
-      .matchBefore(s)(col("bva"), col("bvb"), col("bi"))
-    // Both self-join inputs are scan → posexplode with no stats boundary
-    // below the join — the explode-blind broadcast hazard; pin the
-    // shuffle exactly as qDedupEmbed does.
-    val cand = banded.toDF("a_id", "label", "va", "na", "bva", "bi", "bv")
-      .hint("shuffle_merge")
-      .join(banded.toDF("b_id", "label", "vb", "nb", "bvb", "bi", "bv"),
-        Seq("label", "bi", "bv"))
-      .where(col("a_id") < col("b_id"))
-      .where(!lowerBandMatches)
-    if (boundaryCheck) {
-      // materialize the candidate set ONCE (eager tracked checkpoint,
-      // the qDedupNgram candidate-set discipline): the audit count AND
-      // the verify both read these blocks — without it the banded
-      // self-join executed twice (r13 verdict item 2)
-      val candC = cand.trackedCheckpoint()
-      val cHi = lshCaptureBound(bands, bits, 1e-6)
-      // one-row aggregate over the candidate set (bounded driver state;
-      // the pass itself is the extra Ω(candidates) cost documented above)
-      val boundary = candC
-        .withColumn("cos_sim", when(
-          !isnan(col("na") * col("nb")) && col("na") * col("nb") > 0,
-          fdot(col("va"), col("vb")) / (col("na") * col("nb"))))
-        .where(col("cos_sim") >= theta && col("cos_sim") < cHi)
-        .count()
-      if (boundary > 0) {
-        val msg = s"simPairsLsh boundary check: $boundary candidate " +
-          s"pair(s) with cosine in [$theta, $cHi) — the desert premise " +
-          "is wrong for this corpus; band capture there is probabilistic " +
-          "and the lsh result may be missing qualifying pairs"
-        val dflt = if (engagedByAuto) "block" else "warn"
-        s.conf.get("spark.graft.simpairs.onBoundaryHit", dflt) match {
-          case "block" =>
-            org.slf4j.LoggerFactory.getLogger("graft.simpairs")
-              .warn(s"$msg; falling back to the exact block lane")
-            return simPairsBlock(s, d, theta)
-          case "fail" => throw new IllegalStateException(msg)
-          case "warn" =>
-            org.slf4j.LoggerFactory.getLogger("graft.simpairs").warn(msg)
-          case other => throw new IllegalArgumentException(
-            "spark.graft.simpairs.onBoundaryHit must be block, warn or " +
-              s"fail, got $other")
-        }
-      }
-      return candC.transform(simPairsVerify(s, _, theta))
-    }
-    cand.transform(simPairsVerify(s, _, theta))
-  }
-
-  /** The `auto` strategy's decision, exposed for tools/specs. The lsh
-    * lane may only be picked when it is judged match-set safe, and the
-    * measured fixture distribution (BASELINE round 11) is the proof
-    * that this is a corpus property, not a geometry dial: qualifying
-    * pairs sit flush against theta = 0.25 (min 0.2500069 at sf0.1) with
-    * 6,660 more in [0.20, 0.25), so any sketch generous enough to catch
-    * the boundary also catches everything — candidates degenerate to
-    * the block mass. The decision therefore tests for a BOUNDARY
-    * DESERT: a deterministic per-label row sample (xxhash64 order,
-    * ≤ 256 rows/label — pair count bounded by |labels|·C(256,2)
-    * regardless of corpus size) must contain ZERO pairs with cosine in
-    * [theta, captureBound); only a corpus whose qualifying pairs all
-    * sit in the guaranteed-capture region (dedup-shaped corpora: twins
-    * + background, nothing between) can choose lsh, and it also needs
-    * block mass above the measured crossover
-    * (`spark.graft.simpairs.crossover`, default from the BASELINE r11
-    * growth cell) for the band overhead to pay. Ties go to block — the
-    * exact lane is the safe loser.
-    *
-    * SAFETY CLASS — probabilistic, NOT guaranteed (r11 ADVICE): the
-    * desert test is sample-based, so "zero boundary pairs in the
-    * sample" is statistical evidence of a desert, not proof. On a label
-    * with n ≫ 256 rows, a SPARSE population of boundary pairs (say a
-    * handful among millions of within-label pairs) is near-certain to
-    * miss the C(256,2)-pair sample; auto then picks lsh and each missed
-    * boundary pair survives only with the band capture probability
-    * (< 1 below captureBound) — i.e. the lsh result can silently drop
-    * qualifying rows. Exhaustive boundary counting is Ω(block mass) —
-    * the exact work auto exists to avoid — and a post-hoc scan of lsh
-    * candidates is one-sided (the pairs the bands missed are precisely
-    * the ones absent from the candidate set), so the check cannot be
-    * made exact for free. Callers who need the GUARANTEED match set
-    * must use `block` (the default); `auto` trades a bounded,
-    * desert-shaped miss risk for the measured ×1.9 win past the
-    * crossover. The result remains a declared SUBSET of block's in all
-    * cases (SimPairsLaneSpec pins the subset law).
-    *
-    * Driver state: two one-row aggregates (boundary count over the
-    * bounded sample; Σ label-block² over a map-side-combined count) —
-    * the FIFTH/SIXTH sanctioned bounded `.collect()`s in src/main. */
-  def simPairsAutoChoice(s: SparkSession, d: String, theta: Double,
-      bands: Int, bits: Int): (String, Long, Long) = {
-    val cHi = lshCaptureBound(bands, bits, 1e-6)
-    val e = embeddings(s, d)
-    val counts = e.where(col("label").isNotNull)
-      .groupBy(col("label")).agg(count(lit(1)).as("n"))
-      .agg(sum(col("n") * (col("n") - 1) / 2)).collect()(0)
-    val blockPairs = if (counts.isNullAt(0)) 0L else counts.getDouble(0).toLong
-    val wS = Window.partitionBy(col("label"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-    val fdot = graft.functions.FloatVectorDot.dotF(s) _
-    val sampled = e
-      .withColumn("rn", row_number().over(wS)).where(col("rn") <= 256)
-      .select(col("vec_id"), col("label"), col("embedding").as("v"),
-        sqrt(fdot(col("embedding"), col("embedding"))).as("nrm"))
-    val sa = sampled.toDF("a_id", "label", "va", "na")
-    val sb = sampled.toDF("b_id", "label", "vb", "nb")
-    val boundaryRow = sa.join(sb, Seq("label"))
-      .where(col("a_id") < col("b_id"))
-      .withColumn("cos_sim", when(
-        !isnan(col("na") * col("nb")) && col("na") * col("nb") > 0,
-        fdot(col("va"), col("vb")) / (col("na") * col("nb"))))
-      .agg(count(when(col("cos_sim") >= theta && col("cos_sim") < cHi,
-        lit(1)))).collect()(0)
-    val boundary = boundaryRow.getLong(0)
-    val crossover = s.conf.get("spark.graft.simpairs.crossover",
-      SimPairsCrossover.toString).toLong
-    val choice =
-      if (boundary == 0L && blockPairs > crossover) "lsh" else "block"
-    (choice, boundary, blockPairs)
-  }
-
-  /** Measured block→lsh crossover (BASELINE r11 "q_sim_pairs lanes"):
-    * Σ block² below which the block lane's single equi-join beats the
-    * lsh lane's band explode + join on a boundary-desert corpus — block
-    * 0.52 s vs lsh 1.49 s at 8.1M pairs, 2.90 vs 2.24 at 72M; the walls
-    * cross ≈ 45M, and 40M biases toward block near the tie (the exact
-    * lane is the safe loser, the linkage-auto discipline). */
-  val SimPairsCrossover = 40000000L
-
-  /** All-pairs cosine >= theta (default 0.25), blocked by label (the
-    * fixture's natural cluster key). Lane dials, mirroring the linkage
-    * strategy conventions:
-    *
-    *  - `spark.graft.simpairs.strategy` = `block` (DEFAULT — the
-    *    declared, exact, oracle-replayed lane) | `lsh` (sign-band
-    *    candidates + exact verify: sketch-tier at the boundary, see
-    *    [[simPairsLsh]]) | `auto` ([[simPairsAutoChoice]]'s
-    *    boundary-desert rule — lsh only where a bounded sample shows it
-    *    safe; probabilistic, not guaranteed — see the safety-class note
-    *    there).
-    *
-    *    DECISION (r13, answering the r12 verdict's "evaluate auto as
-    *    the default"): block STAYS the default, deliberately diverging
-    *    from the linkage dial (which flipped to auto in r13). The two
-    *    autos are different safety classes: every linkage lane returns
-    *    the identical match set, so its auto is a pure cost choice;
-    *    simpairs `auto` can pick a lane whose result may silently DROP
-    *    qualifying pairs when a sparse boundary population slips the
-    *    C(256,2)-pair sample (the safety-class note above). A default
-    *    must not make an exactness-vs-speed trade on the user's behalf
-    *    — exact by default, opt into the probabilistic lane. The lsh
-    *    lane now carries a post-hoc boundary check
-    *    (`spark.graft.simpairs.boundaryCheck`) that flags a wrong
-    *    desert premise from the candidate set itself, which softens —
-    *    but cannot close, being one-sided — the miss risk.
-    *  - `spark.graft.simpairs.threshold` (default 0.25 — parity is
-    *    defined at the default, like minhash/embed geometry dials).
-    *  - `spark.graft.simpairs.projBands`/`projBits` (default 32 × 16).
-    *
-    * Why block stays the default at the declared threshold — the r10
-    * verdict called this lane "blocked-quadratic" and prescribed LSH
-    * candidates; the MEASUREMENT says the prescription cannot apply at
-    * theta = 0.25 on this corpus family (BASELINE round 11): the OUTPUT
-    * itself is ~2% of all within-label pairs (293 pairs at n=500 →
-    * 4,321 at n=2,000 — ratio 14.7 vs the 16 of pure n²), so any exact
-    * method's candidate set is Ω(output) = Ω(block²/50), and the
-    * no-gap cosine distribution (qualifying pairs flush at 0.25)
-    * forces any 100%-recall sketch to emit essentially ALL within-label
-    * pairs as candidates anyway. A quadratic-output query has no
-    * sub-quadratic plan; the honest scale levers are the threshold
-    * (raise it into a gap and auto engages the lsh lane) and the label
-    * blocking already in place. */
-  def qSimPairs(s: SparkSession, d: String): DataFrame = {
-    val theta = s.conf.get("spark.graft.simpairs.threshold", "0.25").toDouble
-    val strategy = s.conf.get("spark.graft.simpairs.strategy", "block")
-    val bands = s.conf.get("spark.graft.simpairs.projBands", "32").toInt
-    val bits = s.conf.get("spark.graft.simpairs.projBits", "16").toInt
-    require(theta >= -1.0 && theta <= 1.0,
-      s"spark.graft.simpairs.threshold must be in [-1, 1], got $theta")
-    require(bands >= 1 && bands <= 256,
-      s"spark.graft.simpairs.projBands must be in [1, 256], got $bands")
-    require(bits >= 1 && bits <= 64,
-      s"spark.graft.simpairs.projBits must be in [1, 64], got $bits")
-    // the post-hoc boundary audit guards AUTO's sample-based inference,
-    // so auto-picked lsh runs it unless explicitly disabled; a user who
-    // CHOSE lsh accepted sketch-tier semantics, so it is opt-in there —
-    // and on a hit the response default differs the same way (auto →
-    // block, user-chosen → warn; see simPairsLsh). EAGERNESS NOTE (the
-    // sortedOutput-style written tradeoff): `auto` and any lsh with the
-    // boundary check on run Spark jobs at CONSTRUCTION time (auto's two
-    // decision aggregates; the check's candidate materialization+count)
-    // — building this plan for explain/audit tooling executes them.
-    // `block` (the default) and plain `lsh` stay fully lazy.
-    def checkConf(dflt: Boolean) =
-      s.conf.get("spark.graft.simpairs.boundaryCheck", dflt.toString).toBoolean
-    strategy match {
-      case "block" => simPairsBlock(s, d, theta)
-      case "lsh" =>
-        simPairsLsh(s, d, theta, bands, bits, checkConf(dflt = false))
-      case "auto" =>
-        simPairsAutoChoice(s, d, theta, bands, bits)._1 match {
-          case "lsh" =>
-            simPairsLsh(s, d, theta, bands, bits, checkConf(dflt = true),
-              engagedByAuto = true)
-          case _ => simPairsBlock(s, d, theta)
-        }
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.simpairs.strategy must be block, lsh or auto, got $other")
-    }
   }
 
   /** k-NN label propagation: for probes vec_id < 10, majority label of the

@@ -58,12 +58,17 @@ object TrainingData {
     * one pipeline the same subtree can appear 3–4 times (signatures, verify,
     * sizes); persisting them once collapses those repeated scan+explode+join
     * subtrees. This is ordinary dimension caching — at cluster scale these
-    * are exactly the assets you'd materialize once per corpus snapshot. */
+    * are exactly the assets you'd materialize once per corpus snapshot.
+    * The key holds the session REFERENCE (SparkSession compares by
+    * identity), not its identity hash: hashes are not unique, so a new
+    * session could reuse a dead one's hash and be handed its assets. The
+    * cached frames hold their session already, so the key pins nothing
+    * new. */
   private val shared =
-    scala.collection.concurrent.TrieMap[(Int, String, String), DataFrame]()
-  private[operators] def cached(name: String, s: SparkSession, d: String)
+    scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]()
+  private[graft] def cached(name: String, s: SparkSession, d: String)
     (build: => DataFrame): DataFrame = {
-    shared.getOrElseUpdate((System.identityHashCode(s), d, name), {
+    shared.getOrElseUpdate((s, d, name), {
       val df = build.persist()
       if (eagerAssetTiming) {
         // Per-asset build seconds (r15 verdict item 7): with the flag on

@@ -161,8 +161,7 @@ object Windows {
     *    result-identical (WinRangeLaneSpec + the `graftlanes` parity
     *    arm), so the dispatch is a pure cost choice with no correctness
     *    dimension — the same safety class that made linkage flip to
-    *    auto in r13, and the OPPOSITE of simpairs (whose lsh lane is
-    *    probabilistic and therefore must not be a default's choice).
+    *    auto in r13.
     *    DEFAULT DECISION (r14, written): auto, not plain. plain's loss
     *    on a hot corpus is UNBOUNDED (×2.1–2.3 per ×2 hot mass — the
     *    measured ladder reaches ×6.3 and still bends) while bucketed's

@@ -46,19 +46,10 @@ import graft.functions.{BloomAgg, BloomMightContain}
   *    operator-optimization batch, which iterates to fixpoint).
   *
   * The both-sides-filtered back-off is deliberately conservative, and it
-  * means the AUTO orientation skips most production fact scans — real
-  * fact tables nearly always carry a date/partition predicate, which
-  * makes them look "selective" to a stats-free syntactic check. That is
-  * by design, not an oversight: guessing wrong would build a Bloom over
-  * the 100 TB side. For those shapes the caller names the creation side
-  * explicitly:
-  * {{{ spark.conf.set("spark.graft.bloomJoin.side", "right")  // or "left" }}}
-  * A forced side skips the selectivity vote entirely (the caller asserts
-  * profitability; an Inner join accepts either side, LeftSemi only
-  * "right") — the determinism vet and the fixed-point probe check still
-  * apply, so forcing can cost time but never correctness. "auto"
-  * (default) keeps the back-off. The conf pair is per-session/per-query
-  * scoped, the same usage pattern as `spark.graft.rangeJoin.binWidth`.
+  * means the rule skips most production fact scans — real fact tables
+  * nearly always carry a date/partition predicate, which makes them look
+  * "selective" to a stats-free syntactic check. That is by design, not an
+  * oversight: guessing wrong would build a Bloom over the 100 TB side.
   *
   * The creation subtree is referenced twice after the rewrite (join side
   * + subquery build), exactly like Spark's own InjectRuntimeFilter; the
@@ -110,20 +101,12 @@ class AutoBloomJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     if (keyPairs.isEmpty) return None
     val (leftKey, rightKey) = keyPairs.head
     // (creation side, creation key, application side, application key)
-    val side = conf.getConfString(SideKey, "auto").toLowerCase
-    val orientation = (side, j.joinType) match {
-      // forced orientation: caller asserts which side is the dim — no
-      // selectivity vote (see class note on production fact-scan shapes)
-      case ("right", Inner | LeftSemi) =>
+    val orientation = j.joinType match {
+      case Inner if selective(j.right) && !selective(j.left) =>
         Some((j.right, rightKey, j.left, leftKey, true))
-      case ("left", Inner) =>
+      case Inner if selective(j.left) && !selective(j.right) =>
         Some((j.left, leftKey, j.right, rightKey, false))
-      case ("left", _) => None
-      case (_, Inner) if selective(j.right) && !selective(j.left) =>
-        Some((j.right, rightKey, j.left, leftKey, true))
-      case (_, Inner) if selective(j.left) && !selective(j.right) =>
-        Some((j.left, leftKey, j.right, rightKey, false))
-      case (_, LeftSemi) if selective(j.right) && !selective(j.left) =>
+      case LeftSemi if selective(j.right) && !selective(j.left) =>
         Some((j.right, rightKey, j.left, leftKey, true))
       case _ => None
     }
@@ -155,6 +138,4 @@ class AutoBloomJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
 object AutoBloomJoinRule {
   val EnabledKey = "spark.graft.bloomJoin.enabled"
-  /** "auto" (selectivity vote, default) | "left" | "right" (forced). */
-  val SideKey = "spark.graft.bloomJoin.side"
 }

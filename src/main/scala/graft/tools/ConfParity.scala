@@ -101,19 +101,17 @@ object ConfParity {
     // classic cross-layer divergence class at the scan).
     Arm("nopushdown", Map("spark.sql.parquet.filterPushdown" -> "false")),
     // Round-13 arm: every graft-owned STRATEGY dial flipped to a
-    // non-default lane at once. All three are declared result-identical
-    // lanes (linkage: every candidate generator feeds the same exact
-    // verify; winrange: bucket+context covers every frame — the
-    // WinRangeLaneSpec soundness argument (bucketed stays the flipped
-    // lane after r14's auto default: auto picks plain on the skew-free
-    // fixture, so bucketed remains the non-base path); simpairs auto:
-    // the fixture's populated boundary always routes it to the exact
-    // block lane), so zero diffs here is the full-surface hash proof of
-    // the lane laws, not just the per-operator spec corpora.
+    // non-default lane at once. Both are declared result-identical lanes
+    // (linkage: every candidate generator feeds the same exact verify;
+    // winrange: bucket+context covers every frame — the WinRangeLaneSpec
+    // soundness argument (bucketed stays the flipped lane after r14's
+    // auto default: auto picks plain on the skew-free fixture, so
+    // bucketed remains the non-base path)), so zero diffs here is the
+    // full-surface hash proof of the lane laws, not just the
+    // per-operator spec corpora.
     Arm("graftlanes", Map(
       "spark.graft.linkage.strategy" -> "symdel",
-      "spark.graft.winrange.strategy" -> "bucketed",
-      "spark.graft.simpairs.strategy" -> "auto")),
+      "spark.graft.winrange.strategy" -> "bucketed")),
   )
 
   /** Negative control, NOT in the default arm set: a session-timezone flip

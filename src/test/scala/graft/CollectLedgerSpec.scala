@@ -20,8 +20,6 @@ import org.scalatest.funsuite.AnyFunSuite
   *    aggregate.
   *  - operators/Insights.scala ×1 — skyline's per-partition prefix
   *    maxima (one long per partition).
-  *  - operators/LlmPipeline.scala ×2 — simpairs auto's two one-row
-  *    decision aggregates (bounded sample boundary count; Σ block²).
   *  - operators/Windows.scala ×1 — winrange auto's one-row decision
   *    aggregate (max per-user count + total, r14).
   */
@@ -32,7 +30,6 @@ class CollectLedgerSpec extends AnyFunSuite {
     "operators/TrainingData.scala" -> 2,
     "operators/Hygiene.scala" -> 1,
     "operators/Insights.scala" -> 1,
-    "operators/LlmPipeline.scala" -> 2,
     "operators/Windows.scala" -> 1)
 
   test("every .collect() in non-tools src/main is on the sanctioned ledger") {

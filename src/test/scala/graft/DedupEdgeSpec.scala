@@ -227,4 +227,16 @@ class DedupEdgeSpec extends SparkSpec {
     assert(TrainingData.assetBuildSecs.isEmpty,
       s"stale asset timings survived unpersistAll: ${TrainingData.assetBuildSecs}")
   }
+
+  test("an asset cached under one session is not returned under another") {
+    val dir = Files.createTempDirectory("graft-sessionkey").toString
+    val mine = TrainingData.cached("sessionKeyProbe", spark, dir)(spark.range(3).toDF())
+    assert(TrainingData.cached("sessionKeyProbe", spark, dir)(
+      fail("rebuilt an asset its own session had cached")) eq mine)
+    val other = spark.newSession()
+    val theirs = TrainingData.cached("sessionKeyProbe", other, dir)(other.range(5).toDF())
+    assert(!(theirs eq mine), "a new session was handed another session's asset")
+    assert(theirs.sparkSession eq other)
+    assert(theirs.count() == 5)
+  }
 }

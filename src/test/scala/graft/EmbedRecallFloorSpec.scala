@@ -36,8 +36,7 @@ class EmbedRecallFloorSpec extends SparkSpec {
 
   // (arm, confs, floor@0.90, floor@0.95)
   private val arms = Seq(
-    ("axis8", Map("spark.graft.embed.lsh" -> "axis",
-      "spark.graft.embed.bandBits" -> "8"), 0.90, 0.95),
+    ("axis8", Map("spark.graft.embed.lsh" -> "axis"), 0.90, 0.95),
     ("proj16x8", Map("spark.graft.embed.lsh" -> "proj",
       "spark.graft.embed.projBands" -> "16",
       "spark.graft.embed.projBits" -> "8"), 0.95, 0.95),
@@ -74,7 +73,7 @@ class EmbedRecallFloorSpec extends SparkSpec {
             .collect()
             .map(r => (r.getDouble(0),
               r.getLong(2).toDouble / r.getLong(1))).toMap
-        } finally Seq("spark.graft.embed.lsh", "spark.graft.embed.bandBits",
+        } finally Seq("spark.graft.embed.lsh",
           "spark.graft.embed.projBands", "spark.graft.embed.projBits")
           .foreach(spark.conf.unset)
       info(f"$name recall by cos: ${recalls.toSeq.sorted.map { case (c, r) => f"$c%.2f→$r%.3f" }.mkString(", ")}")

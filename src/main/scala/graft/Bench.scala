@@ -1,8 +1,6 @@
 package graft
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** Headline benchmark over the full `SparkEntry.queries` surface.
   *
   * Jitter doctrine (BASELINE.md): this host shows transient degraded
@@ -130,18 +128,26 @@ object Bench {
     full.take(9)
   }.toOption.filter(_.nonEmpty)
 
-  /** Runs `body`; None on success, else the failure as
-    * `"<class>: <first message line>"`. Only non-fatal throwables are
-    * caught — an OutOfMemoryError or an interrupt ends the run instead of
-    * being booked as one failed query. */
+  /** A failure as `"<class>: <first message line>"`. */
+  private[graft] def cause(e: Throwable): String = {
+    val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+      .getOrElse("")
+    s"${e.getClass.getName}: $msg"
+  }
+
+  /** Runs `body`; None on success, else the failure's [[cause]]. Only
+    * non-fatal throwables are caught — an OutOfMemoryError or an
+    * interrupt ends the run instead of being booked as one failed query. */
   private[graft] def attempt(body: => Unit): Option[String] =
     try { body; None }
-    catch {
-      case NonFatal(e) =>
-        val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
-          .getOrElse("")
-        Some(s"${e.getClass.getName}: $msg")
-    }
+    catch { case NonFatal(e) => Some(cause(e)) }
+
+  /** Median; the mean of the two middle values at an even count. */
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    val n = s.length
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
+  }
 
   /** JSON string literal: quotes, backslashes and control chars escaped. */
   private def jsonStr(v: String): String = "\"" + v.flatMap {
@@ -167,16 +173,7 @@ object Bench {
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       if (action == "count") { df.count(); () }
       else df.write.format("noop").mode("overwrite").save()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same deployment dial as Verify (q_recursive's row-count guard
-      // scales with |customers|·depth — see BASELINE r12)
-      .config("spark.sql.cteRecursionRowLimit", "2000000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: absorb session/codegen/parquet-reader init so the first
     // query's time is honest. The 5-row region table touches the real scan
@@ -239,11 +236,6 @@ object Bench {
         case Some(e) => if (!errors.contains(name)) errors(name) = e
       }
     }
-    def median(xs: List[Double]): Double = {
-      val s = xs.sorted
-      val n = s.length
-      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-    }
     // -1.0 marks a query that failed on every rep (same sentinel as before).
     val med = order.map(q =>
       q -> (if (times(q).nonEmpty) median(times(q)) else -1.0))
@@ -261,7 +253,7 @@ object Bench {
       // calibrated at sf0.1 only — a ratio against another SF's corpus
       // would read as host speed when it's data volume
       if (rs.isEmpty || !sfDir.stripSuffix("/").endsWith("sf0.1")) -1.0
-      else median(rs.toList)
+      else median(rs)
     }
     // Locale-pinned formatting (r14 ADVICE): an f"" interpolator uses the
     // JVM default locale — under a comma-decimal locale it would emit

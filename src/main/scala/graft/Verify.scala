@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,7 @@ object Verify {
     // the driver always calls with exactly two args = full run)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // q_recursive's deployment dial (BASELINE r12 "Non-dedup bench
-      // heads"): Spark's recursive-CTE guard caps TOTAL rows across
-      // iterations at 1e6 by default — a foot-gun fence, not a memory
-      // bound — and the walk produces |customers|·depth rows, which
-      // clears 1e6 somewhere around 60k customers. The harness sets the
-      // dial the way a deployment would so the same binary verifies at
-      // any corpus size (result-invariant below the default limit).
-      .config("spark.sql.cteRecursionRowLimit", "2000000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ListBuffer[String]()
@@ -37,9 +21,12 @@ object Verify {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         okCount += 1
-      } catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      } catch {
+        // every throwable, fatal ones included: oracle_sql.json below
+        // must still be written
+        case e: Throwable =>
+          failed += name
+          System.err.println(s"[verify] $name failed: ${Bench.cause(e)}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -178,7 +178,7 @@ object Analytics {
     // (0.161 -> 0.408 s, BASELINE.md round 10 "Batch 2"). Recompute
     // beats materializing when the recompute is a single-column scan
     // (the q_tfidf doctrine);
-    // the x2 per-run count is inside the pinned ScanAuditSpec budget.
+    // the x2 per-run count is inside the ScanAudit budget.
     val rev = li
       .groupBy(date_trunc("day", col("l_shipdate")).as("day"))
       .agg(Cols.moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.QueryExecution
 
 /** Full-surface sweep for the SIXTH static-plan hazard class (r15 —
   * generalized from the round's root-caused ×16 broadcast OOM): a JOIN
@@ -50,9 +50,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * Sides whose unbounded-keyed aggregate is DECLARED bounded by a
   * written argument elsewhere (the Heaps-law vocabulary tables, the
   * gen-join gram models) are accepted via [[decidedPins]], each entry
-  * carrying the argument's anchor; they print as PIN, never as HIT.
-  *
-  * Usage: `sbt "runMain graft.tools.AqeFlipAudit [sfDir] [q_name ...]"`.
+  * carrying the argument's anchor; they are PIN findings, never HIT.
+  * Only HIT findings are offenders ([[offenders]]).
   */
 object AqeFlipAudit {
 
@@ -198,9 +197,9 @@ object AqeFlipAudit {
       "l_partkey" -> ("argmin cost table: AQE builds the smaller supplier " +
         "slice; double column bounds the build ratio; crossing self-corrects")))
 
-  final case class Finding(query: String, kind: String, detail: String)
+  final case class Finding(kind: String, detail: String)
 
-  /** All findings for one query's optimized plan. Public for the spec. */
+  /** All findings for one query's optimized plan. */
   def findings(name: String, plan: LogicalPlan): Seq[Finding] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Finding]
     def side(which: String, p: LogicalPlan, hint: Option[HintInfo],
@@ -219,17 +218,17 @@ object AqeFlipAudit {
           // the strategy decision is JOIN-level: an anti-broadcast hint
           // on EITHER side settles the whole join away from broadcast
           if (antiBroadcastPin(hint) || antiBroadcastPin(oppositeHint))
-            out += Finding(name, "PINNED", s"$which agg keyed [$keys] merge/hash-pinned")
+            out += Finding("PINNED", s"$which agg keyed [$keys] merge/hash-pinned")
           else pin match {
             // a decided written bound also covers an explicit broadcast
             // of the same side (e.g. the bounded eval-suite gram set)
             case Some((_, why)) =>
-              out += Finding(name, "PIN", s"$which agg keyed [$keys]: $why")
+              out += Finding("PIN", s"$which agg keyed [$keys]: $why")
             case None if broadcastPin(hint) =>
-              out += Finding(name, "HIT",
+              out += Finding("HIT",
                 s"$which agg keyed [$keys] EXPLICITLY BROADCAST — unbounded")
             case None =>
-              out += Finding(name, "HIT",
+              out += Finding("HIT",
                 s"$which agg keyed [$keys] un-pinned — AQE-flippable to broadcast")
           }
         }
@@ -243,35 +242,8 @@ object AqeFlipAudit {
     out.toSeq
   }
 
-  def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var hitQueries = 0
-    var failed = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-        try {
-          val fs = findings(name, fn(spark, d).queryExecution.optimizedPlan)
-          if (fs.exists(_.kind == "HIT")) hitQueries += 1
-          fs.foreach(f => println(s"${f.kind} ${f.query}: ${f.detail}"))
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            failed += 1
-            println(s"FAILED $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-      }
-    println(s"""{"metric":"aqeflip_audit","flippable_unbounded_agg_sides":$hitQueries,"failed":$failed}""")
-    graft.operators.TrainingData.unpersistAll()
-    spark.stop()
-    if (failed > 0) sys.exit(1)
-  }
+  /** HIT findings in `query`'s optimized plan, which does not depend on
+    * AQE. */
+  def offenders(query: String, qe: QueryExecution): Seq[String] =
+    findings(query, qe.optimizedPlan).filter(_.kind == "HIT").map(_.detail)
 }

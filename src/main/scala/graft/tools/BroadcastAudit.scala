@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /** Full-surface sweep for the FIFTH static-plan hazard class (r10
@@ -29,7 +28,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   *    argument qTfidf documents), eval-suite gram sets;
   *  - a `Limit`: top-k / nprobe probe lists, bounded outright;
   *  - a KEY-PIN `Filter`: a top-level conjunct pinning a bare (or cast)
-  *    UNIQUE-KEY column ([[uniqueKeyCols]]) to literals — `=`, `IN`, or
+  *    UNIQUE-KEY column ([[keyTable]]) to literals — `=`, `IN`, or
   *    `<`/`<=` a small numeric literal (≤ [[SmallKeyCap]]), the
   *    probe-set idiom (`vec_id === 0`, `vec_id < 10`: at most that many
   *    rows because the column is unique per row). The unique-key
@@ -65,30 +64,24 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * flagged: forcing a shuffle is degradation-SAFE (the explode-blind
   * symdel/embed pins are the exception that proves the let-stats-decide
   * rule, and they point away from broadcast).
-  *
-  * Usage: `sbt "runMain graft.tools.BroadcastAudit [sfDir] [q_name ...]"`.
   */
 object BroadcastAudit {
   /** Dimensions whose row count is a schema CONSTANT at any SF. */
   val boundedTables: Set[String] = Set("nation.parquet", "region.parquet")
 
   /** Unique-key columns of the fixture tables — the ONLY columns an
-    * equality/IN/small-range pin may bound on (mirrors [[boundedTables]]
-    * as a declared, reviewable set). One entry per table primary key;
-    * lineitem is deliberately absent (its key is the composite
+    * equality/IN/small-range pin may bound on — and the table each is
+    * the primary key OF. One entry per table primary key; lineitem is
+    * deliberately absent (its key is the composite
     * l_orderkey+l_linenumber — no single column identifies a row).
     * Foreign keys (c_nationkey, l_suppkey, …) are NOT here: pinning one
-    * keeps every matching row, a corpus-sized fraction. */
-  val uniqueKeyCols: Set[String] = Set("doc_id", "vec_id", "event_id",
-    "o_orderkey", "c_custkey", "s_suppkey", "p_partkey",
-    "n_nationkey", "r_regionkey")
-
-  /** Which fixture table each unique-key column is the primary key OF —
-    * the provenance half of the pin criterion (r12 ADVICE): a name-only
-    * match would accept `something AS doc_id`, an alias over a derived,
-    * possibly non-unique expression. A pin only counts when the pinned
-    * AttributeReference's exprId is traced to the OUTPUT of a scan of
-    * this table (analyzed plans preserve exprIds through
+    * keeps every matching row, a corpus-sized fraction.
+    *
+    * The table is the provenance half of the criterion (r12 ADVICE): a
+    * name-only match would accept `something AS doc_id`, an alias over a
+    * derived, possibly non-unique expression. A pin only counts when the
+    * pinned AttributeReference's exprId is traced to the OUTPUT of a scan
+    * of this table (analyzed plans preserve exprIds through
     * Project/Filter/Join; an Alias mints a fresh exprId, so derived
     * columns fail the trace by construction). */
   val keyTable: Map[String, String] = Map(
@@ -107,8 +100,8 @@ object BroadcastAudit {
   }
 
   /** A bare (or cast-wrapped) reference to a declared unique-key column
-    * ([[uniqueKeyCols]]) whose exprId traces to a scan of the table that
-    * column is the key of ([[keyTable]] — `prov` is the exprId→table map
+    * whose exprId traces to a scan of the table that column is the key
+    * of ([[keyTable]] — `prov` is the exprId→table map
     * collected below the Filter). A pin on any OTHER column — however
     * selective it looks — is not a boundedness argument: only a unique
     * key turns "k pinned literals" into "≤ k rows", and only provenance
@@ -198,8 +191,7 @@ object BroadcastAudit {
       p.children.find(c => !bounded(c)).map(chainDown).getOrElse(Nil)
 
   /** One entry per broadcast hint whose subtree has no boundedness
-    * argument: the node chain from the hint to an unbounded leaf.
-    * Public for BroadcastAuditSpec. */
+    * argument: the node chain from the hint to an unbounded leaf. */
   def hits(plan: LogicalPlan): Seq[String] = {
     def walk(p: LogicalPlan): Seq[String] = {
       val here = p match {
@@ -214,37 +206,7 @@ object BroadcastAudit {
     walk(plan)
   }
 
-  def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var hitQueries = 0
-    var failed = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-        try {
-          val hs = hits(fn(spark, d).queryExecution.analyzed)
-          if (hs.nonEmpty) {
-            hitQueries += 1
-            hs.distinct.foreach(c => println(s"HIT $name: $c"))
-          }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            failed += 1
-            println(s"FAILED $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-      }
-    println(s"""{"metric":"broadcast_audit","unbounded_broadcast_hints":$hitQueries,"failed":$failed}""")
-    graft.operators.TrainingData.unpersistAll()
-    spark.stop()
-  }
+  /** Unbounded broadcast hints in `query`'s analyzed plan. */
+  def offenders(query: String, qe: QueryExecution): Seq[String] =
+    hits(qe.analyzed).distinct
 }

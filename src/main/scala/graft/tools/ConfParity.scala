@@ -1,6 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.SparkEntry
 
@@ -168,14 +170,7 @@ object ConfParity {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val wanted = args.drop(1).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val qs = SparkEntry.queries
@@ -200,7 +195,7 @@ object ConfParity {
               Right(Left((df.count(), df.columns.sorted.toSeq)))
             else Right(Right(canon(df)))
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
           }
         name -> res

@@ -61,13 +61,7 @@ object GrowCorpus {
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-grown-x8"
     val factor = if (args.length > 2) args(2).toInt else 8
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     Seq("region", "nation", "supplier", "part").foreach { t =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-head timing for the r15 optimization loop: times the NAMED
   * declared heads under the bench's own v2 protocol (noop sink,
   * pass-major reps, per-head median AND min) without paying for the
@@ -26,6 +24,12 @@ object HeadTime {
       (k, v)
     }
 
+  /** One head's JSON line: Bench's median (mean of the two middle reps
+    * at an even count) and the min. */
+  private[graft] def line(q: String, ts: Seq[Double], d: String): String =
+    s"""{"head":"$q","median":${graft.Bench.median(ts)},"min":${ts.min},""" +
+      s""""reps":${ts.length},"sf":"$d"}"""
+
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
@@ -33,25 +37,20 @@ object HeadTime {
     require(heads.nonEmpty, "name at least one declared head")
     val pins = sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(confPins)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.cteRecursionRowLimit", "2000000000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.LocalSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     pins.foreach { case (k, v) => spark.conf.set(k, v) }
+    def warm(what: String)(body: => Unit): Unit =
+      graft.Bench.attempt(body).foreach(c =>
+        System.err.println(s"[headtime] warmup $what failed: $c"))
     // session + scan-path warmup, then shared-asset warmup for any head
     // that reads a multi-consumer cached() asset (same doctrine as Bench)
     spark.range(1000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$d/region.parquet")
-      .groupBy("r_name").count().collect()
-    catch { case _: Throwable => }
+    warm("region scan")(spark.read.parquet(s"$d/region.parquet")
+      .groupBy("r_name").count().collect())
     for (q <- graft.Bench.warmQs if heads.contains(q))
-      try graft.SparkEntry.queries(q)(spark, d)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      warm(q)(graft.SparkEntry.queries(q)(spark, d)
+        .write.format("noop").mode("overwrite").save())
     val times = scala.collection.mutable.Map[String, List[Double]]()
       .withDefaultValue(Nil)
     for (_ <- 1 to reps; q <- heads) {
@@ -61,12 +60,7 @@ object HeadTime {
         .write.format("noop").mode("overwrite").save()
       times(q) = (System.nanoTime() - t0) / 1e9 :: times(q)
     }
-    for (q <- heads) {
-      val ts = times(q).sorted
-      val med = ts(ts.length / 2)
-      println(s"""{"head":"$q","median":$med,"min":${ts.head},""" +
-        s""""reps":$reps,"sf":"$d"}""")
-    }
+    for (q <- heads) println(line(q, times(q), d))
     spark.stop()
   }
 }

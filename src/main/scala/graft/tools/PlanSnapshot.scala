@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -70,14 +69,9 @@ object PlanSnapshot {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
     val tag = args.lift(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.LocalSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val lines = graft.SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
         val line = try {

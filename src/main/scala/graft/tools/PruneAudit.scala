@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BinaryComparison, Cast, Expression, In, InSet, IsNotNull, Not, StartsWith}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec,
+  FilterExec, InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** Full-surface pushdown/pruning audit: at 100 TB the two properties
@@ -18,10 +20,12 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   * distinct cache — materialization reads what the cache build reads):
   *
   *  - `cols a/b`: columns read vs columns in the file schema. A scan
-  *    reading the full width is flagged WIDE unless the table is
-  *    narrow (≤ 4 columns) or the read is itself narrow (≤ 6 columns —
-  *    events/documents-shaped tables are consumed near-whole by
-  *    design in most corpus operators).
+  *    reading the full width is flagged WIDE when the table is one of
+  *    the two widest facts (lineitem, orders: "a scan that reads all
+  *    columns for a 2-column projection is wrong"), or when neither
+  *    the table (≤ 4 columns) nor the read (≤ 6 columns — events/
+  *    documents-shaped tables are consumed near-whole by design in
+  *    most corpus operators) is narrow.
   *  - `pushed vs pushable`: the scan's parent-Filter residue (through
   *    the ColumnarToRow/WholeStageCodegen wrappers; IsNotNull atoms
   *    excluded — Spark adds those for free) is classified into
@@ -34,16 +38,12 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   *    type-mismatched literal silently turns a row-group skip into a
   *    full read.
   *
-  * WIDE flags are a TRIAGE list (an aggregate-everything query
-  * legitimately reads every column); NOPUSH flags are regressions by
-  * construction. PruneAuditSpec pins both with sensitivity controls.
-  *
-  * Usage: `sbt "runMain graft.tools.PruneAudit [sfDir] [q_name ...]"`.
+  * Both are offenders ([[offenders]]); PruneAuditSpec's controls prove
+  * the walker sees both failure shapes.
   */
 object PruneAudit {
   final case class ScanReport(table: String, colsRead: Int, colsInFile: Int,
-    pushedData: Int, parentFilterAtoms: Int, pushableAtoms: Int,
-    pushedStrs: Seq[String])
+    pushedData: Int, parentFilterAtoms: Int, pushableAtoms: Int)
 
   /** An atom is PUSHABLE-SHAPED iff it is a comparison / IN /
     * prefix-match between a bare column (or a cast of one — the classic
@@ -53,28 +53,20 @@ object PruneAudit {
     * (length(text) >= 5, isnan(v), key % 97 = 0) are structurally
     * untranslatable and are NOT counted — they filter post-scan by
     * nature, not by regression. */
-  private def bareOrCastAttr(
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-    e match {
-      case _: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-        true
-      case c: org.apache.spark.sql.catalyst.expressions.Cast =>
-        bareOrCastAttr(c.child)
-      case _ => false
-    }
-  private def pushableShaped(
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions._
-    e match {
-      case b: BinaryComparison =>
-        (bareOrCastAttr(b.left) && b.right.foldable) ||
-          (bareOrCastAttr(b.right) && b.left.foldable)
-      case i: In => bareOrCastAttr(i.value) && i.list.forall(_.foldable)
-      case i: InSet => bareOrCastAttr(i.child)
-      case s: StartsWith => bareOrCastAttr(s.left) && s.right.foldable
-      case Not(c) => pushableShaped(c)
-      case _ => false
-    }
+  private def bareOrCastAttr(e: Expression): Boolean = e match {
+    case _: AttributeReference => true
+    case c: Cast => bareOrCastAttr(c.child)
+    case _ => false
+  }
+  private def pushableShaped(e: Expression): Boolean = e match {
+    case b: BinaryComparison =>
+      (bareOrCastAttr(b.left) && b.right.foldable) ||
+        (bareOrCastAttr(b.right) && b.left.foldable)
+    case i: In => bareOrCastAttr(i.value) && i.list.forall(_.foldable)
+    case i: InSet => bareOrCastAttr(i.child)
+    case s: StartsWith => bareOrCastAttr(s.left) && s.right.foldable
+    case Not(c) => pushableShaped(c)
+    case _ => false
   }
 
   /** Split a "PushedFilters" metadata payload at top-level commas
@@ -94,14 +86,11 @@ object PruneAudit {
   }
 
   /** All parquet-scan reports in `root`, with each scan's direct-parent
-    * FilterExec atom count (0 when the scan has no Filter parent).
-    * Public for PruneAuditSpec. */
+    * FilterExec atom count (0 when the scan has no Filter parent). */
   def reports(root: SparkPlan): Seq[ScanReport] = {
     val seenCaches = new java.util.IdentityHashMap[SparkPlan, Unit]()
-    def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-        conjuncts(l) ++ conjuncts(r)
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
     }
     def walk(p: SparkPlan, parentFilter: Option[FilterExec]): Seq[ScanReport] =
@@ -116,9 +105,8 @@ object PruneAudit {
         // transparent wrappers between a Filter and its scan in an
         // executed plan — the Filter is still the scan's post-scan
         // residue through these
-        case t @ (_: org.apache.spark.sql.execution.ColumnarToRowExec |
-                  _: org.apache.spark.sql.execution.InputAdapter |
-                  _: org.apache.spark.sql.execution.WholeStageCodegenExec) =>
+        case t @ (_: ColumnarToRowExec | _: InputAdapter |
+                  _: WholeStageCodegenExec) =>
           t.children.flatMap(walk(_, parentFilter))
         case s: FileSourceScanExec =>
           val table = s.relation.location.rootPaths.headOption
@@ -135,12 +123,10 @@ object PruneAudit {
             .getOrElse(Seq.empty)
             .map(_.trim)
             .filter(f => f.nonEmpty && !f.startsWith("IsNotNull"))
-          val dataAtoms = parentFilter.map(f => conjuncts(f.condition)
-            .filterNot(_.isInstanceOf[
-              org.apache.spark.sql.catalyst.expressions.IsNotNull]))
-            .getOrElse(Seq.empty)
+          val dataAtoms = parentFilter.toSeq.flatMap(f => conjuncts(f.condition))
+            .filterNot(_.isInstanceOf[IsNotNull])
           Seq(ScanReport(table, readCols, fileCols, pushed.length,
-            dataAtoms.length, dataAtoms.count(pushableShaped), pushed))
+            dataAtoms.length, dataAtoms.count(pushableShaped)))
         case other =>
           other.children.flatMap(walk(_, None)) ++
             other.subqueries.flatMap(walk(_, None))
@@ -148,42 +134,21 @@ object PruneAudit {
     walk(root, None)
   }
 
-  def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var wide = 0
-    var nopush = 0
-    var failed = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-        try {
-          reports(fn(spark, d).queryExecution.executedPlan).foreach { r =>
-            val isWide =
-              r.colsRead == r.colsInFile && r.colsInFile > 4 && r.colsRead > 6
-            val isNoPush = r.pushableAtoms > r.pushedData
-            if (isWide) { wide += 1
-              println(s"WIDE $name: ${r.table} reads ${r.colsRead}/${r.colsInFile} cols") }
-            if (isNoPush) { nopush += 1
-              println(s"NOPUSH $name: ${r.table} pushable=${r.pushableAtoms}, pushed=${r.pushedData}") }
-          }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            failed += 1
-            println(s"FAILED $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-      }
-    println(s"""{"metric":"prune_audit","wide_scans":$wide,"nopush_scans":$nopush,"failed":$failed}""")
-    graft.operators.TrainingData.unpersistAll()
-    spark.stop()
-  }
+  /** The two widest fact tables: every scan of them must prune. */
+  private val wideFacts = Set("lineitem.parquet", "orders.parquet")
+
+  /** NOPUSH and WIDE scans in `query`'s static plan. */
+  def offenders(query: String, qe: QueryExecution): Seq[String] =
+    reports(qe.executedPlan).flatMap { r =>
+      val noPush =
+        if (r.pushableAtoms > r.pushedData) Seq(s"NOPUSH ${r.table} " +
+          s"pushable=${r.pushableAtoms} pushed=${r.pushedData}")
+        else Nil
+      val fullWidth = r.colsRead == r.colsInFile &&
+        (wideFacts(r.table) || (r.colsInFile > 4 && r.colsRead > 6))
+      val wide =
+        if (fullWidth) Seq(s"WIDE ${r.table} reads ${r.colsRead}/${r.colsInFile} cols")
+        else Nil
+      noPush ++ wide
+    }.distinct
 }

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Full-surface sweep for the fourth static-plan hazard class: a
@@ -27,9 +25,8 @@ import org.apache.spark.sql.execution.window.WindowExec
   * A partition-less window with NO bounding node below reads the whole
   * corpus through one task and is flagged. `WindowGroupLimitExec` with
   * an empty partition spec is NOT flagged (it is itself a bounded-heap
-  * top-k, the thing one WANTS instead of a full sort).
-  *
-  * Usage: `sbt "runMain graft.tools.WindowAudit [sfDir] [q_name ...]"`.
+  * top-k, the thing one WANTS instead of a full sort). No classification
+  * list: the surface must be clean outright.
   */
 object WindowAudit {
   private val bounding = Seq("HashAggregate", "ObjectHashAggregate",
@@ -38,12 +35,9 @@ object WindowAudit {
 
   /** Offending chains: for each partition-less WindowExec whose subtree
     * holds no bounding node, the node-class chain from the window down
-    * to its source. Public for WindowAuditSpec. */
+    * to its source. */
   def chains(root: SparkPlan): Seq[String] = {
-    def descend(p: SparkPlan): Seq[SparkPlan] = p match {
-      case c: InMemoryTableScanExec => Seq(c.relation.cachedPlan)
-      case other => other.children
-    }
+    import Audits.descend
     def hasBounding(p: SparkPlan): Boolean = p match {
       // a trackedCheckpoint() read: in declared queries an ExistingRDD
       // is a materialized intermediate that passed the r10 bounded-
@@ -70,37 +64,8 @@ object WindowAudit {
     walk(root)
   }
 
-  def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var hitQueries = 0
-    var failed = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-        try {
-          val hits = chains(fn(spark, d).queryExecution.executedPlan)
-          if (hits.nonEmpty) {
-            hitQueries += 1
-            hits.distinct.foreach(c => println(s"HIT $name: $c"))
-          }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            failed += 1
-            println(s"FAILED $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-      }
-    println(s"""{"metric":"window_audit","unbounded_global_windows":$hitQueries,"failed":$failed}""")
-    graft.operators.TrainingData.unpersistAll()
-    spark.stop()
-  }
+  /** Partition-less windows over unbounded input in `query`'s static
+    * plan. */
+  def offenders(query: String, qe: QueryExecution): Seq[String] =
+    chains(qe.executedPlan).distinct
 }

@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.tools.HeadTime.confPins
+import graft.tools.HeadTime.{confPins, line}
 
-/** `SPARK_GRAFT_CONF` parsing for HeadTime's whole-JVM dial pins. */
+/** `SPARK_GRAFT_CONF` parsing for HeadTime's whole-JVM dial pins, and
+  * its per-head JSON line. */
 class HeadTimeConfSpec extends AnyFunSuite {
 
   test("key=value pairs split on ';', blanks skipped, value keeps its '='") {
@@ -23,5 +24,10 @@ class HeadTimeConfSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       confPins("spark.sql.shuffle.partitions=7"))
     assert(e.getMessage.contains("must be spark.graft.*"), e.getMessage)
+  }
+
+  test("reps=4: median is the mean of the two middle reps") {
+    assert(line("q_x", Seq(4.0, 1.0, 3.0, 2.0), "sf") ==
+      """{"head":"q_x","median":2.5,"min":1.0,"reps":4,"sf":"sf"}""")
   }
 }

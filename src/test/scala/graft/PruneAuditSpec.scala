@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Sensitivity controls + full-surface pin for tools.PruneAudit (the
-  * round-10 pushdown/pruning audit). The controls prove the walker can
-  * actually SEE both failure shapes before the surface-wide assertion
-  * means anything — the GenJoinAudit negative-control discipline:
+/** Sensitivity controls for tools.PruneAudit (the round-10
+  * pushdown/pruning audit). The controls prove the walker can actually
+  * SEE both failure shapes before AuditsSpec's surface-wide assertion
+  * means anything:
   *
   *  - positive pushdown: an equality predicate on a stored column must
   *    surface as a pushed data filter and count pushable-shaped;
@@ -16,16 +16,6 @@ import org.apache.spark.sql.functions._
   *    structurally untranslatable — seen, but classified out;
   *  - column pruning: a two-column projection must read strictly fewer
   *    columns than the file holds.
-  *
-  * Surface pin: across all 138 static plans, every PUSHABLE-SHAPED
-  * data-filter atom (bare or cast-wrapped column vs literals) reaches
-  * the parquet reader as a pushed filter — the 18 declared predicates
-  * that do not push are all function-wrapped (length(text), isnan(v),
-  * key % k, mixBucket) and filter post-scan by nature, audited out by
-  * shape, not by a name list. And every scan of the two widest fact
-  * tables (lineitem, orders) prunes at least one column — the
-  * full-width read the brief calls out ("a scan that reads all columns
-  * for a 2-column projection is wrong") stays impossible by CI.
   */
 class PruneAuditSpec extends SparkSpec {
 
@@ -67,35 +57,6 @@ class PruneAuditSpec extends SparkSpec {
         b.head.pushableAtoms == 0,
         s"a function-wrapped predicate is untranslatable by nature — " +
           s"seen but not counted pushable: ${b.head}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
-
-  test("full surface: no filtered scan pushes zero atoms; wide fact tables always prune") {
-    val d = sfDir("sf0.001")
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          tools.PruneAudit.reports(fn(spark, d).queryExecution.executedPlan)
-            .flatMap { r =>
-              val noPush =
-                if (r.pushableAtoms > r.pushedData)
-                  Seq(s"$name: NOPUSH ${r.table} pushable=" +
-                    s"${r.pushableAtoms} pushed=${r.pushedData}")
-                else Seq.empty
-              val wide =
-                if (Set("lineitem.parquet", "orders.parquet")(r.table) &&
-                    r.colsRead == r.colsInFile)
-                  Seq(s"$name: WIDE ${r.table} ${r.colsRead}/${r.colsInFile}")
-                else Seq.empty
-              noPush ++ wide
-            }
-      }
-      assert(offenders.isEmpty,
-        "pushdown/pruning regression — a filter lost its row-group " +
-          s"skip or a wide fact table is read full-width:\n" +
-          offenders.mkString("\n"))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 }

@@ -89,7 +89,7 @@ class SignProjBandsSpec extends SparkSpec {
       val r1 = q.collect()
       val r2 = SparkEntry.queries("q_dedup_embed")(spark, d).collect()
       assert(r1.toSeq == r2.toSeq, "proj lane must be deterministic")
-      // the pinned shuffle (GenJoinAuditSpec criterion) must hold in
+      // the pinned shuffle (GenJoinAudit criterion) must hold in
       // this lane too — same explode-above-join shape
       val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
       spark.conf.set("spark.sql.adaptive.enabled", "false")

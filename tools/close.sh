@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Scripted round-close ritual (r11 verdict item 5). Before this existed
-# the close evidence — closing bench, six-audit battery at both SFs,
+# the close evidence — closing bench, static-plan audits at both SFs,
 # conf-parity arms, triple-SF sweep — was hand-sequenced each round, and
 # the ~hours of sweep/test JVMs degrade the host BEFORE the most
 # timing-sensitive step if the bench runs last (the r10/r11 closes both
@@ -9,9 +9,10 @@
 #
 # Ordering is therefore MOST-CONTENTION-SENSITIVE FIRST:
 #   1. closing bench      — wall-clock timing; wants the freshest host.
-#   2. six-audit battery — static plan walks at sf0.001 AND sf0.1 (plans
-#                           may differ across SFs via stats); insensitive
-#                           to host state, cheap.
+#   2. audits             — graft.tools.Audits, the six static-plan audits
+#                           in one JVM per SF, at sf0.001 AND sf0.1 (plans
+#                           may differ across SFs via stats); fails on any
+#                           OFFENDER/FAILED line; insensitive to host state.
 #   3. conf-parity arms   — result-identity under 11 conf regimes at
 #                           sf0.01; correctness, not timing.
 #   4. triple-SF sweep    — full Verify + DuckDB oracle at all three
@@ -219,26 +220,23 @@ run_bench() {
 }
 
 run_audits() {
-  local sf tool log rc line
+  local sf log rc line
   for sf in /root/testdata/sf0.001 /root/testdata/sf0.1; do
-    for tool in BroadcastAudit GenJoinAudit ScanAudit PruneAudit WindowAudit AqeFlipAudit; do
-      log=$(mktemp)
-      SPARK_GRAFT_CPUS="$cpus" \
-        sbt --batch "runMain graft.tools.$tool $sf" >"$log" 2>&1
-      rc=$?
-      line=$(grep -o '{"metric":"[a-z_]*audit".*}' "$log" | tail -1)
-      if [ $rc -ne 0 ] || [ -z "$line" ]; then
-        note "audit $tool @$sf: FAILED (rc=$rc)"; tail -5 "$log"
-        fails=$((fails+1))
-      else
-        note "audit $tool @$sf: $line"
-        # any HIT line is a finding even when the tool exits 0
-        if grep -q '^HIT ' "$log"; then
-          grep '^HIT ' "$log" | head -5 | sed 's/^/CLOSE:   /'
-        fi
-      fi
-      rm -f "$log"
-    done
+    log=$(mktemp)
+    SPARK_GRAFT_CPUS="$cpus" \
+      sbt --batch "runMain graft.tools.Audits $sf" >"$log" 2>&1
+    rc=$?
+    line=$(grep -o '{"metric":"audits".*}' "$log" | tail -1)
+    if [ $rc -ne 0 ] || [ -z "$line" ]; then
+      # the rule is CI's (AuditsSpec): any offender or failure fails
+      note "audits @$sf: FAILED (rc=$rc) ${line}"
+      grep -E '^(OFFENDER|FAILED) ' "$log" | head -10 | sed 's/^/CLOSE:   /'
+      [ -z "$line" ] && tail -5 "$log"
+      fails=$((fails+1))
+    else
+      note "audits @$sf: $line"
+    fi
+    rm -f "$log"
   done
 }
 

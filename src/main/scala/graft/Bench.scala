@@ -35,11 +35,10 @@ import scala.util.control.NonFatal
   * every final orderBy. The declared result is the full column set in
   * the declared order — Verify writes it as parquet — so v1
   * under-measured those plans; noop forces exactly the declared
-  * computation with no sink or driver-transfer cost. v1 remains
-  * available for calibration via SPARK_GRAFT_BENCH_ACTION=count (the
-  * v1↔v2 per-query mapping is recorded in BASELINE.md r13); the
-  * history line's `protocol` field distinguishes the two, so
-  * cross-round diffs never silently mix them.
+  * computation with no sink or driver-transfer cost. The v1↔v2
+  * per-query mapping is recorded in BASELINE.md r13; the history
+  * line's `protocol` field tells v1 lines from v2 ones, so cross-round
+  * diffs never silently mix them.
   */
 object Bench {
   /** Shared-asset warm list — the single definition. Contract (r9,
@@ -150,7 +149,7 @@ object Bench {
   }
 
   /** JSON string literal: quotes, backslashes and control chars escaped. */
-  private def jsonStr(v: String): String = "\"" + v.flatMap {
+  private[graft] def jsonStr(v: String): String = "\"" + v.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
@@ -162,17 +161,9 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    // v2 noop action by default; `count` = the legacy v1 action, kept
-    // for protocol calibration only (see the object scaladoc)
-    val action = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "noop")
-    require(Set("noop", "count")(action),
-      s"SPARK_GRAFT_BENCH_ACTION must be noop or count, got $action")
-    val protocolId =
-      if (action == "count") "pass-major-median-v1"
-      else "pass-major-median-v2-noop"
+    val protocolId = "pass-major-median-v2-noop"
     def run(df: org.apache.spark.sql.DataFrame): Unit =
-      if (action == "count") { df.count(); () }
-      else df.write.format("noop").mode("overwrite").save()
+      df.write.format("noop").mode("overwrite").save()
     val spark = LocalSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: absorb session/codegen/parquet-reader init so the first

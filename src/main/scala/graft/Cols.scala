@@ -116,6 +116,13 @@ object Cols {
     * and -1 both fail the predicate — and may keep bare `size`. */
   def sizeN(c: Column): Column = when(c.isNotNull, size(c))
 
+  /** Normalized content hash, the exact-dedup key: SHA-256 of the
+    * lowercased, trimmed text. Exact dedup, the curation pipeline, the
+    * incremental batch-vs-history probe and the streaming ingest's
+    * persisted hash set all key on it, so a doc hashes the same
+    * everywhere it is compared. */
+  def contentHash(text: Column): Column = sha2(lower(trim(text)), 256)
+
   /** Deterministic sampling/split bucket in [0, m): xorshift → modular
     * multiply → xorshift over a non-negative key, replayed verbatim in the
     * oracles (DuckDB `xor`/`>>`/`%`). The xorshift rounds make the bucket

@@ -3,6 +3,13 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** `oracle_sql.json`: one JSON object of query name → oracle SQL. Every
+    * control char is escaped — a tab or CR in the SQL must not make the
+    * driver's json.load fail and silently zero the correctness check. */
+  private[graft] def oracleJson(sql: Map[String, String]): String =
+    sql.map { case (k, v) => s"${Bench.jsonStr(k)}: ${Bench.jsonStr(v)}" }
+      .mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: run only these queries (local iteration aid;
@@ -29,21 +36,8 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${Bench.cause(e)}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
     // Tail-hardened self-check (same discipline as Bench): teardown FIRST
     // at ERROR log level, then one final stdout line with per-query ok/err
     // counts — a future CORRECTNESS artifact failure is diagnosable from

@@ -295,7 +295,7 @@ object CorpusFilters {
     val survivors = documents(s, d)
       .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))
       .where(col("n_tok") >= 10 && col("n_tok") <= 500)
-      .withColumn("h", sha2(lower(trim(col("text"))), 256))
+      .withColumn("h", Cols.contentHash(col("text")))
       .withColumn("rn",
         row_number().over(Window.partitionBy(col("h")).orderBy(col("doc_id"))))
       .where(col("rn") === 1)

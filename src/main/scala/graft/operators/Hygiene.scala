@@ -101,11 +101,12 @@ object Hygiene {
     * but block sizes grow LINEARLY with the corpus (the key space is
     * fixed at ~125 blocks), so Σ block² is still quadratic in n: measured
     * 88 → 8,965 → 901,746 candidate pairs across sf0.001/0.01/0.1 (×100
-    * per 10× data). `spark.graft.linkage.strategy` selects the candidate
-    * generator; both lanes produce the IDENTICAL match set (every
+    * per 10× data). [[linkageAutoChoice]] picks the candidate generator
+    * from the corpus; both lanes produce the IDENTICAL match set (every
     * candidate passes the same bounded Levenshtein verify — O(len·k)
     * banded DP, −1 past the bound — and RecordLinkageBlockSpec pins the
-    * equality on clean + adversarial corpora):
+    * equality on clean + adversarial corpora), so the pick is a pure cost
+    * choice with no correctness dimension:
     *
     *  - `block`: the plain within-block join. Fastest at the declared
     *    fixture SFs (≤ sf0.1, where the quadratic candidate mass is still
@@ -123,41 +124,36 @@ object Hygiene {
     *    near-linearly: symdel wins from sf0.2, ×4.7 at sf2 with 38× fewer
     *    candidates (BASELINE.md round 9, "Record-linkage crossover,
     *    measured — twice").
-    *  - `auto` (the DEFAULT since r13): one cheap pre-aggregate computes
-    *    BOTH lanes' decision variables and picks the lane the measured
-    *    crossover says is faster (see [[linkageAutoChoice]]). Every lane
-    *    returns the identical match set, so the dispatch is a pure cost
-    *    choice with no correctness dimension. At the ×8 grown
-    *    corpus block burned 26.1 s where auto picked symdel at 20.0 s
-    *    (BASELINE r12). Manual override stays available for operators
-    *    who know their corpus. */
-  def qRecordLinkage(s: SparkSession, d: String): DataFrame = {
-    val strategy =
-      s.conf.get("spark.graft.linkage.strategy", "auto")
-    linkageCandidates(s, d, strategy)
+    *
+    * At the ×8 grown corpus block burned 26.1 s where the pick (symdel)
+    * took 20.0 s (BASELINE r12). */
+  def qRecordLinkage(s: SparkSession, d: String): DataFrame =
+    recordLinkage(s, d, linkageAutoChoice(s, d)._1)
+
+  /** [[qRecordLinkage]] on a given candidate lane (`block` | `symdel`). */
+  private[graft] def recordLinkage(s: SparkSession, d: String,
+      lane: String): DataFrame =
+    linkageCandidates(s, d, lane)
       .withColumn("dist", levenshtein(col("a_name"), col("b_name"), 2))
       .where(col("dist") >= 0)
       .select(col("a_key"), col("b_key"), col("nationkey").cast("int"),
         col("segment"), col("dist").cast("long"))
       .transform(TrainingData.sortedOutput(col("a_key"), col("b_key")))
-  }
 
   /** Candidate-pair generator behind [[qRecordLinkage]]. Returns
     * (a_key, a_name, b_key, b_name, nationkey, segment) with
-    * a_key < b_key; every strategy yields a candidate SUPERSET of the true
+    * a_key < b_key; every lane yields a candidate SUPERSET of the true
     * ed ≤ 2 within-block pairs — the bounded-Levenshtein verify in
     * qRecordLinkage is the single source of truth for matches. */
   def linkageCandidates(s: SparkSession, d: String,
-      strategy: String): DataFrame = {
-    require(Set("block", "symdel", "auto")(strategy),
-      s"spark.graft.linkage.strategy must be block|symdel|auto, got $strategy")
-    if (strategy == "auto")
-      return linkageCandidates(s, d, linkageAutoChoice(s, d)._1)
+      lane: String): DataFrame = {
+    require(Set("block", "symdel")(lane),
+      s"linkage lane must be block or symdel, got $lane")
     val c = customer(s, d)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
         col("c_mktsegment"))
     val cand =
-      if (strategy == "block")
+      if (lane == "block")
         c.toDF("a_key", "a_name", "nationkey", "segment")
           .join(c.toDF("b_key", "b_name", "nationkey", "segment"),
             Seq("nationkey", "segment"))
@@ -205,7 +201,7 @@ object Hygiene {
       col("nationkey"), col("segment"))
   }
 
-  /** The `auto` strategy's decision, exposed for tools/specs: one
+  /** [[qRecordLinkage]]'s lane pick, exposed for specs: one
     * aggregate pass over the customer table computes the two lanes'
     * measured cost drivers —
     *  - `block_pairs` = Σ_blocks cnt·(cnt−1)/2, the exact candidate count

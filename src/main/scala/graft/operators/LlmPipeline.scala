@@ -38,7 +38,7 @@ object LlmPipeline {
     * no per-partition sort ever runs. */
   def qDedupExact(s: SparkSession, d: String): DataFrame =
     documents(s, d)
-      .withColumn("hash", sha2(lower(trim(col("text"))), 256))
+      .withColumn("hash", Cols.contentHash(col("text")))
       .groupBy(col("hash"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
       .select(col("doc_id"), col("hash"), col("n_copies"))
@@ -221,7 +221,6 @@ object LlmPipeline {
         && lit(1) + least(col("na") - col("ra"), col("nb") - col("rb")) >= alpha)
       .select(col("lang"), least(col("a_id"), col("b_id")).as("a_id"),
         greatest(col("a_id"), col("b_id")).as("b_id")).distinct()
-    val interCount = graft.functions.SortedIntersectCount.interCount(s) _
     // The verify stage fetches each side's shingle ARRAY by doc_id — with
     // NO join hint, like dfreq above. At this SF the optimizer broadcasts
     // the array table from size stats, so the candidate stream never
@@ -247,21 +246,12 @@ object LlmPipeline {
     // pure overhead (measured +2–4 s on the ×2 shard corpus) — so the
     // default applies the reduction only past the threshold, the same size
     // heuristic Spark's own runtime-filter rewrite uses. A mis-estimate
-    // costs only time, never rows. Conf: "false" = never, "force" =
-    // always (tests/A-B), anything else = stats-gated auto.
+    // costs only time, never rows; with broadcasting disabled
+    // (autoBroadcastJoinThreshold = -1) the probe always applies.
     val arrBase = docsSh.select(col("doc_id"), col("shs"))
-    val bloomOn =
-      s.conf.get("spark.graft.ngram.verifyBloom", "auto").toLowerCase match {
-        case "false" => false
-        // "true" is accepted as force: a boolean-intuition caller setting
-        // it must not silently land in the stats-gated branch and A/B two
-        // identical plans
-        case "force" | "true" => true
-        case _ =>
-          val thresh = s.sessionState.conf.autoBroadcastJoinThreshold
-          thresh < 0 ||
-            arrBase.queryExecution.optimizedPlan.stats.sizeInBytes > thresh
-      }
+    val thresh = s.sessionState.conf.autoBroadcastJoinThreshold
+    val bloomOn = thresh < 0 ||
+      arrBase.queryExecution.optimizedPlan.stats.sizeInBytes > thresh
     val (pairs, arr) =
       if (!bloomOn) (cand, arrBase)
       else {
@@ -280,9 +270,7 @@ object LlmPipeline {
     pairs
       .join(arr.toDF("a_id", "sha"), "a_id")
       .join(arr.toDF("b_id", "shb"), "b_id")
-      .withColumn("c", interCount(col("sha"), col("shb")))
-      .withColumn("jac", col("c").cast("double") /
-        (size(col("sha")) + size(col("shb")) - col("c")).cast("double"))
+      .transform(TrainingData.withShingleJaccard)
       .where(col("jac") >= theta)
       .select(col("a_id"), col("b_id"), col("lang"), Cols.r6(col("jac")).as("jac"))
       .transform(TrainingData.sortedOutput(col("a_id"), col("b_id")))

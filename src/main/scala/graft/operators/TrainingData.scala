@@ -163,22 +163,80 @@ object TrainingData {
         explode(split(col("text"), " ")).as("tok"))
     }
 
-  /** Corpus token dictionary: tok → dense 1-based id, lexicographic order.
-    * Ids come from `zipWithIndex` over the RANGE-SORTED distinct tokens, not
-    * a partition-less `row_number` window: the sort is a parallel range
-    * shuffle and the index job is two passes over partition counts, so a
-    * billions-token dictionary never collapses into one task. Partition
-    * order of a range-sorted RDD is the global order, so the ids are
-    * bit-identical to `row_number() OVER (ORDER BY tok)` (the oracle's
-    * formulation). */
+  /** Dense dictionary over `rows`' distinct string `key`: (key, id) with
+    * 1-based ids in lexicographic order. Ids come from `zipWithIndex` over
+    * the RANGE-SORTED distinct keys, not a partition-less `row_number`
+    * window: the sort is a parallel range shuffle and the index job is two
+    * passes over partition counts, so a billions-key dictionary never
+    * collapses into one task. Partition order of a range-sorted RDD is the
+    * global order, so the ids are bit-identical to
+    * `row_number() OVER (ORDER BY key)` (the oracles' formulation). */
+  private[graft] def denseIds(rows: DataFrame, key: String,
+      id: String): DataFrame = {
+    val s = rows.sparkSession
+    import s.implicits._
+    val sorted = rows.select(col(key)).distinct()
+      .orderBy(col(key)).as[String].rdd
+    s.createDataFrame(sorted.zipWithIndex().map { case (t, i) => (t, i + 1L) })
+      .toDF(key, id)
+  }
+
+  /** Corpus token dictionary: tok → dense 1-based id ([[denseIds]]). */
   private[operators] def vocab(s: SparkSession, d: String): DataFrame =
-    cached("vocab", s, d) {
-      import s.implicits._
-      val sorted = docToks(s, d).select(col("tok")).distinct()
-        .orderBy(col("tok")).as[String].rdd
-      s.createDataFrame(sorted.zipWithIndex().map { case (t, i) => (t, i + 1L) })
-        .toDF("tok", "tok_id")
+    cached("vocab", s, d) { denseIds(docToks(s, d), "tok", "tok_id") }
+
+  /** (k lanes, r rows per band) from `spark.graft.minhash.k` / `.r`,
+    * defaults 8 / 4 (the declared sketch the oracle replays). */
+  private[graft] def minhashGeometry(s: SparkSession): (Int, Int) = {
+    val k = s.conf.get("spark.graft.minhash.k", "8").toInt
+    val r = s.conf.get("spark.graft.minhash.r", "4").toInt
+    require(k > 0 && r > 0 && k % r == 0,
+      s"spark.graft.minhash: k ($k) must be a positive multiple of r ($r)")
+    (k, r)
+  }
+
+  /** MinHash LSH band rows: one row per (doc, band) from `mh`'s
+    * (doc_id, lang, sig), carrying the band index and its `r` lanes as
+    * x0..x(r−1), then the `keep` columns. A pair is a candidate iff it
+    * equi-joins on (lang, band, x0..x(r−1)), so every band index — batch,
+    * incremental and the streaming ingest's persisted one — must be built
+    * here to stay probeable against the others. */
+  private[graft] def bandRows(mh: DataFrame, k: Int, r: Int,
+      keep: Column*): DataFrame = {
+    val bandStructs = (0 until k / r).map { j =>
+      struct((lit(j).as("band") +:
+        (0 until r).map(i => col("sig")(r * j + i).as(s"x$i"))): _*)
     }
+    mh.select((Seq(col("doc_id"), col("lang"),
+        explode(array(bandStructs: _*)).as("b")) ++ keep): _*)
+      .select((Seq(col("doc_id"), col("lang"), col("b.band").as("band")) ++
+        (0 until r).map(i => col(s"b.x$i").as(s"x$i")) ++ keep): _*)
+  }
+
+  /** Exact shingle-set Jaccard of the sorted distinct hash arrays `sha`
+    * and `shb`: adds `c` (their intersection count, the native merge
+    * kernel) and `jac` = c / (|sha| + |shb| − c) in double arithmetic.
+    * The sketch tiers only generate candidates; this is the verdict. */
+  private[graft] def withShingleJaccard(pairs: DataFrame): DataFrame = {
+    val interCount =
+      graft.functions.SortedIntersectCount.interCount(pairs.sparkSession) _
+    pairs.withColumn("c", interCount(col("sha"), col("shb")))
+      .withColumn("jac", col("c").cast("double") /
+        (size(col("sha")) + size(col("shb")) - col("c")).cast("double"))
+  }
+
+  /** The per-doc dedup verdict of a batch-vs-history probe: `exact`'s
+    * columns (ending in `exact_dup`), then `near_dup` (the doc_id appears
+    * in `near`) and `status` — exact_dup beats near_dup beats new. */
+  private[graft] def dedupStatus(exact: DataFrame,
+      near: DataFrame): DataFrame =
+    exact
+      .join(near.select(col("doc_id")).distinct().withColumn("nr", lit(true)),
+        Seq("doc_id"), "left")
+      .withColumn("near_dup", coalesce(col("nr"), lit(false)))
+      .select((exact.columns.toSeq.map(col) :+ col("near_dup") :+
+        when(col("exact_dup"), "exact_dup").when(col("near_dup"), "near_dup")
+          .otherwise("new").as("status")): _*)
 
   /** Join `left` (keyed by `tok`) to the dictionary — the one
     * corpus-DERIVED asset this module broadcasts, with the argument
@@ -226,12 +284,8 @@ object TrainingData {
     * through the identical join shape, trading only sketch bytes and band
     * count. */
   def qDedupMinhash(s: SparkSession, d: String): DataFrame = {
-    val k = s.conf.get("spark.graft.minhash.k", "8").toInt
-    val r = s.conf.get("spark.graft.minhash.r", "4").toInt
+    val (k, r) = minhashGeometry(s)
     val theta = s.conf.get("spark.graft.minhash.threshold", "0.75").toDouble
-    require(k > 0 && r > 0 && k % r == 0,
-      s"spark.graft.minhash: k ($k) must be a positive multiple of r ($r)")
-    val bandsN = k / r
     val tv = vocabJoin(s, d, docToks(s, d))
     // Signatures come from the ONE-PASS native aggregate (MinHashAgg): all
     // k lanes fold into a single primitive buffer with map-side partials —
@@ -244,14 +298,7 @@ object TrainingData {
     // Band rows CARRY the full signature: the band self-join then yields both
     // docs' k minhashes directly, so the signature table is computed once and
     // no candidate→signature re-join (2 extra shuffles) is needed.
-    val bandStructs = (0 until bandsN).map { j =>
-      struct((lit(j).as("band") +:
-        (0 until r).map(i => col("sig")(r * j + i).as(s"x$i"))): _*)
-    }
-    val bands = mh.select(col("doc_id"), col("lang"),
-        explode(array(bandStructs: _*)).as("b"), col("sig"))
-      .select((Seq(col("doc_id"), col("lang"), col("b.band").as("band")) ++
-        (0 until r).map(i => col(s"b.x$i").as(s"x$i")) :+ col("sig")): _*)
+    val bands = bandRows(mh, k, r, col("sig"))
     // Match count and earlier-band predicate are the NATIVE kernels
     // (lanes_equal_count, grouped bands_match_before), not k-term /
     // (bands−1)·r-term unrolled column expressions: the unrolled forms
@@ -669,7 +716,7 @@ object TrainingData {
   def qIncrementalDedup(s: SparkSession, d: String): DataFrame = {
     val isNew = col("doc_id") % 10 === 2
     val hashes = documents(s, d).select(col("doc_id"), col("lang"),
-      isNew.as("is_new"), sha2(lower(trim(col("text"))), 256).as("h"))
+      isNew.as("is_new"), Cols.contentHash(col("text")).as("h"))
     val histH = hashes.where(!col("is_new")).select(col("h")).distinct()
       .withColumn("ex", lit(true))
     // MERGE-PINNED (r15, AqeFlipAudit): histH is the DISTINCT HISTORY
@@ -684,20 +731,14 @@ object TrainingData {
         coalesce(col("ex"), lit(false)).as("exact_dup"))
     // distinct char-5-gram STRINGS per doc (strings, not rolling hashes:
     // the dictionary ids must replay in the oracle) joined to a dense
-    // shingle dictionary built with the vocab zipWithIndex discipline
+    // shingle dictionary
     val docSh = cached("docShStrings", s, d) {
       documents(s, d).where(length(col("text")) >= 5)
         .select(col("doc_id"), col("lang"), explode(array_distinct(expr(
           "transform(sequence(1, length(text) - 4), " +
             "i -> substring(text, i, 5))"))).as("sh"))
     }
-    val shVocab = cached("shVocab", s, d) {
-      import s.implicits._
-      val sorted = docSh.select(col("sh")).distinct()
-        .orderBy(col("sh")).as[String].rdd
-      s.createDataFrame(sorted.zipWithIndex().map { case (t, i) => (t, i + 1L) })
-        .toDF("sh", "sh_id")
-    }
+    val shVocab = cached("shVocab", s, d) { denseIds(docSh, "sh", "sh_id") }
     val tv = docSh.join(shVocab, "sh")
     val sig = graft.functions.MinHashAgg.minhashSig(s) _
     // |docs| rows; referenced by BOTH band-join sides — persist so the
@@ -706,14 +747,7 @@ object TrainingData {
       tv.groupBy(col("doc_id"), col("lang"))
         .agg(sig(col("sh_id")).as("sig"))
     }
-    val bands = mh.select(col("doc_id"), col("lang"),
-      explode(array(
-        struct(lit(0).as("band"), col("sig")(0).as("x0"), col("sig")(1).as("x1"),
-          col("sig")(2).as("x2"), col("sig")(3).as("x3")),
-        struct(lit(1).as("band"), col("sig")(4).as("x0"), col("sig")(5).as("x1"),
-          col("sig")(6).as("x2"), col("sig")(7).as("x3")))).as("b"))
-      .select((Seq(col("doc_id"), col("lang"), col("b.band").as("band")) ++
-        (0 until 4).map(i => col(s"b.x$i").as(s"x$i"))): _*)
+    val bands = bandRows(mh, 8, 4)
     // candidate gate: the batch probes the history band index (at scale a
     // pre-materialized asset) — a pair is a candidate iff some band's 4
     // lanes all match; candidates then get the EXACT shingle-Jaccard
@@ -733,22 +767,12 @@ object TrainingData {
       documents(s, d).where(length(col("text")) >= 5)
         .select(col("doc_id"), shingles(col("text"), 5).as("shs"))
     }
-    val interCount = graft.functions.SortedIntersectCount.interCount(s) _
     val near = cand
       .join(arr.toDF("doc_id", "sha"), "doc_id")
       .join(arr.toDF("b_id", "shb"), "b_id")
-      .withColumn("c", interCount(col("sha"), col("shb")))
-      .where(col("c").cast("double") /
-        (size(col("sha")) + size(col("shb")) - col("c")).cast("double") >= 0.8)
-      .select(col("doc_id")).distinct()
-      .withColumn("nr", lit(true))
-    exact.join(near, Seq("doc_id"), "left")
-      .withColumn("near_dup", coalesce(col("nr"), lit(false)))
-      .select(col("doc_id"), col("lang"), col("exact_dup"), col("near_dup"),
-        when(col("exact_dup"), "exact_dup")
-          .when(col("near_dup"), "near_dup")
-          .otherwise("new").as("status"))
-      .transform(sortedOutput(col("doc_id")))
+      .transform(withShingleJaccard)
+      .where(col("jac") >= 0.8)
+    dedupStatus(exact, near).transform(sortedOutput(col("doc_id")))
   }
 
   val queries: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(

@@ -132,8 +132,10 @@ object Windows {
     * whose time falls in the bound, regardless of how many). One shuffle on
     * user_id; frame evaluation is a per-partition sliding two-pointer.
     *
-    * Skew lanes (`spark.graft.winrange.strategy`, r13 — the window-head
-    * skew ladder's verdict, BASELINE r13):
+    * Skew lanes (r13 — the window-head skew ladder's verdict, BASELINE
+    * r13); [[winRangeAutoChoice]] picks one from the corpus's own
+    * hot-user mass. Both lanes are row-identical (WinRangeLaneSpec pins
+    * it, clean + hot-key corpora), so the pick is a pure cost choice:
     *
     *  - `plain`: the one-shuffle per-user window above. The
     *    100 TB hazard is a single hot user: the whole stream sorts in
@@ -148,51 +150,36 @@ object Windows {
     *    CONTEXT row in the next bucket — and the window partitions by
     *    (user_id, bucket) instead of user_id. Frames never cross a
     *    partition boundary (every in-frame row is present locally),
-    *    context rows are dropped after evaluation, and the result is
-    *    row-identical to plain (WinRangeLaneSpec pins it, clean +
-    *    hot-key corpora). The hot key now splits across span/30min
-    *    tasks: measured 22.8 s → 3.63 s (×6.3) at the ×32 hot cell
-    *    (3.1M-row hot key), near-linear across the whole ladder, at
-    *    the cost of a 2× pre-shuffle row mass — 0.42 → 0.52 s at the
-    *    skew-free ×1 cell (BASELINE r13 "Window-head skew ladder").
-    *  - `auto` (r14, the DEFAULT — the linkage-auto doctrine applied):
-    *    [[winRangeAutoChoice]]'s one cheap pre-aggregate picks the lane
-    *    from the corpus's own hot-user mass. Both lanes are
-    *    result-identical (WinRangeLaneSpec + the `graftlanes` parity
-    *    arm), so the dispatch is a pure cost choice with no correctness
-    *    dimension — the same safety class that made linkage flip to
-    *    auto in r13.
-    *    DEFAULT DECISION (r14, written): auto, not plain. plain's loss
-    *    on a hot corpus is UNBOUNDED (×2.1–2.3 per ×2 hot mass — the
-    *    measured ladder reaches ×6.3 and still bends) while bucketed's
-    *    loss on a skew-free corpus is BOUNDED (the ~×1.25 2×-mass tax),
-    *    so a default that cannot see the corpus must buy the cheap
-    *    insurance: one map-side-combined single-column aggregate over
-    *    events. Its measured price at the declared shape is +0.25 s on
-    *    plain's 0.47 s (sf0.1, BASELINE r14 "q_win_range auto lane") —
-    *    dominated by fixed
-    *    job-launch overhead at local scale, NOT by the pass itself,
-    *    and the trade inverts with size: the decision reads one column
-    *    and combines map-side while the window shuffles and sorts full
-    *    rows, so the relative insurance premium shrinks at 100 TB
-    *    exactly where plain's unbounded hot-key loss grows. The
-    *    per-call decision is deliberate (no per-corpus memo): one real
-    *    deployment query pays it once; the bench repping it is the
-    *    honest per-query cost.
-    *    Manual `plain` stays available for operators who KNOW their
-    *    corpus is skew-free and want the decision pass back. */
-  def qWinRange(s: SparkSession, d: String): DataFrame = {
+    *    and context rows are dropped after evaluation. The hot key now
+    *    splits across span/30min tasks: measured 22.8 s → 3.63 s (×6.3)
+    *    at the ×32 hot cell (3.1M-row hot key), near-linear across the
+    *    whole ladder, at the cost of a 2× pre-shuffle row mass — 0.42 →
+    *    0.52 s at the skew-free ×1 cell (BASELINE r13 "Window-head skew
+    *    ladder").
+    *
+    * Why the query always pays for the pick (r14): plain's loss on a hot
+    * corpus is UNBOUNDED (×2.1–2.3 per ×2 hot mass) while bucketed's loss
+    * on a skew-free corpus is BOUNDED (the ~×1.25 2×-mass tax), so a
+    * query that cannot see the corpus must buy the cheap insurance: one
+    * map-side-combined single-column aggregate over events. Its measured
+    * price at the declared shape is +0.25 s on plain's 0.47 s (sf0.1,
+    * BASELINE r14 "q_win_range auto lane") — fixed job-launch overhead
+    * at local scale — and the relative premium shrinks at 100 TB, where
+    * the window shuffles and sorts full rows. */
+  def qWinRange(s: SparkSession, d: String): DataFrame =
+    winRange(s, d, winRangeAutoChoice(s, d)._1)
+
+  /** [[qWinRange]] on a given lane (`plain` | `bucketed`). */
+  private[graft] def winRange(s: SparkSession, d: String,
+      lane: String): DataFrame = {
+    require(Set("plain", "bucketed")(lane),
+      s"winrange lane must be plain or bucketed, got $lane")
     val HalfHourUs = 1800000000L
-    val conf = s.conf.get("spark.graft.winrange.strategy", "auto")
-    require(Set("plain", "bucketed", "auto")(conf),
-      s"spark.graft.winrange.strategy must be plain, bucketed or auto, got $conf")
-    val strategy =
-      if (conf == "auto") winRangeAutoChoice(s, d)._1 else conf
     val base = events(s, d)
       .select(col("event_id"), col("user_id"),
         Cols.epochUs(col("ts")).as("us"), col("value"))
     val framed =
-      if (strategy == "plain") {
+      if (lane == "plain") {
         val w = Window.partitionBy(col("user_id")).orderBy(col("us"))
           .rangeBetween(-HalfHourUs, 0)
         base.select(col("user_id"), col("event_id"), col("us"),
@@ -224,9 +211,9 @@ object Windows {
     framed.orderBy("user_id", "us", "event_id")
   }
 
-  /** The `auto` strategy's decision, exposed for tools/specs — the
+  /** [[qWinRange]]'s lane pick, exposed for specs — the
     * [[graft.operators.Hygiene.linkageAutoChoice]] discipline applied to
-    * the window-lane dial. One map-side-combined aggregate over events
+    * the window lanes. One map-side-combined aggregate over events
     * computes the two lanes' cost drivers — `hot` = the largest single
     * user's row count (plain's whole hot stream sorts and slides in ONE
     * task) and `total` = the corpus row count (bucketed's wall is linear

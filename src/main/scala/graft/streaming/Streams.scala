@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.TrainingData
+
 /** Structured Streaming twins of the batch event-time operators
   * ([[graft.operators.EventTime]], SURVEY §2.9).
   *
@@ -180,7 +182,7 @@ object Streams {
       df.where(col("src_batch") < batchId)
     }
     val hashed = batch.select(col("doc_id"), col("lang"), col("text"),
-      sha2(lower(trim(col("text"))), 256).as("h"))
+      graft.Cols.contentHash(col("text")).as("h"))
     val histH = hist("hashes", StructType(Seq(
         StructField("h", StringType), StructField("src_batch", LongType))))
       .select(col("h")).distinct().withColumn("ex", lit(true))
@@ -190,10 +192,7 @@ object Streams {
 
     // Sketch geometry from the production dials, pinned per asset dir:
     // the persisted band index only matches probes built at the same (k, r).
-    val k = s.conf.get("spark.graft.minhash.k", "8").toInt
-    val r = s.conf.get("spark.graft.minhash.r", "4").toInt
-    require(k > 0 && r > 0 && k % r == 0,
-      s"spark.graft.minhash: k ($k) must be a positive multiple of r ($r)")
+    val (k, r) = TrainingData.minhashGeometry(s)
     val marker = new org.apache.hadoop.fs.Path(s"$assetDir/sketch.conf")
     if (fs.exists(marker)) {
       val in = fs.open(marker)
@@ -232,20 +231,12 @@ object Streams {
     }
     val shingles = graft.functions.ShingleHashes.shingles(s) _
     val sigFn = graft.functions.MinHashAgg.minhashSigK(s, k) _
-    val interCount = graft.functions.SortedIntersectCount.interCount(s) _
     val arr = hashed.where(length(col("text")) >= 5)
       .select(col("doc_id"), col("lang"), shingles(col("text"), 5).as("shs"))
     val mh = arr.select(col("doc_id"), col("lang"), explode(col("shs")).as("hs"))
       .groupBy(col("doc_id"), col("lang")).agg(sigFn(col("hs")).as("sig"))
-    val bandStructs = (0 until k / r).map { j =>
-      struct((lit(j).as("band") +:
-        (0 until r).map(i => col("sig")(r * j + i).as(s"x$i"))): _*)
-    }
     val xCols = (0 until r).map(i => s"x$i")
-    val bandsNew = mh.select(col("doc_id"), col("lang"),
-        explode(array(bandStructs: _*)).as("b"))
-      .select((Seq(col("doc_id"), col("lang"), col("b.band").as("band")) ++
-        xCols.map(c => col(s"b.$c").as(c))): _*)
+    val bandsNew = TrainingData.bandRows(mh, k, r)
     val bandSchema = StructType(
       (Seq(StructField("b_id", LongType), StructField("lang", StringType),
         StructField("band", IntegerType)) ++
@@ -264,17 +255,9 @@ object Streams {
     val near = cand
       .join(arr.select(col("doc_id"), col("shs").as("sha")), "doc_id")
       .join(histA, "b_id")
-      .withColumn("c", interCount(col("sha"), col("shb")))
-      .where(col("c").cast("double") /
-        (size(col("sha")) + size(col("shb")) - col("c")).cast("double") >= 0.8)
-      .select(col("doc_id")).distinct().withColumn("nr", lit(true))
-
-    val status = exact.join(near, Seq("doc_id"), "left")
-      .withColumn("near_dup", coalesce(col("nr"), lit(false)))
-      .select(col("doc_id"), col("lang"), col("h"), col("exact_dup"),
-        col("near_dup"),
-        when(col("exact_dup"), "exact_dup").when(col("near_dup"), "near_dup")
-          .otherwise("new").as("status"))
+      .transform(TrainingData.withShingleJaccard)
+      .where(col("jac") >= 0.8)
+    val status = TrainingData.dedupStatus(exact, near)
     status.write.mode("overwrite")
       .parquet(s"$assetDir/status/src_batch=$batchId")
     // the audit log just written is the single materialized truth; asset

@@ -102,18 +102,6 @@ object ConfParity {
     // pushed filters' parquet-level NULL/NaN comparison semantics (a
     // classic cross-layer divergence class at the scan).
     Arm("nopushdown", Map("spark.sql.parquet.filterPushdown" -> "false")),
-    // Round-13 arm: every graft-owned STRATEGY dial flipped to a
-    // non-default lane at once. Both are declared result-identical lanes
-    // (linkage: every candidate generator feeds the same exact verify;
-    // winrange: bucket+context covers every frame — the WinRangeLaneSpec
-    // soundness argument (bucketed stays the flipped lane after r14's
-    // auto default: auto picks plain on the skew-free fixture, so
-    // bucketed remains the non-base path)), so zero diffs here is the
-    // full-surface hash proof of the lane laws, not just the
-    // per-operator spec corpora.
-    Arm("graftlanes", Map(
-      "spark.graft.linkage.strategy" -> "symdel",
-      "spark.graft.winrange.strategy" -> "bucketed")),
   )
 
   /** Negative control, NOT in the default arm set: a session-timezone flip
@@ -196,7 +184,7 @@ object ConfParity {
             else Right(Right(canon(df)))
           } catch {
             case NonFatal(e) =>
-              Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
+              Left(graft.Bench.cause(e))
           }
         name -> res
       }.toMap

@@ -52,13 +52,7 @@ object RetryProbe {
       .select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ")).as("tok"))
       .where(length(col("tok")) > 0)
-    val vocab = {
-      import s.implicits._
-      val sorted = tok.select(col("tok")).distinct().orderBy(col("tok"))
-        .as[String].rdd
-      s.createDataFrame(sorted.zipWithIndex().map { case (t, i) => (t, i + 1L) })
-        .toDF("tok", "tok_id")
-    }
+    val vocab = graft.operators.TrainingData.denseIds(tok, "tok", "tok_id")
     val sig = graft.functions.MinHashAgg.minhashSig(s) _
     val mh0 = tok.join(vocab, "tok")
       .groupBy(col("doc_id"))

@@ -70,11 +70,12 @@ class DedupEdgeSpec extends SparkSpec {
       LlmPipeline.qDedupNgram(spark, sfDir("sf0.001")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
         .toSeq
-    spark.conf.set("spark.graft.ngram.verifyBloom", "false")
-    val without = try run() finally
-      spark.conf.set("spark.graft.ngram.verifyBloom", "force")
+    // the fixture sits under the stats gate (no probe); with broadcasting
+    // disabled the gate always plants it
+    val without = run()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val withBloom = try run() finally
-      spark.conf.unset("spark.graft.ngram.verifyBloom")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert(withBloom === without)
     assert(withBloom.nonEmpty, "fixture must exercise the verify join")
   }

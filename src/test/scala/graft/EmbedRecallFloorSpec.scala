@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.tools.EmbedTwinProbe
-
 /** Permanent CI floors for the planted-twin recall numbers in BASELINE's
   * "Embed LSH follow-through" table (r9 verdict item 5 → r10): the four
   * measured LSH geometries must keep recalling exact-cosine twins at the

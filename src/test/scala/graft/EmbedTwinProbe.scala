@@ -1,4 +1,4 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -18,7 +18,7 @@ object EmbedTwinProbe {
 
   /** Builds (once, idempotent) the planted-twin corpus under
     * `workDir/n{n}_p{plant}` and returns that dir — shared with
-    * [[graft.EmbedRecallFloorSpec]] so the CI recall floors grade the
+    * [[EmbedRecallFloorSpec]] so the CI recall floors grade the
     * exact plant construction the BASELINE table was measured on. */
   def plantCorpus(spark: SparkSession, workDir: String, n: Int,
       plant: Int): String = {

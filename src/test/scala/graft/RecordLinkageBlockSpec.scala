@@ -4,11 +4,11 @@ import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
-/** Pins qRecordLinkage's candidate strategies
-  * (`spark.graft.linkage.strategy` = block | symdel | auto) to one match
-  * set: symdel rests on the symmetric-deletion argument (an optimal
-  * ≤2-edit script maps to ≤ 2 deletions per side), so any divergence is
-  * a soundness bug, not a tuning choice.
+/** Pins qRecordLinkage's candidate lanes (block | symdel, and the query's
+  * own pick between them) to one match set: symdel rests on the
+  * symmetric-deletion argument (an optimal ≤2-edit script maps to ≤ 2
+  * deletions per side), so any divergence is a soundness bug, not a
+  * tuning choice.
   *
   * Beyond the fixture (whose names are uniform-length with digit
   * suffixes), the adversarial table exercises exactly the shapes that
@@ -18,17 +18,17 @@ import org.apache.spark.sql.functions._
   * multi-char-codepoint names. */
 class RecordLinkageBlockSpec extends SparkSpec {
 
+  private def pairs(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+      r.getString(3), r.getLong(4))).toSeq
+
   private def canon(d: String): Seq[(Long, Long, Int, String, Long)] =
-    operators.Hygiene.qRecordLinkage(spark, d).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getString(3),
-        r.getLong(4))).toSeq
+    pairs(operators.Hygiene.qRecordLinkage(spark, d))
 
   private def ab(d: String): Unit = {
-    val plain = canon(d) // default strategy = auto (r13 flip)
+    val plain = canon(d) // the query's own lane pick
     for (arm <- Seq("block", "symdel")) {
-      spark.conf.set("spark.graft.linkage.strategy", arm)
-      val got = try canon(d)
-        finally spark.conf.unset("spark.graft.linkage.strategy")
+      val got = pairs(operators.Hygiene.recordLinkage(spark, d, arm))
       assert(got == plain,
         s"$arm changed the match set: $arm ${got.size} vs " +
           s"plain ${plain.size} pairs; $arm-only " +
@@ -39,6 +39,7 @@ class RecordLinkageBlockSpec extends SparkSpec {
 
   test("symdel and block lanes match auto on the clean fixture") {
     ab(sfDir("sf0.001"))
+    ab(sfDir("sf0.01"))
   }
 
   test("symdel and block lanes match auto on adversarial name shapes") {
@@ -142,14 +143,9 @@ class RecordLinkageBlockSpec extends SparkSpec {
     assert(skew._1 == "symdel",
       s"one dense block of short names must flip the dispatch: $skew")
     assert(skew._2 == 60L * 59 / 2, s"block_pairs must be exact: $skew")
-    // the flipped lane still returns block's match set (pin the exact
-    // lane explicitly — since r13 the conf-free default IS auto)
-    spark.conf.set("spark.graft.linkage.strategy", "block")
-    val plain = try canon(dir)
-      finally spark.conf.unset("spark.graft.linkage.strategy")
-    spark.conf.set("spark.graft.linkage.strategy", "auto")
-    val auto = try canon(dir)
-      finally spark.conf.unset("spark.graft.linkage.strategy")
+    // the flipped lane still returns block's match set
+    val plain = pairs(operators.Hygiene.recordLinkage(spark, dir, "block"))
+    val auto = canon(dir)
     assert(auto == plain,
       s"auto changed the match set: ${auto.size} vs ${plain.size}")
     assert(plain.nonEmpty, "vacuous: zero pairs on the skew corpus")

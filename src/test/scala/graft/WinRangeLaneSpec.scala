@@ -14,15 +14,17 @@ import org.apache.spark.sql.functions._
   * exploded into. Any divergence is a soundness bug, not tuning. */
 class WinRangeLaneSpec extends SparkSpec {
 
-  private def lane(d: String, strategy: String) = {
-    spark.conf.set("spark.graft.winrange.strategy", strategy)
-    try operators.Windows.qWinRange(spark, d).collect().toSeq
-    finally spark.conf.unset("spark.graft.winrange.strategy")
-  }
+  private def lane(d: String, name: String) =
+    operators.Windows.winRange(spark, d, name).collect().toSeq
+
+  private def auto(d: String) =
+    operators.Windows.qWinRange(spark, d).collect().toSeq
 
   test("bucketed == plain on the clean fixture") {
-    val d = sfDir("sf0.001")
-    assert(lane(d, "bucketed") == lane(d, "plain"))
+    for (tier <- Seq("sf0.001", "sf0.01")) {
+      val d = sfDir(tier)
+      assert(lane(d, "bucketed") == lane(d, "plain"), tier)
+    }
   }
 
   test("bucketed == plain on a hot-user corpus with boundary-exact ties") {
@@ -62,7 +64,7 @@ class WinRangeLaneSpec extends SparkSpec {
     assert(hotChoice == "bucketed" && hot >= 400 && total == 452L,
       s"auto on the hot corpus: ($hotChoice, $hot, $total)")
     // ...and the auto LANE must be row-identical to plain end-to-end
-    assert(lane(dir, "auto") == plain)
+    assert(auto(dir) == plain)
   }
 
   test("auto picks plain on the skew-free fixture and matches it") {
@@ -73,13 +75,6 @@ class WinRangeLaneSpec extends SparkSpec {
       s"auto on the clean fixture: ($choice, $hot, $total)")
     assert(hot * spark.conf.get("spark.sql.shuffle.partitions").toLong
       <= 2L * total)
-    assert(lane(d, "auto") == lane(d, "plain"))
-  }
-
-  test("unknown strategy is a loud error") {
-    spark.conf.set("spark.graft.winrange.strategy", "bogus")
-    try intercept[IllegalArgumentException] {
-      operators.Windows.qWinRange(spark, sfDir("sf0.001"))
-    } finally spark.conf.unset("spark.graft.winrange.strategy")
+    assert(auto(d) == lane(d, "plain"))
   }
 }

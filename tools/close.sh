@@ -159,12 +159,8 @@ PY
 
 bench_once() {
   local log; log=$(mktemp)
-  # ACTION pinned to noop (r13 ADVICE): an inherited ACTION=count env
-  # would silently run the v1 protocol while the quiet-band guard and
-  # the re-based watch thresholds assume v2.
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   SPARK_GRAFT_BENCH_REPS=3 SPARK_GRAFT_BENCH_SRC=close \
-  SPARK_GRAFT_BENCH_ACTION=noop \
     sbt --batch "runMain graft.Bench" >"$log" 2>&1
   local rc=$?
   bench_total_line=$(grep -o '{"metric":"total".*}' "$log" | tail -1)

@@ -207,7 +207,7 @@ object Bench {
       q -> (System.nanoTime() - t0) / 1e9
     } finally graft.operators.TrainingData.eagerAssetTiming = false
     val warmAssets = graft.operators.TrainingData.assetBuildSecs
-      .toSeq.sortBy(-_._2)
+      .toSeq.collect { case ((`sfDir`, a), secs) => a -> secs }.sortBy(-_._2)
     val warmup = (System.nanoTime() - w0) / 1e9
     // Fixed query order shared by every pass (stable map iteration order
     // per JVM, but pin it explicitly so passes are strictly comparable).

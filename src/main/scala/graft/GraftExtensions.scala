@@ -2,16 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{BloomAgg, BloomMightContain, BottomKAgg, FloatVectorDot, MinHashAgg, SortedIntersectCount}
+import graft.functions.NativeFunctions
 
-/** Canonical integration point: sessions built with
-  * `spark.sql.extensions=graft.GraftExtensions` get the native expressions
-  * as SQL-callable functions (`SELECT vec_dot_f(a, b)`), no imperative
-  * registration needed. The Scala helpers (`FloatVectorDot.dotF`,
-  * `SortedIntersectCount.interCount`) remain self-registering for sessions
-  * created without the config. */
+/** The one place graft enters a session: sessions built with
+  * `spark.sql.extensions=graft.GraftExtensions` get the optimizer rules,
+  * the top-k planner strategy and every native function of
+  * [[NativeFunctions.all]] as SQL-callable functions
+  * (`SELECT vec_dot_f(a, b)`). The Column helpers in `graft.functions`
+  * only call them by name. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // Opt-in range-join binning (spark.graft.rangeJoin.binWidth) — rewrites
@@ -25,32 +25,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // partial→final bounded-heap passes (map-side k-reduction the window
     // formulation cannot do).
     ext.injectPlannerStrategy(_ => new graft.plans.TopKPerKeyStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot_f"),
-      new ExpressionInfo(classOf[FloatVectorDot].getName, "vec_dot_f"),
-      (exprs: Seq[Expression]) => FloatVectorDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName,
-        "sorted_intersect_count"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashAgg(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(classOf[BloomAgg].getName, "graft_bloom_agg"),
-      (exprs: Seq[Expression]) => BloomAgg(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName,
-        "graft_bloom_might_contain"),
-      (exprs: Seq[Expression]) => BloomMightContain(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bottom_k"),
-      new ExpressionInfo(classOf[BottomKAgg].getName, "bottom_k"),
-      (exprs: Seq[Expression]) => BottomKAgg(exprs.head,
-        graft.functions.FnArgs.literalInt(exprs(1), "bottom_k", "k"))))
+    for (f <- NativeFunctions.all)
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.builder))
   }
 }

@@ -17,24 +17,29 @@ object Tables {
   /** Footer-schema cache (r15, guide §6 metadata caching): every
     * `spark.read.parquet` call without a schema runs a footer-inference
     * job before planning — one small job per table() call, hundreds per
-    * bench pass (138 queries × reps × their tables). The SCHEMA of a
-    * fixture table is immutable within a JVM, so read it from the footer
-    * once per (dir, table) and pass it explicitly afterwards; the data
-    * path (scan, pushdown, pruning) is untouched — this caches metadata
-    * the way a lake catalog/manifest does at 100 TB, never rows. Keyed
-    * per directory because the same table can ship different physical
-    * types across fixture generations (see events below). */
+    * bench pass (138 queries × reps × their tables). So read the schema
+    * from the footer once per file version and pass it explicitly
+    * afterwards; the data path (scan, pushdown, pruning) is untouched —
+    * this caches metadata the way a lake catalog/manifest does at 100 TB,
+    * never rows. An entry is keyed by the table's path and holds the
+    * modification time and length it was read at: a rewritten table (the
+    * same name can ship different physical types, see events below)
+    * fails that stamp and is re-read, at the cost of one file stat per
+    * call. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.types.StructType]()
+    String, ((Long, Long), org.apache.spark.sql.types.StructType)]()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val cached = schemaCache.get((sfDir, name))
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaCache.putIfAbsent((sfDir, name), df.schema)
-      df
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val stamp = (st.getModificationTime, st.getLen)
+    schemaCache.get(path) match {
+      case (`stamp`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemaCache.put(path, (stamp, df.schema))
+        df
     }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType}
 
 /** Native expression: does any band BEFORE position `pos` match between
@@ -102,29 +102,16 @@ case class BandsMatchBefore(left: Expression, right: Expression,
 }
 
 object BandsMatchBefore {
-  private val name = "bands_match_before"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BandsMatchBefore(exprs.head, exprs(1), exprs(2),
-        if (exprs.length > 3) FnArgs.literalInt(exprs(3), name, "width")
-        else 1),
-      "scala_udf")
-
   /** True iff the two packed band arrays agree at any index < pos. */
   def matchBefore(spark: SparkSession)(a: Column, b: Column,
-      pos: Column): Column = {
-    register(spark)
-    call_function(name, a, b, pos)
-  }
+      pos: Column): Column =
+    call_function("bands_match_before", a, b, pos)
 
   /** Grouped form: true iff any group of `width` consecutive lanes
     * before group index `pos` agrees completely — the minhash
     * earlier-band predicate, where band j = lanes j·width..j·width+
     * width−1 of the carried signatures. */
   def matchBeforeGrouped(spark: SparkSession)(a: Column, b: Column,
-      pos: Column, width: Int): Column = {
-    register(spark)
-    call_function(name, a, b, pos, org.apache.spark.sql.functions.lit(width))
-  }
+      pos: Column, width: Int): Column =
+    call_function("bands_match_before", a, b, pos, lit(width))
 }

@@ -171,25 +171,11 @@ case class BloomMightContain(left: Expression, right: Expression)
 }
 
 object BloomFilter {
-  private val aggName = "graft_bloom_agg"
-  private val probeName = "graft_bloom_might_contain"
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      aggName, exprs => BloomAgg(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      probeName, exprs => BloomMightContain(exprs.head, exprs(1)), "scala_udf")
-  }
-
   /** Aggregate column: Bloom filter (array<bigint>) of a bigint key column. */
-  def bloomAgg(spark: SparkSession)(key: Column): Column = {
-    register(spark)
-    call_function(aggName, key)
-  }
+  def bloomAgg(spark: SparkSession)(key: Column): Column =
+    call_function("graft_bloom_agg", key)
 
   /** Probe column: true iff `key` may be in `bloom` (no false negatives). */
-  def mightContain(spark: SparkSession)(bloom: Column, key: Column): Column = {
-    register(spark)
-    call_function(probeName, bloom, key)
-  }
+  def mightContain(spark: SparkSession)(bloom: Column, key: Column): Column =
+    call_function("graft_bloom_might_contain", bloom, key)
 }

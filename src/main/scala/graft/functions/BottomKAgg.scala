@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Bottom-k (KMV) distinct-count sketch: the k SMALLEST distinct hash
@@ -110,16 +110,7 @@ object BottomKAgg {
     }
   }
 
-  private val name = "bottom_k"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BottomKAgg(exprs.head,
-        FnArgs.literalInt(exprs(1), name, "k")), "scala_udf")
-
   /** Aggregate column: sorted k smallest distinct values of a bigint col. */
-  def bottomK(spark: SparkSession)(v: Column, k: Int): Column = {
-    register(spark)
-    call_function(name, v, org.apache.spark.sql.functions.lit(k))
-  }
+  def bottomK(spark: SparkSession)(v: Column, k: Int): Column =
+    call_function("bottom_k", v, lit(k))
 }

@@ -106,17 +106,8 @@ case class BucketHistAgg(
 }
 
 object BucketHistAgg {
-  private val name = "bucket_hist"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BucketHistAgg(exprs.head,
-        FnArgs.literalInt(exprs(1), name, "bits")), "scala_udf")
-
   /** Aggregate column: `2^bits`-bucket histogram of a grouped
     * array<bigint> column's elements. */
-  def hist(spark: SparkSession)(shs: Column, bits: Int): Column = {
-    register(spark)
-    call_function(name, shs, lit(bits))
-  }
+  def hist(spark: SparkSession)(shs: Column, bits: Int): Column =
+    call_function("bucket_hist", shs, lit(bits))
 }

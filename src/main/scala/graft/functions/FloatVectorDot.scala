@@ -91,17 +91,7 @@ case class FloatVectorDot(left: Expression, right: Expression)
 }
 
 object FloatVectorDot {
-  private val name = "vec_dot_f"
-
-  /** Idempotently register in the session's function registry, then build
-    * calls with the public `call_function` — no private Column plumbing. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => FloatVectorDot(exprs.head, exprs(1)), "scala_udf")
-
   /** Dot product of two array<float> columns as float64. */
-  def dotF(spark: SparkSession)(a: Column, b: Column): Column = {
-    register(spark)
-    call_function(name, a, b)
-  }
+  def dotF(spark: SparkSession)(a: Column, b: Column): Column =
+    call_function("vec_dot_f", a, b)
 }

@@ -84,15 +84,7 @@ case class LanesEqualCount(left: Expression, right: Expression)
 }
 
 object LanesEqualCount {
-  private val name = "lanes_equal_count"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LanesEqualCount(exprs.head, exprs(1)), "scala_udf")
-
   /** Count of positions where the two long arrays agree. */
-  def lanesEqual(spark: SparkSession)(a: Column, b: Column): Column = {
-    register(spark)
-    call_function(name, a, b)
-  }
+  def lanesEqual(spark: SparkSession)(a: Column, b: Column): Column =
+    call_function("lanes_equal_count", a, b)
 }

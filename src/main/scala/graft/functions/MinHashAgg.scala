@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** One-pass MinHash signature as a native TYPED IMPERATIVE AGGREGATE:
@@ -151,25 +151,13 @@ object MinHashAgg {
     (a, b)
   }
 
-  private val name = "minhash_sig"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MinHashAgg(exprs.head), "scala_udf")
-
   /** Aggregate column: MinHash-`K` signature of a grouped bigint column. */
-  def minhashSig(spark: SparkSession)(tokId: Column): Column = {
-    register(spark)
-    call_function(name, tokId)
-  }
+  def minhashSig(spark: SparkSession)(tokId: Column): Column =
+    call_function("minhash_sig", tokId)
 
-  /** Aggregate column at an EXPLICIT lane count — the production-lane
-    * measurement tier (64–128 lanes). Same one-buffer shape; the declared
-    * 8-lane surface keeps using [[minhashSig]]. */
-  def minhashSigK(spark: SparkSession, k: Int)(tokId: Column): Column = {
-    val nm = s"${name}_k$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      nm, exprs => MinHashAgg(exprs.head, k), "scala_udf")
-    call_function(nm, tokId)
-  }
+  /** Aggregate column at an EXPLICIT lane count, `minhash_sig(x, k)` — the
+    * production-lane measurement tier (64–128 lanes). Same one-buffer
+    * shape; the declared 8-lane surface keeps using [[minhashSig]]. */
+  def minhashSigK(spark: SparkSession, k: Int)(tokId: Column): Column =
+    call_function("minhash_sig", tokId, lit(k))
 }

@@ -116,19 +116,11 @@ case class PrefixByFreq(child: Expression, freqsLit: Expression, theta: Double)
 }
 
 object PrefixByFreq {
-  private val name = "prefix_by_freq"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PrefixByFreq(exprs.head, exprs(1),
-        FnArgs.literalDouble(exprs(2), name, "theta")), "scala_udf")
-
   /** Rarest-first prefix of a shingle array under a fixed frequency sketch.
     * `freqs.length` must be a power of two. */
   def prefix(spark: SparkSession)(shs: Column, freqs: Array[Int], theta: Double): Column = {
     require(freqs.nonEmpty && (freqs.length & (freqs.length - 1)) == 0,
       "sketch size must be a power of two")
-    register(spark)
-    call_function(name, shs, typedLit(freqs), lit(theta))
+    call_function("prefix_by_freq", shs, typedLit(freqs), lit(theta))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -87,16 +87,7 @@ case class ShingleHashes(child: Expression, n: Int)
 }
 
 object ShingleHashes {
-  private val name = "shingle_hashes"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ShingleHashes(exprs.head,
-        FnArgs.literalInt(exprs(1), name, "n")), "scala_udf")
-
   /** Sorted distinct hashes of all n-char shingles of a string column. */
-  def shingles(spark: SparkSession)(text: Column, n: Int): Column = {
-    register(spark)
-    call_function(name, text, org.apache.spark.sql.functions.lit(n))
-  }
+  def shingles(spark: SparkSession)(text: Column, n: Int): Column =
+    call_function("shingle_hashes", text, lit(n))
 }

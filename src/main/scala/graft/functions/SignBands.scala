@@ -102,17 +102,7 @@ case class SignBands(child: Expression, nBands: Int, width: Int)
 }
 
 object SignBands {
-  private val name = "sign_bands"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SignBands(exprs.head,
-        FnArgs.literalInt(exprs(1), name, "nBands"),
-        FnArgs.literalInt(exprs(2), name, "width")), "scala_udf")
-
   /** Packed sign-bit band values of a float-vector column. */
-  def bands(spark: SparkSession)(v: Column, nBands: Int, width: Int): Column = {
-    register(spark)
-    call_function(name, v, lit(nBands), lit(width))
-  }
+  def bands(spark: SparkSession)(v: Column, nBands: Int, width: Int): Column =
+    call_function("sign_bands", v, lit(nBands), lit(width))
 }

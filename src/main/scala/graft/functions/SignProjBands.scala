@@ -159,8 +159,6 @@ case class SignProjBands(child: Expression, seed: Long, nBands: Int, width: Int)
 }
 
 object SignProjBands {
-  private val name = "sign_proj_bands"
-
   /** Dims covered by the packed hyperplane table (beyond it the mixer
     * runs per element — identical values, just slower; 4096 covers
     * every real embedding family). 128 KiB at 256 band-bits. */
@@ -181,17 +179,8 @@ object SignProjBands {
     if ((x & 1L) == 0L) 1.0 else -1.0
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SignProjBands(exprs.head,
-        FnArgs.literalLong(exprs(1), name, "seed"),
-        FnArgs.literalInt(exprs(2), name, "nBands"),
-        FnArgs.literalInt(exprs(3), name, "width")), "scala_udf")
-
   /** Packed hyperplane-sign band values of a float-vector column. */
   def bands(spark: SparkSession)(v: Column, seed: Long, nBands: Int,
-      width: Int): Column = {
-    register(spark)
-    call_function(name, v, lit(seed), lit(nBands), lit(width))
-  }
+      width: Int): Column =
+    call_function("sign_proj_bands", v, lit(seed), lit(nBands), lit(width))
 }

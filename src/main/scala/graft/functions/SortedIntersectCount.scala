@@ -84,15 +84,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object SortedIntersectCount {
-  private val name = "sorted_intersect_count"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SortedIntersectCount(exprs.head, exprs(1)), "scala_udf")
-
   /** Intersection size of two sorted distinct array<long> columns. */
-  def interCount(spark: SparkSession)(a: Column, b: Column): Column = {
-    register(spark)
-    call_function(name, a, b)
-  }
+  def interCount(spark: SparkSession)(a: Column, b: Column): Column =
+    call_function("sorted_intersect_count", a, b)
 }

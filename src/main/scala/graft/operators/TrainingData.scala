@@ -83,18 +83,21 @@ object TrainingData {
         // reads the cache.
         val t0 = System.nanoTime()
         df.count()
-        assetSecs.put(name, (System.nanoTime() - t0) / 1e9)
+        assetSecs.put((d, name), (System.nanoTime() - t0) / 1e9)
       }
       df
     })
   }
 
   /** See the eager-timing note in [[cached]]; Bench flips this on for its
-    * warm phase and stamps [[assetBuildSecs]] into the artifact. */
+    * warm phase and stamps [[assetBuildSecs]] into the artifact. Keyed by
+    * (sfDir, name) like the asset cache, so two directories' builds of
+    * one asset keep their own seconds. */
   @volatile private[graft] var eagerAssetTiming = false
   private val assetSecs =
-    scala.collection.concurrent.TrieMap[String, Double]()
-  private[graft] def assetBuildSecs: Map[String, Double] = assetSecs.toMap
+    scala.collection.concurrent.TrieMap[(String, String), Double]()
+  private[graft] def assetBuildSecs: Map[(String, String), Double] =
+    assetSecs.toMap
 
   /** Eager localCheckpoint whose materialized blocks are REGISTERED for
     * [[unpersistAll]] teardown. Plain `df.localCheckpoint(true)` persists

@@ -204,13 +204,29 @@ class DedupEdgeSpec extends SparkSpec {
       finally TrainingData.eagerAssetTiming = false
     val secs = TrainingData.assetBuildSecs
     for (a <- Seq("docToks", "nearDocSums", "nearPairs"))
-      assert(secs.contains(a) && secs(a) >= 0.0, s"missing build time for $a: $secs")
+      assert(secs.get((dir, a)).exists(_ >= 0.0), s"missing build time for $a: $secs")
     // lazy rebuild on a fresh dir must agree with the eagerly-timed run
     val dir2 = Files.createTempDirectory("graft-warmassets2").toString
     Files.createSymbolicLink(
       java.nio.file.Paths.get(s"$dir2/documents.parquet"),
       java.nio.file.Paths.get(s"$dir/documents.parquet"))
     assert(LlmPipeline.qDedupNear(spark, dir2).collect().toSeq === timed)
+  }
+
+  test("asset build timings are keyed by directory, like the asset cache") {
+    val dirs = Seq("graft-timing-a", "graft-timing-b").map { p =>
+      val dir = Files.createTempDirectory(p).toString
+      Seq((1L, "hello world hello again", "en", "web", 23L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$dir/documents.parquet")
+      dir
+    }
+    TrainingData.eagerAssetTiming = true
+    try dirs.foreach(d => LlmPipeline.qDedupNear(spark, d).collect())
+    finally TrainingData.eagerAssetTiming = false
+    val secs = TrainingData.assetBuildSecs
+    for (d <- dirs)
+      assert(secs.contains((d, "docToks")), s"$d's docToks build time was lost: $secs")
   }
 
   test("unpersistAll forgets asset build timings") {

@@ -6,6 +6,92 @@ package graft
   * registration call anywhere in the test path. */
 class ExtensionsSpec extends SparkSpec {
 
+  /** One SQL call per native function, with constant arguments it accepts. */
+  private val nativeCalls = Seq(
+    "vec_dot_f(array(CAST(1 AS FLOAT)), array(CAST(2 AS FLOAT)))",
+    "sorted_intersect_count(array(1L), array(1L))",
+    "lanes_equal_count(array(1L), array(1L))",
+    "bands_match_before(array(1L), array(1L), 1)",
+    "minhash_sig(1L)",
+    "graft_bloom_agg(1L)",
+    "graft_bloom_might_contain(array(1L), 1L)",
+    "bottom_k(1L, 2)",
+    "bucket_hist(array(1L), 4)",
+    "shingle_hashes('hello', 3)",
+    "sign_bands(array(CAST(1 AS FLOAT)), 2, 4)",
+    "sign_proj_bands(array(CAST(1 AS FLOAT)), 7L, 2, 4)",
+    "prefix_by_freq(array(1L), array(1, 2), 0.5)")
+
+  test("all 13 native functions resolve from SQL in a fresh session, before any helper runs") {
+    val names = nativeCalls.map(_.takeWhile(_ != '('))
+    assert(names.distinct.size == 13)
+    assert(graft.functions.NativeFunctions.all.map(_.name).sorted == names.sorted)
+    val fresh = spark.newSession()
+    for (call <- nativeCalls)
+      fresh.sql(s"SELECT $call AS v").queryExecution.assertAnalyzed()
+  }
+
+  test("building a column through each helper leaves the function registry unchanged") {
+    import org.apache.spark.sql.functions._
+    import graft.functions._
+    val fresh = spark.newSession()
+    def registry = fresh.sessionState.functionRegistry.listFunction().toSet
+    val before = registry
+    val (a, b) = (typedLit(Array(1L, 2L)), typedLit(Array(2L, 3L)))
+    val v = typedLit(Array(1.0f, 2.0f))
+    val rows = fresh.range(1).select(
+      FloatVectorDot.dotF(fresh)(v, v),
+      SortedIntersectCount.interCount(fresh)(a, b),
+      LanesEqualCount.lanesEqual(fresh)(a, b),
+      BandsMatchBefore.matchBefore(fresh)(a, b, lit(1)),
+      BandsMatchBefore.matchBeforeGrouped(fresh)(a, b, lit(1), 1),
+      BloomFilter.mightContain(fresh)(typedLit(Array.fill(BloomFns.NumLongs)(0L)), col("id")),
+      ShingleHashes.shingles(fresh)(lit("hello"), 3),
+      SignBands.bands(fresh)(v, 2, 4),
+      SignProjBands.bands(fresh)(v, 7L, 2, 4),
+      PrefixByFreq.prefix(fresh)(a, Array(1, 2), 0.5))
+    rows.queryExecution.assertAnalyzed()
+    val aggs = fresh.range(3).agg(
+      MinHashAgg.minhashSig(fresh)(col("id")),
+      MinHashAgg.minhashSigK(fresh, 37)(col("id")),
+      BloomFilter.bloomAgg(fresh)(col("id")),
+      BottomKAgg.bottomK(fresh)(col("id"), 2),
+      BucketHistAgg.hist(fresh)(array(col("id")), 4))
+    aggs.queryExecution.assertAnalyzed()
+    assert(registry == before, s"helpers wrote the registry: ${registry -- before}")
+  }
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("minhash_sig rejects a non-literal lane count and a surplus argument") {
+    for ((call, want) <- Seq(
+        "minhash_sig(x, x)" -> "minhash_sig: k must be a literal",
+        "minhash_sig(x, 8, 9)" -> "minhash_sig: takes 2 arguments, got 3")) {
+      val err = intercept[Exception](
+        spark.sql(s"SELECT $call FROM VALUES (1L) AS t(x)").collect())
+      assert(messages(err).exists(_.contains(want)), messages(err))
+    }
+  }
+
+  test("a helper in a session without the function fails at analysis naming it") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val bare = spark.newSession()
+    bare.sessionState.functionRegistry.dropFunction(FunctionIdentifier("vec_dot_f"))
+    val v = org.apache.spark.sql.functions.typedLit(Array(1.0f))
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      bare.range(1).select(graft.functions.FloatVectorDot.dotF(bare)(v, v)))
+    assert(err.getCondition == "UNRESOLVED_ROUTINE" && err.getMessage.contains("vec_dot_f"),
+      err.getMessage)
+  }
+
+  test("SparkEntry.entry calls no graft function, so a session without the extension runs it") {
+    val plan = SparkEntry.entry(spark).queryExecution.analyzed
+    val natives = (plan +: plan.subqueriesAll).flatMap(_.expressions)
+      .flatMap(_.collect { case e if e.getClass.getName.startsWith("graft.functions.") => e })
+    assert(natives.isEmpty, s"entry plan uses graft functions: $natives")
+  }
+
   test("vec_dot_f resolves from SQL via the session extension") {
     val r = spark.sql(
       """SELECT vec_dot_f(array(CAST(1.5 AS FLOAT), CAST(2.0 AS FLOAT)),
@@ -22,14 +108,17 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("minhash_sig aggregate resolves from SQL via the session extension") {
-    val r = spark.sql(
-      """SELECT minhash_sig(x) AS sig FROM VALUES (1L), (2L), (3L) AS t(x)""")
-      .head().getSeq[Long](0)
-    assert(r.length === 8)
-    // lane 0: min over x of (a0·(x mod P) + b0) mod P, from the shared family
-    val (a0, b0, p) = (graft.functions.MinHashAgg.A(0),
-      graft.functions.MinHashAgg.B(0), graft.functions.MinHashAgg.P)
-    assert(r.head === (1 to 3).map(x => (a0 * (x % p) + b0) % p).min)
+    // default 8 lanes, or a literal lane count
+    for ((call, lanes) <- Seq("minhash_sig(x)" -> 8, "minhash_sig(x, 64)" -> 64)) {
+      val r = spark.sql(
+        s"SELECT $call AS sig FROM VALUES (1L), (2L), (3L) AS t(x)")
+        .head().getSeq[Long](0)
+      assert(r.length === lanes)
+      // lane 0: min over x of (a0·(x mod P) + b0) mod P, from the shared family
+      val (a0, b0, p) = (graft.functions.MinHashAgg.A(0),
+        graft.functions.MinHashAgg.B(0), graft.functions.MinHashAgg.P)
+      assert(r.head === (1 to 3).map(x => (a0 * (x % p) + b0) % p).min)
+    }
   }
 
   test("bloom agg + probe resolve from SQL via the session extension") {
@@ -124,8 +213,6 @@ class ExtensionsSpec extends SparkSpec {
     val err = intercept[Exception] {
       spark.sql("SELECT graft_bloom_might_contain(array(1L, 2L), 7L)").collect()
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(err).exists(_.contains("graft_bloom_agg result")),
       s"want the diagnosable geometry message, got: ${messages(err)}")
   }

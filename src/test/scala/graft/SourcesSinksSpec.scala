@@ -23,6 +23,18 @@ class SourcesSinksSpec extends SparkSpec {
     assert(df.count() == 6000)
   }
 
+  test("the footer-schema cache re-reads a table rewritten with another schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-schema-cache").toString
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("k", "v"))
+    Seq((1.5, 2, true)).toDF("x", "y", "z")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val again = Tables.table(spark, dir, "t")
+    assert(again.columns.toSeq == Seq("x", "y", "z"))
+    assert(again.collect().toSeq == Seq(org.apache.spark.sql.Row(1.5, 2, true)))
+  }
+
   test("sink_parquet + src_parquet round-trip preserves data and schema") {
     val out = tmp() + "/li"
     li.write.mode("overwrite").parquet(out)

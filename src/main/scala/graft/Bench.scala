@@ -48,13 +48,13 @@ object Bench {
     * only query and the median-of-reps sheds the first-touch rep; the r8
     * list warmed 8 such entries (including q_token_count, which populates
     * NO cached asset at all) and spent 22–28 s of the driver's 48–70 s
-    * warmup on them. Coverage: q_tfidf→allToks(×3), q_dedup_near→
+    * warmup on them. Coverage: q_zipf→allToks(×5), q_dedup_near→
     * docToks(×5)+nearPairs(×2), q_dedup_minhash→vocab(×3, an asset the
     * r8 list MISSED — its population was charged to whichever consumer
     * ran first), q_range_bin→eventSessions(×2), q_basket_pairs→
     * basketPairs(×3). Re-check the `warm_assets` artifact entry after
     * adding/re-wiring any cached() asset. */
-  val warmQs = Seq("q_tfidf", "q_dedup_near", "q_dedup_minhash",
+  val warmQs = Seq("q_zipf", "q_dedup_near", "q_dedup_minhash",
     "q_range_bin", "q_basket_pairs")
 
   /** Window index basket (r14, quiet-band item): the index is the median

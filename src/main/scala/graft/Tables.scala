@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 
 /** Fixture-table loaders.
   *
@@ -78,4 +79,21 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  /** Splits (read tasks) of `df`'s first file scan, from the planned
+    * scan's file listing on the driver; no job runs. */
+  private[graft] def scanSplits(df: DataFrame): Option[Int] =
+    df.queryExecution.sparkPlan.collectFirst {
+      case f: FileSourceScanExec => f.inputRDD.getNumPartitions
+    }
+
+  /** `df` round-robin repartitioned to `defaultParallelism` partitions
+    * when its file scan has fewer [[scanSplits]] than that, else `df`
+    * itself. For CPU-heavy per-row work over a table that arrives as too
+    * few files to fill the cores. A table of thousands of files gets
+    * `df` back unchanged, so its plan keeps no extra shuffle. */
+  def spreadToCores(df: DataFrame): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (scanSplits(df).exists(_ < cores)) df.repartition(cores) else df
+  }
 }

@@ -193,11 +193,14 @@ object Insights {
     * The r1–r9 formulation scanned documents four times (lengths, corpus
     * stats, tf, and the length join's re-scan) and shuffled the exploded
     * token stream; now the corpus is read once and nothing corpus-sized
-    * shuffles at all (ScanAudit r10: 4 scans -> 1). */
+    * shuffles at all (ScanAudit r10: 4 scans -> 1). The one exception is
+    * [[graft.Tables.spreadToCores]]: a corpus that arrives in fewer
+    * splits than cores is round-robined first, so the split and filters
+    * run on every core. */
   def qBm25(s: SparkSession, d: String): DataFrame = {
     val qTerms = Seq("spark", "hash", "join")
     def tfCol(t: String) = col(s"tf_$t")
-    val perDoc = documents(s, d)
+    val perDoc = spreadToCores(documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(Seq(col("doc_id"),
         Cols.sizeN(col("toks")).cast("double").as("dl")) ++

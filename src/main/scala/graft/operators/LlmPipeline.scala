@@ -576,23 +576,27 @@ object LlmPipeline {
   }
 
   /** Top-5 TF-IDF terms per language: tf = in-language term count,
-    * idf = ln(N_docs / df) with doc-level df. */
+    * idf = ln(n_total / df) with df = distinct doc ids holding the term
+    * and n_total = distinct doc ids in the corpus (null ids count in
+    * neither; a df of 0 scores null, as the oracle's division does).
+    *
+    * One `doc_id` hash exchange spreads the split/explode work over every
+    * core, and because the input is then clustered by `doc_id`, the
+    * distinct (term, doc_id) merge behind `countDistinct` needs no
+    * exchange of its own: tf and df each combine map-side down to
+    * vocabulary-sized rows. tf needs `lang` and df does not, so column
+    * pruning gives them separate exchanges; n_total reads df's (its
+    * `explode_outer` keeps a row for every document, text or not), so
+    * `documents` is scanned twice per run. */
   def qTfidf(s: SparkSession, d: String): DataFrame = {
-    val toks = TrainingData.allToks(s, d).withColumnRenamed("tok", "term")
-    val n = documents(s, d).agg(countDistinct(col("doc_id")).as("n_total"))
-    // ONE corpus pass: pre-aggregate per-(term, doc) occurrence counts (a
-    // doc has a single lang, so (term, doc_id) is already distinct in it),
-    // then derive BOTH tf (sum of occurrences) and df (row count — a plain
-    // count, no countDistinct expansion) from that far smaller table.
-    // The (term, doc) occurrence table feeds both tf and df but is NOT
-    // persisted: it is corpus-sized, its input (the token table) is already
-    // cached, and an A/B at sf0.1 measured re-aggregating ~0.2 s FASTER
-    // than materializing the intermediate — recompute-from-cache beats
-    // caching a corpus-sized row set, locally and at 100 TB.
-    val perDoc = toks.groupBy(col("term"), col("doc_id"), col("lang"))
-      .agg(count(lit(1)).as("n_occ"))
-    val tf = perDoc.groupBy(col("lang"), col("term")).agg(sum(col("n_occ")).as("tf"))
-    val df = perDoc.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val byDoc = documents(s, d).repartition(col("doc_id"))
+    val tf = byDoc.select(col("lang"), explode(split(col("text"), " ")).as("term"))
+      .groupBy(col("lang"), col("term")).agg(count(lit(1)).as("tf"))
+    val df = byDoc
+      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("term"))
+      .groupBy(col("term")).agg(countDistinct(col("doc_id")).as("df"))
+    val n = byDoc.select(col("doc_id"), explode_outer(split(col("text"), " ")))
+      .agg(countDistinct(col("doc_id")).as("n_total"))
     val w = Window.partitionBy(col("lang"))
       .orderBy(col("score").desc, col("term").asc)
     // tf ⋈ df is vocabulary-sized on both sides: no broadcast hint — the
@@ -601,7 +605,8 @@ object LlmPipeline {
     tf.join(df, "term")
       .crossJoin(broadcast(n))
       .withColumn("score",
-        Cols.r6(col("tf") * log(col("n_total").cast("double") / col("df"))))
+        Cols.r6(col("tf") *
+          log(col("n_total").cast("double") / nullif(col("df"), lit(0L)))))
       .withColumn("rk", row_number().over(w).cast("long"))
       .where(col("rk") <= 5)
       .select(col("lang"), col("term"), col("tf"), col("df"), col("score"), col("rk"))
@@ -617,7 +622,7 @@ object LlmPipeline {
     * executor OOM, not a slow plan. Stats broadcast it while it fits
     * (they do at every fixture SF — same plan as the hinted form) and
     * fall back to a shuffle join on doc_id=vec_id past the threshold,
-    * the discipline [[qTfidf]]'s vocab join documents. */
+    * the discipline [[qTfidf]]'s tf ⋈ df join follows. */
   def qMultimodal(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d).select(col("vec_id"), col("label"),
       l2Norm(toDouble(col("embedding"))).as("nrm"))

@@ -148,8 +148,7 @@ object AqeFlipAudit {
     // sublinear (V ≈ k·N^0.5) with a written broadcast-dial degradation
     // path — TrainingData.vocab scaladoc, spark.graft.vocab.broadcast.
     "q_tfidf" -> Seq(
-      "term" -> "term-keyed = vocabulary cardinality, Heaps (TrainingData.vocab)",
-      "tok" -> "TrainingData.vocab Heaps-law argument"),
+      "term" -> "term-keyed = vocabulary cardinality, Heaps (TrainingData.vocab)"),
     "q_doc_index" -> Seq("tok" -> "TrainingData.vocab Heaps-law argument"),
     "q_bigram_pmi" -> Seq(
       "a, b" -> "gram model, gen-join decided pin (GenJoinAudit standing)",

@@ -25,7 +25,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   *
   *  - an `Aggregate` / `Deduplicate`: a rollup — single-row stats,
   *    per-group cut points, vocabulary/dictionary tables (the Heaps-law
-  *    argument qTfidf documents), eval-suite gram sets;
+  *    argument TrainingData.vocab documents), eval-suite gram sets;
   *  - a `Limit`: top-k / nprobe probe lists, bounded outright;
   *  - a KEY-PIN `Filter`: a top-level conjunct pinning a bare (or cast)
   *    UNIQUE-KEY column ([[keyTable]]) to literals — `=`, `IN`, or

@@ -310,6 +310,21 @@ class PlanShapeSpec extends SparkSpec {
       s"top-20 must not globally sort:\n$p")
   }
 
+  test("q_tfidf: documents by doc_id, no cached token stream, no (term, doc_id) exchange, <= 2 scans") {
+    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val plan =
+      try LlmPipeline.qTfidf(spark, d).queryExecution.executedPlan
+      finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    val p = plan.toString
+    assert(!p.contains("InMemoryTableScan"), s"no cached token asset:\n$p")
+    assert("""hashpartitioning\(term#\d+, doc_id""".r.findFirstIn(p).isEmpty,
+      s"the distinct (term, doc_id) merge rides the doc_id exchange:\n$p")
+    assert(p.contains("hashpartitioning(doc_id"), p)
+    val scans = tools.ScanAudit.perRun(plan).getOrElse("documents.parquet", 0)
+    assert(scans <= 2, s"documents scanned $scans times per run:\n$p")
+  }
+
   test("q_ewma runs on exactly one window (one shuffle past the daily agg)") {
     val p = planOf(Insights.qEwma(spark, d))
     val windows = p.linesIterator.count(_.matches("""\(\d+\) Window.*"""))

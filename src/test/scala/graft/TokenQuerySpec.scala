@@ -1,0 +1,92 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.execution.ExplainMode
+
+import graft.operators.{Insights, LlmPipeline}
+
+/** The corpus token queries on hand-built corpora: q_tfidf's document
+  * frequency against a Spark SQL form of its oracle, and q_bm25's
+  * spread of an under-split `documents` scan over the cores. */
+class TokenQuerySpec extends SparkSpec {
+  import spark.implicits._
+
+  private val d = sfDir("sf0.001")
+
+  test("q_tfidf: df counts distinct non-null doc ids, even when a doc id spans two langs") {
+    // doc 2 appears under en and de; one row has a null doc_id, and its
+    // term z occurs nowhere else (df 0, so idf and score are null)
+    val dir = Files.createTempDirectory("graft-tfidf").toString
+    Seq[(Option[Long], String, String, String, Long)](
+      (Some(1L), "a", "en", "web", 1L),
+      (Some(2L), "a b", "en", "web", 3L),
+      (Some(2L), "a", "de", "web", 1L),
+      (None, "a b z", "en", "web", 5L),
+      (Some(3L), "c", "de", "web", 1L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    spark.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("tfidf_docs")
+    // the DuckDB oracle in Spark SQL: try_divide is DuckDB's null on a
+    // zero divisor, and the D suffix keeps DuckDB's double literals
+    val score = "floor((tf * ln(try_divide(CAST(n_total AS DOUBLE), df)))" +
+      " * 1000000.0D + 0.5D) / 1000000.0D"
+    val oracle = spark.sql(
+      s"""WITH toks AS (SELECT doc_id, lang, explode(split(text, ' ')) AS term
+         |              FROM tfidf_docs),
+         |n AS (SELECT count(DISTINCT doc_id) AS n_total FROM tfidf_docs),
+         |tf AS (SELECT lang, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+         |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1)
+         |SELECT lang, term, tf, df, score, rk FROM (
+         |  SELECT lang, tf.term AS term, tf, df, $score AS score,
+         |    CAST(row_number() OVER (PARTITION BY lang
+         |      ORDER BY $score DESC NULLS LAST, tf.term ASC) AS BIGINT) AS rk
+         |  FROM tf JOIN df ON tf.term = df.term CROSS JOIN n)
+         |WHERE rk <= 5 ORDER BY lang NULLS FIRST, rk""".stripMargin)
+      .collect().toSeq
+    val got = LlmPipeline.qTfidf(spark, dir).collect().toSeq
+    assert(got == oracle)
+    val df = got.map(r => r.getAs[String]("term") -> r.getAs[Long]("df")).toMap
+    assert(df == Map("a" -> 2L, "b" -> 1L, "c" -> 1L, "z" -> 0L))
+  }
+
+  private def explain(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  private def roundRobins(df: DataFrame): Seq[Int] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: Repartition if r.shuffle => r.numPartitions
+    }
+
+  /** The sf0.001 `documents` rows written as 4 files per core. */
+  private lazy val manyFiles: String = {
+    val dir = Files.createTempDirectory("graft-docs-split").toString
+    Tables.documents(spark, d)
+      .repartition(4 * spark.sparkContext.defaultParallelism)
+      .write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("spreadToCores round-robins the one-file fixture's documents to the cores") {
+    val cores = spark.sparkContext.defaultParallelism
+    val docs = Tables.documents(spark, d)
+    assert(Tables.scanSplits(docs).exists(_ < cores), "the fixture is expected to be one split")
+    assert(roundRobins(Tables.spreadToCores(docs)) == Seq(cores))
+  }
+
+  test("spreadToCores leaves a documents table of >= cores splits and its plan untouched") {
+    val docs = Tables.documents(spark, manyFiles)
+    assert(Tables.scanSplits(docs).exists(_ >= spark.sparkContext.defaultParallelism))
+    val spread = Tables.spreadToCores(docs)
+    assert(roundRobins(spread).isEmpty)
+    assert(explain(spread) == explain(docs))
+  }
+
+  test("q_bm25 returns the same rows whether or not its scan is spread") {
+    val one = Insights.qBm25(spark, d).collect().toSeq
+    assert(one.nonEmpty)
+    assert(Insights.qBm25(spark, manyFiles).collect().toSeq == one)
+  }
+}

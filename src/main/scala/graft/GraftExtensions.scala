@@ -7,20 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.NativeFunctions
 
 /** The one place graft enters a session: sessions built with
-  * `spark.sql.extensions=graft.GraftExtensions` get the optimizer rules,
-  * the top-k planner strategy and every native function of
-  * [[NativeFunctions.all]] as SQL-callable functions
-  * (`SELECT vec_dot_f(a, b)`). The Column helpers in `graft.functions`
-  * only call them by name. */
+  * `spark.sql.extensions=graft.GraftExtensions` get the top-k planner
+  * strategy and every native function of [[NativeFunctions.all]] as
+  * SQL-callable functions (`SELECT vec_dot_f(a, b)`). The Column helpers
+  * in `graft.functions` only call them by name. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // Opt-in range-join binning (spark.graft.rangeJoin.binWidth) — rewrites
-    // pure interval-point joins away from BroadcastNestedLoopJoin.
-    ext.injectOptimizerRule(_ => new graft.plans.BinnedRangeJoinRule)
-    // Opt-in automatic Bloom semi-join reduction
-    // (spark.graft.bloomJoin.enabled) — plants a deterministic Bloom build
-    // + probe around joins Spark's own runtime-filter heuristics skip.
-    ext.injectOptimizerRule(_ => new graft.plans.AutoBloomJoinRule)
     // Grouped top-k: plans graft.plans.TopKPerKey logical nodes as
     // partial→final bounded-heap passes (map-side k-reduction the window
     // formulation cannot do).

@@ -161,6 +161,11 @@ object Analytics {
           x => x.cast("string")), ",").as("order_keys"))
       .orderBy("o_custkey")
 
+  /** qDateSpine's grid cap in days, trailing from the newest ship date:
+    * 7300 d (20 y) ≈ 3× the fixture's 6.8-year span, a no-op on clean
+    * data. The oracle SQL applies the same clamp from this constant. */
+  private[graft] val DateSpineMaxDays = 7300
+
   /** Date-spine gap fill: one row per calendar day between min and max
     * ship date, with missing days' revenue as 0.0 — the canonical
     * time-series densification step. The spine is generated, not stored;
@@ -183,20 +188,14 @@ object Analytics {
       .groupBy(date_trunc("day", col("l_shipdate")).as("day"))
       .agg(Cols.moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
         .as("revenue"))
-    // Conf-bounded spine (same doctrine as qResample): min/max-bounded
+    // Bounded spine (same doctrine as qResample): min/max-bounded
     // sequence() lets one corrupt pre-epoch date inflate the spine to a
     // century of days; clamp to a trailing window from the newest ship
-    // date. 7300 d (20 y) ≈ 3× the fixture's 6.8-year span — a no-op on
-    // clean data; the oracle mirrors the greatest() clamp AT THE DEFAULT —
-    // parity is defined at maxSpanDays=7300 (static oracle SQL); a
-    // re-dialed session changes declared output size by design and must
-    // not be pointed at the parity gate.
-    val maxSpanDays =
-      s.conf.get("spark.graft.datespine.maxSpanDays", "7300").toInt
+    // date (see DateSpineMaxDays).
     val days = li
       .agg(date_trunc("day", min(col("l_shipdate"))).as("lo0"),
         date_trunc("day", max(col("l_shipdate"))).as("hi"))
-      .selectExpr(s"greatest(lo0, hi - interval $maxSpanDays days) AS lo",
+      .selectExpr(s"greatest(lo0, hi - interval $DateSpineMaxDays days) AS lo",
         "hi")
       .select(explode(sequence(col("lo"), col("hi"),
         expr("interval 1 day"))).as("day"))
@@ -294,12 +293,12 @@ object Analytics {
         |  string_agg(CAST(o_orderkey AS VARCHAR), ',' ORDER BY o_orderkey) AS order_keys
         |FROM orders GROUP BY 1 ORDER BY o_custkey NULLS FIRST""".stripMargin,
     "q_date_spine" ->
-      """WITH days AS (
+      s"""WITH days AS (
         |  SELECT unnest(generate_series(
         |    greatest(
         |      date_trunc('day', (SELECT min(l_shipdate) FROM lineitem)),
         |      date_trunc('day', (SELECT max(l_shipdate) FROM lineitem))
-        |        - INTERVAL 7300 DAY),
+        |        - INTERVAL $DateSpineMaxDays DAY),
         |    date_trunc('day', (SELECT max(l_shipdate) FROM lineitem)),
         |    INTERVAL 1 DAY)) AS day),
         |rev AS (SELECT date_trunc('day', l_shipdate) AS day,

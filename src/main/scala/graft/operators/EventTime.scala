@@ -191,6 +191,11 @@ object EventTime {
       .orderBy("user_a", "user_b")
   }
 
+  /** qResample's grid cap in hours, trailing from the newest observation:
+    * 8760 h (1 y) is ~290× the fixture span, so clean-corpus results are
+    * untouched. The oracle SQL applies the same clamp from this constant. */
+  private[graft] val ResampleMaxHours = 8760
+
   /** Resample to a fixed 1-hour grid with LINEAR INTERPOLATION of interior
     * gaps (leading/trailing gaps carry the nearest known value) — the
     * gap-fill pass a metrics/feature pipeline runs before any rolling
@@ -212,22 +217,15 @@ object EventTime {
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hr"))
       .agg(avg(col("value")).as("v"))
       .trackedCheckpoint()
-    // The grid span is CONF-BOUNDED (trailing window from the newest
-    // observation), never raw data-bounded: with min/max bounds alone, ONE
-    // corrupt pre-epoch timestamp stretches sequence() to a century of
-    // hours × event types and the query "hangs" materializing millions of
-    // grid rows nobody asked for (the round-7 dirty corpus caught exactly
-    // that with a 1900-01-01 poison row — 1.09M hours/type). The 8760 h
-    // (1 y) default is ~290× the fixture span, so clean-corpus results are
-    // untouched; the oracle mirrors the same greatest() clamp AT THE
-    // DEFAULT — parity is defined at maxSpanHours=8760 (the oracle SQL is
-    // static); re-dialing the clamp changes declared output size by
-    // design and must not be pointed at the parity gate (BASELINE.md
-    // round 8 "Clamp-octave probe": rows track the dial).
-    val maxSpanHours =
-      s.conf.get("spark.graft.resample.maxSpanHours", "8760").toInt
+    // The grid span is BOUNDED (trailing window from the newest
+    // observation, see ResampleMaxHours), never raw data-bounded: with
+    // min/max bounds alone, ONE corrupt pre-epoch timestamp stretches
+    // sequence() to a century of hours × event types and the query
+    // "hangs" materializing millions of grid rows nobody asked for (the
+    // round-7 dirty corpus caught exactly that with a 1900-01-01 poison
+    // row — 1.09M hours/type).
     val bounds = obs.agg(min(col("hr")).as("mn0"), max(col("hr")).as("mx"))
-      .selectExpr(s"greatest(mn0, mx - interval $maxSpanHours hours) AS mn",
+      .selectExpr(s"greatest(mn0, mx - interval $ResampleMaxHours hours) AS mn",
         "mx")
     val grid = obs.select(col("event_type")).distinct()
       .crossJoin(broadcast(bounds))
@@ -330,10 +328,10 @@ object EventTime {
         |FROM p LEFT JOIN b ON p.purchase_id = b.purchase_id
         |ORDER BY p.purchase_id""".stripMargin,
     "q_resample" ->
-      """WITH obs AS (SELECT event_type,
+      s"""WITH obs AS (SELECT event_type,
         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hr, avg(value) AS v
         |  FROM events GROUP BY 1, 2),
-        |b AS (SELECT greatest(min(hr), max(hr) - INTERVAL 8760 HOUR) AS mn,
+        |b AS (SELECT greatest(min(hr), max(hr) - INTERVAL $ResampleMaxHours HOUR) AS mn,
         |      max(hr) AS mx FROM obs),
         |grid AS (SELECT t.event_type, g.hr
         |  FROM (SELECT DISTINCT event_type FROM obs) t, b,

@@ -59,44 +59,7 @@ class BinnedRangeJoinSpec extends SparkSpec {
   private def physical(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
-  test("optimizer rule: pure range join auto-rewrites to a bin equi-join when enabled") {
-    val points = (0L to 1000L).toDF("p")
-    val intervals = Seq((1L, 10L, 35L), (2L, 30L, 30L), (3L, 900L, 1200L))
-      .toDF("iv_id", "lo", "hi")
-    // queryExecution caches on the Dataset, so build a fresh join per phase
-    def joined = points.join(intervals,
-      col("p") >= col("lo") && col("p") <= col("hi"))
-    val expected = Seq.range(10L, 36L).map(_ -> 1L) ++
-      Seq(30L -> 2L) ++ Seq.range(900L, 1001L).map(_ -> 3L)
-
-    assert(physical(joined).contains("BroadcastNestedLoopJoin"),
-      "without the conf, Spark's only plan is a nested loop")
-    spark.conf.set("spark.graft.rangeJoin.binWidth", "50")
-    try {
-      val plan = physical(joined)
-      assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-      val got = joined.select("p", "iv_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(got == expected.sorted)
-    } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
-  }
-
-  test("optimizer rule: strict bounds and extra conjuncts survive as residuals") {
-    val points = (0L to 100L).toDF("p")
-    val intervals = Seq((1L, 10L, 20L, "keep"), (2L, 10L, 20L, "drop"))
-      .toDF("iv_id", "lo", "hi", "tag")
-    spark.conf.set("spark.graft.rangeJoin.binWidth", "7")
-    try {
-      val joined = points.join(intervals,
-        col("p") > col("lo") && col("p") < col("hi") && col("tag") === "keep")
-      assert(!physical(joined).contains("BroadcastNestedLoopJoin"))
-      val got = joined.select("p", "iv_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(got == Seq.range(11L, 20L).map(_ -> 1L))
-    } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
-  }
-
-  test("NULL points and bounds: binned (helper and rule) == naive everywhere") {
+  test("NULL points and bounds: binned helper == naive everywhere") {
     val points = Seq[Option[Long]](Some(5L), None, Some(25L))
       .toDF("p")
     val intervals = Seq(
@@ -111,13 +74,6 @@ class BinnedRangeJoinSpec extends SparkSpec {
       .pointInInterval(points, "p", intervals, "lo", "hi", 10L)
       .select("p", "iv_id").collect().map(_.toSeq).toList.sortBy(_.toString)
     assert(viaHelper == naive)
-    spark.conf.set("spark.graft.rangeJoin.binWidth", "10")
-    try {
-      val viaRule = points.join(intervals,
-          col("p") >= col("lo") && col("p") <= col("hi"))
-        .select("p", "iv_id").collect().map(_.toSeq).toList.sortBy(_.toString)
-      assert(viaRule == naive)
-    } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
   }
 
   test("inverted intervals (lo > hi) yield empty results, never a crash") {
@@ -127,13 +83,6 @@ class BinnedRangeJoinSpec extends SparkSpec {
       .pointInInterval(points, "p", intervals, "lo", "hi", 10L)
       .select("iv_id").as[Long].collect().toSet
     assert(viaHelper == Set(2L))
-    spark.conf.set("spark.graft.rangeJoin.binWidth", "10")
-    try {
-      val viaRule = points.join(intervals,
-          col("p") >= col("lo") && col("p") <= col("hi"))
-        .select("iv_id").as[Long].collect().toSet
-      assert(viaRule == Set(2L))
-    } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
   }
 
   test("intervalOverlap helper == naive overlap join, edges included, exactly once") {
@@ -165,74 +114,18 @@ class BinnedRangeJoinSpec extends SparkSpec {
     assert(g.distinct.size == g.size, "a pair surfaced at more than one bin")
   }
 
-  test("optimizer rule: overlap join auto-rewrites to a bin equi-join when enabled") {
-    val a = (0L until 200L).map(i => (i, i * 7 % 500, i * 7 % 500 + i % 40))
-      .toDF("a_id", "a_lo", "a_hi")
-    val b = (0L until 200L).map(i => (i, i * 13 % 500, i * 13 % 500 + i % 25))
-      .toDF("b_id", "b_lo", "b_hi")
-    def joined = a.join(b,
-      col("a_lo") <= col("b_hi") && col("b_lo") <= col("a_hi"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("a_id", "b_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(physical(joined).contains("BroadcastNestedLoopJoin"))
-    val expected = rows(joined)
-    spark.conf.set("spark.graft.rangeJoin.binWidth", "16")
-    try {
-      val plan = physical(joined)
-      assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-      assert(!plan.contains("CartesianProduct"), plan)
-      assert(rows(joined) == expected)
-    } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
-  }
-
-  test("optimizer rule: strict overlap bounds are NOT matched (stay nested loop)") {
-    val a = Seq((1L, 0L, 10L)).toDF("a_id", "a_lo", "a_hi")
-    val b = Seq((2L, 5L, 15L)).toDF("b_id", "b_lo", "b_hi")
-    spark.conf.set("spark.graft.rangeJoin.binWidth", "10")
-    try {
-      // strict < on both: not an inclusive overlap — a strict cross-side
-      // conjunct is indistinguishable from an orientation filter, so the
-      // rule must leave it alone rather than bin a wrong pair of columns
-      val strict = a.join(b,
-        col("a_lo") < col("b_hi") && col("b_lo") < col("a_hi"))
-      assert(physical(strict).contains("BroadcastNestedLoopJoin"))
-      assert(strict.count() == 1)
-    } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
-  }
-
-  test("optimizer rule: point-in-interval takes precedence over the overlap reading") {
-    // p BETWEEN lo AND hi also matches the overlap pattern with [p, p] as a
-    // degenerate interval; the point shape (single-bin projection, no
-    // explode on the point side) must win.
-    val points = Seq(5L, 15L).toDF("p")
-    val intervals = Seq((1L, 0L, 10L)).toDF("iv_id", "lo", "hi")
-    spark.conf.set("spark.graft.rangeJoin.binWidth", "10")
-    try {
-      val joined = points.join(intervals,
-        col("p") >= col("lo") && col("p") <= col("hi"))
-      val plan = physical(joined)
-      assert(plan.contains("__graft_ptbin"), plan)
-      assert(joined.count() == 1)
-    } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
-  }
-
-  test("optimizer rule: NULL overlap bounds drop rows exactly like the naive join") {
+  test("intervalOverlap: NULL bounds drop rows exactly like the naive join") {
     val a = Seq((1L, Option(0L), Option(10L)), (2L, None, Option(10L)),
       (3L, Option(0L), None)).toDF("a_id", "a_lo", "a_hi")
     val b = Seq((7L, Option(5L), Option(6L)), (8L, None, Option(6L)))
       .toDF("b_id", "b_lo", "b_hi")
-    def naive = a.crossJoin(b)
+    val naive = a.crossJoin(b)
       .where(col("a_lo") <= col("b_hi") && col("b_lo") <= col("a_hi"))
       .select("a_id", "b_id").collect().map(_.toSeq).toList.sortBy(_.toString)
-    val expected = naive
-    spark.conf.set("spark.graft.rangeJoin.binWidth", "10")
-    try {
-      val viaRule = a.join(b,
-          col("a_lo") <= col("b_hi") && col("b_lo") <= col("a_hi"))
-        .select("a_id", "b_id").collect().map(_.toSeq).toList.sortBy(_.toString)
-      assert(viaRule == expected && expected == List(Seq(1L, 7L)))
-    } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
+    val viaHelper = BinnedRangeJoin
+      .intervalOverlap(a, "a_lo", "a_hi", b, "b_lo", "b_hi", 10L)
+      .select("a_id", "b_id").collect().map(_.toSeq).toList.sortBy(_.toString)
+    assert(viaHelper == naive && naive == List(Seq(1L, 7L)))
   }
 
   test("selfPairsWithin == naive keyed self-join, bin edges and Δ == window included") {
@@ -347,18 +240,5 @@ class BinnedRangeJoinSpec extends SparkSpec {
     assert(ovGot == ovNaive)
     assert(ovGot.distinct.size == ovGot.size,
       "a pair surfaced at more than one bin")
-  }
-
-  test("optimizer rule leaves equi-key joins alone") {
-    spark.conf.set("spark.graft.rangeJoin.binWidth", "7")
-    try {
-      val a = Seq((1L, 5L), (2L, 15L)).toDF("k", "v")
-      val b = Seq((1L, 0L, 10L)).toDF("k2", "lo", "hi")
-      val joined = a.join(b, col("k") === col("k2")
-        && col("v") >= col("lo") && col("v") <= col("hi"))
-      val plan = physical(joined)
-      assert(!plan.contains("__graft_ptbin"), plan)
-      assert(joined.count() == 1)
-    } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
   }
 }

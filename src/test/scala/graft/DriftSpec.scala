@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - `tools/close.sh` re-normalizes bench history with its own
   *    WINDOW_BASKET literal, which must equal `Bench.windowBasket`;
   *  - the README dial table must list exactly the `spark.graft.*` keys
-  *    the engine reads under `src/main`. */
+  *    the engine reads under `src/main`, and no `spark.graft.*` key
+  *    named anywhere else in the README may be one the engine never
+  *    reads. */
 class DriftSpec extends AnyFunSuite {
 
   private def read(p: String): String = {
@@ -32,7 +34,9 @@ class DriftSpec extends AnyFunSuite {
         s"  close.sh: $parsed\n  Bench:    ${Bench.windowBasket}")
   }
 
-  test("README dial table lists exactly the spark.graft.* keys read in src/main") {
+  /** The `spark.graft.*` keys (without the prefix) quoted in
+    * non-comment lines under `src/main`. */
+  private lazy val codeKeys: Set[String] = {
     val quoted = """"spark\.graft\.([A-Za-z][A-Za-z0-9_.]*)"""".r
     val code = scala.collection.mutable.Set[String]()
     Files.walk(Paths.get("src/main/scala")).forEach { p =>
@@ -42,15 +46,28 @@ class DriftSpec extends AnyFunSuite {
             t.startsWith("/*"))
           .foreach(t => quoted.findAllMatchIn(t).foreach(code += _.group(1)))
     }
+    code.toSet
+  }
+
+  test("README dial table lists exactly the spark.graft.* keys read in src/main") {
+    val code = codeKeys
     val row = """^\| `spark\.graft\.([A-Za-z][A-Za-z0-9_.]*)` \|""".r
     val readme = read("README.md").linesIterator
       .flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSeq
     assert(readme.distinct.size == readme.size,
       s"README lists a dial twice: ${readme.diff(readme.distinct)}")
     assert(code.nonEmpty)
-    assert(readme.toSet == code.toSet,
+    assert(readme.toSet == code,
       s"README dials drifted from the code.\n" +
-        s"  read in code, missing from README: ${(code.toSet -- readme).toSeq.sorted}\n" +
+        s"  read in code, missing from README: ${(code -- readme).toSeq.sorted}\n" +
         s"  in README, read nowhere: ${(readme.toSet -- code).toSeq.sorted}")
+  }
+
+  test("every spark.graft.* key named anywhere in README is read in src/main") {
+    val named = """spark\.graft\.([A-Za-z][A-Za-z0-9_.]*[A-Za-z0-9_])""".r
+    val readme = named.findAllMatchIn(read("README.md")).map(_.group(1)).toSet
+    assert(readme.nonEmpty)
+    assert((readme -- codeKeys).isEmpty,
+      s"README names keys the engine never reads: ${(readme -- codeKeys).toSeq.sorted}")
   }
 }

@@ -147,68 +147,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(r === 2L)
   }
 
-  test("auto bloom rule plants the probe below the fact-side exchange; identical results on/off") {
-    import org.apache.spark.sql.functions._
-    val d = sfDir("sf0.001")
-    // the shape qBloomJoin writes by hand: selective dim filter + shuffle
-    // join (hinted, so neither side broadcasts — the at-scale shape). Tiny
-    // data means Spark's OWN runtime bloom filter skips it (its creation/
-    // application size thresholds), which is exactly the gap the opt-in
-    // rule covers.
-    def query() = {
-      val dim = Tables.customer(spark, d)
-        .where(col("c_mktsegment") === "BUILDING" && col("c_acctbal") > 8000)
-        .select(col("c_custkey"), col("c_name"))
-      Tables.orders(spark, d).select(col("o_custkey"), col("o_totalprice"))
-        .join(dim.hint("shuffle_hash"), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_name"))
-        .agg(count(lit(1)).as("n_orders"))
-        .orderBy("c_custkey")
-    }
-    val off = query().collect()
-    assert(off.nonEmpty)
-    spark.conf.set(graft.plans.AutoBloomJoinRule.EnabledKey, "true")
-    try {
-      val dfOn = query()
-      val on = dfOn.collect()
-      assert(on.toSeq == off.toSeq, "rule must never change results")
-      // plan shape: probe BELOW the fact side's hashpartitioning exchange
-      val lines = dfOn.queryExecution.executedPlan.toString
-        .linesIterator.toVector
-      def indent(l: String): Int = l.indexWhere(c => c.isLetter || c == '*')
-      val ex = lines.indexWhere(_.contains("Exchange hashpartitioning(o_custkey"))
-      val probe = lines.indexWhere(_.contains("graft_bloom_might_contain"))
-      assert(ex >= 0 && probe > ex && indent(lines(probe)) > indent(lines(ex)),
-        s"auto-planted probe must filter fact rows before the shuffle:\n${lines.mkString("\n")}")
-    } finally spark.conf.unset(graft.plans.AutoBloomJoinRule.EnabledKey)
-  }
-
-  test("auto bloom rule backs off from a nondeterministic creation side") {
-    import org.apache.spark.sql.functions._
-    val d = sfDir("sf0.001")
-    spark.conf.set(graft.plans.AutoBloomJoinRule.EnabledKey, "true")
-    try {
-      // the creation subtree is DUPLICATED into the bloom-build subquery;
-      // with rand() in it the subquery would sample different rows than
-      // the join reads and the probe could drop matching fact rows
-      val dim = Tables.customer(spark, d)
-        .where(col("c_acctbal") > 8000 && rand(42) < 0.99)
-      val j = Tables.orders(spark, d)
-        .join(dim.hint("shuffle_hash"), col("o_custkey") === col("c_custkey"))
-      assert(!j.queryExecution.optimizedPlan.toString
-        .contains("graft_bloom_might_contain"),
-        "nondeterministic dim side must not build a bloom")
-      // a LIMIT without order picks arbitrary rows — same hazard
-      val lim = Tables.customer(spark, d)
-        .where(col("c_acctbal") > 8000).limit(3)
-      val j2 = Tables.orders(spark, d)
-        .join(lim.hint("shuffle_hash"), col("o_custkey") === col("c_custkey"))
-      assert(!j2.queryExecution.optimizedPlan.toString
-        .contains("graft_bloom_might_contain"),
-        "limited dim side must not build a bloom")
-    } finally spark.conf.unset(graft.plans.AutoBloomJoinRule.EnabledKey)
-  }
-
   test("bloom probe rejects a wrong-geometry filter array loudly") {
     val err = intercept[Exception] {
       spark.sql("SELECT graft_bloom_might_contain(array(1L, 2L), 7L)").collect()
@@ -240,25 +178,5 @@ class ExtensionsSpec extends SparkSpec {
       assert(rows.length == 50)
       rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
     } finally spark.conf.unset("spark.sql.codegen.fallback")
-  }
-
-  test("auto bloom rule backs off: unfiltered dims, both-filtered joins, non-bigint keys") {
-    import org.apache.spark.sql.functions._
-    val d = sfDir("sf0.001")
-    spark.conf.set(graft.plans.AutoBloomJoinRule.EnabledKey, "true")
-    try {
-      // no selective filter on either side → no probe
-      val plain = Tables.orders(spark, d)
-        .join(Tables.customer(spark, d).hint("shuffle_hash"),
-          col("o_custkey") === col("c_custkey"))
-      assert(!plain.queryExecution.optimizedPlan.toString
-        .contains("graft_bloom_might_contain"), "unfiltered join must not probe")
-      // both sides filtered → ambiguous, back off
-      val both = Tables.orders(spark, d).where(col("o_totalprice") > 1000)
-        .join(Tables.customer(spark, d).where(col("c_acctbal") > 0)
-          .hint("shuffle_hash"), col("o_custkey") === col("c_custkey"))
-      assert(!both.queryExecution.optimizedPlan.toString
-        .contains("graft_bloom_might_contain"), "ambiguous dim must back off")
-    } finally spark.conf.unset(graft.plans.AutoBloomJoinRule.EnabledKey)
   }
 }

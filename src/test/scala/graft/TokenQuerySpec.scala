@@ -6,11 +6,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.operators.{Insights, LlmPipeline}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+
+import graft.operators.{Insights, LlmPipeline, TrainingData}
 
 /** The corpus token queries on hand-built corpora: q_tfidf's document
-  * frequency against a Spark SQL form of its oracle, and q_bm25's
-  * spread of an under-split `documents` scan over the cores. */
+  * frequency against a Spark SQL form of its oracle, q_bm25's spread of
+  * an under-split `documents` scan over the cores, and the storage its
+  * per-doc profile holds across runs. */
 class TokenQuerySpec extends SparkSpec {
   import spark.implicits._
 
@@ -88,5 +92,29 @@ class TokenQuerySpec extends SparkSpec {
     val one = Insights.qBm25(spark, d).collect().toSeq
     assert(one.nonEmpty)
     assert(Insights.qBm25(spark, manyFiles).collect().toSeq == one)
+  }
+
+  test("q_bm25 stores one profile however often it runs, and unpersistAll frees it") {
+    TrainingData.unpersistAll()
+    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    // (RDD id, stored bytes) of every stored RDD this test added
+    def added = spark.sparkContext.getRDDStorageInfo
+      .filter(i => i.isCached && !before(i.id))
+      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    val runs = (1 to 3).map { _ =>
+      assert(Insights.qBm25(spark, d).collect().nonEmpty)
+      val a = added
+      (a.size, a.values.sum)
+    }
+    assert(runs.head._1 >= 1 && runs.head._2 > 0, s"no stored profile: $runs")
+    assert(runs.distinct.size == 1,
+      s"stored RDDs (count, bytes) grew after the first run: $runs")
+    val held = added.keySet
+    TrainingData.unpersistAll()
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      val left = spark.sparkContext.getRDDStorageInfo
+        .filter(i => i.isCached && held(i.id))
+      assert(left.isEmpty, s"still stored after unpersistAll: ${left.map(_.id).toSeq}")
+    }
   }
 }

@@ -1,6 +1,9 @@
 package graft
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Headline benchmark over the full `SparkEntry.queries` surface.
   *
   * Jitter doctrine (BASELINE.md): this host shows transient degraded
@@ -141,6 +144,16 @@ object Bench {
     try { body; None }
     catch { case NonFatal(e) => Some(cause(e)) }
 
+  /** Classes Spark's code generator compiled, and the seconds it spent
+    * compiling, while `body` ran (JVM-wide counters, so work on other
+    * threads counts too). */
+  private[graft] def codegenDuring(body: => Unit): (Long, Double) = {
+    val h = CodegenMetrics.METRIC_COMPILATION_TIME
+    val (c0, ns0) = (h.getCount, CodeGenerator.compileTime)
+    body
+    (h.getCount - c0, (CodeGenerator.compileTime - ns0) / 1e9)
+  }
+
   /** Median; the mean of the two middle values at an even count. */
   private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -217,14 +230,21 @@ object Bench {
     val times = scala.collection.mutable.Map[String, List[Double]]()
       .withDefaultValue(Nil)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    for (_ <- 1 to reps; name <- order) {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val err = attempt(run(fn(spark, sfDir)))
-      val dt = (System.nanoTime() - t0) / 1e9
-      err match {
-        case None => times(name) = dt :: times(name)
-        case Some(e) => if (!errors.contains(name)) errors(name) = e
+    // (classes compiled, compile seconds) per timed pass: a pass that
+    // compiles again what the one before it compiled has outgrown Spark's
+    // generated-class cache
+    val passCodegen = (1 to reps).map { _ =>
+      codegenDuring {
+        for (name <- order) {
+          val fn = SparkEntry.queries(name)
+          val t0 = System.nanoTime()
+          val err = attempt(run(fn(spark, sfDir)))
+          val dt = (System.nanoTime() - t0) / 1e9
+          err match {
+            case None => times(name) = dt :: times(name)
+            case Some(e) => if (!errors.contains(name)) errors(name) = e
+          }
+        }
       }
     }
     // -1.0 marks a query that failed on every rep (same sentinel as before).
@@ -263,7 +283,7 @@ object Bench {
     val normTotal = if (windowIndex > 0) f3(total / windowIndex) else "-1.000"
     val errorsObj = errors.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
       .mkString("{", ",", "}")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","warmup_sec":$warmup,"reps":$reps,"window_index":$widx,"normalized_total":$normTotal,"queries":${obj(med)},"queries_min":${obj(mins)},"errors":$errorsObj,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","warmup_sec":$warmup,"reps":$reps,"window_index":$widx,"normalized_total":$normTotal,"queries":${obj(med)},"queries_min":${obj(mins)},"errors":$errorsObj,"codegen_compiles":${passCodegen.map(_._1).mkString("[", ",", "]")},"codegen_compile_s":${passCodegen.map(p => f3(p._2)).mkString("[", ",", "]")},"sf":"$sfDir"}"""
     // Compact summary printed LAST: artifact collectors that keep only the
     // tail of stdout (the driver stores 2000 chars) must still see the
     // totals, rep count, the slowest queries, the dedup-family

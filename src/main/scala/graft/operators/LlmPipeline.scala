@@ -577,26 +577,42 @@ object LlmPipeline {
 
   /** Top-5 TF-IDF terms per language: tf = in-language term count,
     * idf = ln(n_total / df) with df = distinct doc ids holding the term
-    * and n_total = distinct doc ids in the corpus (null ids count in
-    * neither; a df of 0 scores null, as the oracle's division does).
+    * and n_total = distinct doc ids in the corpus, documents with null
+    * text included (null ids count in neither; a df of 0 scores null, as
+    * the oracle's division does).
     *
-    * One `doc_id` hash exchange spreads the split/explode work over every
-    * core, and because the input is then clustered by `doc_id`, the
-    * distinct (term, doc_id) merge behind `countDistinct` needs no
-    * exchange of its own: tf and df each combine map-side down to
-    * vocabulary-sized rows. tf needs `lang` and df does not, so column
-    * pruning gives them separate exchanges; n_total reads df's (its
-    * `explode_outer` keeps a row for every document, text or not), so
-    * `documents` is scanned twice per run. */
+    * The text crosses the cluster once: one `doc_id` hash exchange of
+    * (doc_id, lang, text), read by tf and by df. tf explodes its rows and
+    * combines map-side by (lang, term). df first collapses each doc id's
+    * rows to one (the input is clustered by `doc_id`, so the collapse
+    * needs no exchange), so a doc id on several rows counts once. The
+    * collapse carries `lang` only so that df's exchange is the same
+    * (doc_id, lang, text) one as tf's, and Spark reuses it. Each doc id
+    * then yields its distinct terms plus one marker term, a space, which
+    * `split` on " " can never produce: the marker's doc count is n_total,
+    * so n_total needs no scan, explode or aggregate of its own. The marker
+    * row is told apart by an aggregate column, not by its term, because a
+    * filter on the grouping key is pushed below the aggregate, and then
+    * df and n_total no longer share the term exchange.
+    *
+    * The 25-row result is sorted in one partition: a global sort would
+    * range-partition it, and the sampling job would re-run the tf join and
+    * the rank window. */
   def qTfidf(s: SparkSession, d: String): DataFrame = {
     val byDoc = documents(s, d).repartition(col("doc_id"))
     val tf = byDoc.select(col("lang"), explode(split(col("text"), " ")).as("term"))
       .groupBy(col("lang"), col("term")).agg(count(lit(1)).as("tf"))
-    val df = byDoc
-      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("term"))
-      .groupBy(col("term")).agg(countDistinct(col("doc_id")).as("df"))
-    val n = byDoc.select(col("doc_id"), explode_outer(split(col("text"), " ")))
-      .agg(countDistinct(col("doc_id")).as("n_total"))
+    val texts = array_compact(col("rows.text"))
+    val mark = array(lit(" "))
+    val docTerms = when(size(texts) > 0,
+      array_distinct(concat(split(concat_ws(" ", texts), " "), mark))).otherwise(mark)
+    val perTerm = byDoc
+      .groupBy(col("doc_id")).agg(collect_list(struct(col("lang"), col("text"))).as("rows"))
+      .select(col("doc_id"), explode(docTerms).as("term"))
+      .groupBy(col("term"))
+      .agg(count(col("doc_id")).as("df"), max(col("term") === " ").as("marker"))
+    val df = perTerm.where(!col("marker")).select(col("term"), col("df"))
+    val n = perTerm.where(col("marker")).select(col("df").as("n_total"))
     val w = Window.partitionBy(col("lang"))
       .orderBy(col("score").desc, col("term").asc)
     // tf ⋈ df is vocabulary-sized on both sides: no broadcast hint — the
@@ -610,8 +626,7 @@ object LlmPipeline {
       .withColumn("rk", row_number().over(w).cast("long"))
       .where(col("rk") <= 5)
       .select(col("lang"), col("term"), col("tf"), col("df"), col("score"), col("rk"))
-      // r15: sort barrier — sampling was re-running the tf join + rank window
-      .transform(TrainingData.sortedOutput(col("lang"), col("rk")))
+      .coalesce(1).sortWithinPartitions(col("lang"), col("rk"))
   }
 
   /** Multimodal row: text ⋈ vector on doc_id=vec_id with per-modality

@@ -17,10 +17,15 @@ import graft.Tables._
   * CSV strings, and the timestamp format pins microseconds + UTC offset so
   * session timezone can never leak into the bytes).
   *
-  * Scale shape: the write fans out one file per input partition and the read
-  * back is a plain multi-split FileScan — both sides parallel, no coalesce,
-  * no driver bottleneck. Timestamps leave the query as epoch-microsecond
-  * BIGINT per the repo-wide determinism convention.
+  * Scale shape: the write makes one file per input partition and the read
+  * back is a plain FileScan, one task per split, so each side is as
+  * parallel as its input is split; nothing coalesces or goes through the
+  * driver. The fixture tables are one small file each, so on them both
+  * sides run as one task. Spreading that one-split write over the cores
+  * did not pay when sized (the csv round trip got a little faster, the
+  * vecbin one slower), so the write keeps its input's partitioning.
+  * Timestamps leave the query as epoch-microsecond BIGINT per the
+  * repo-wide determinism convention.
   */
 object Roundtrip {
 

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{ExplainMode, GenerateExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
 
 import graft.operators._
 
@@ -323,6 +325,31 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("hashpartitioning(doc_id"), p)
     val scans = tools.ScanAudit.perRun(plan).getOrElse("documents.parquet", 0)
     assert(scans <= 2, s"documents scanned $scans times per run:\n$p")
+  }
+
+  test("q_tfidf: the text crosses one doc_id exchange, df reuses it, and no Generate feeds n_total") {
+    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val plan =
+      try LlmPipeline.qTfidf(spark, d).queryExecution.executedPlan
+      finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    def onDocId(e: Exchange): Boolean = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.map(_.references.map(_.name).toSet) == Seq(Set("doc_id"))
+      case _ => false
+    }
+    val byDoc = plan.collect { case e: ShuffleExchangeExec if onDocId(e) => e }
+    assert(byDoc.size == 1 && byDoc.head.output.exists(_.name == "text"),
+      s"one doc_id exchange carries the text:\n$plan")
+    val reused = plan.collect { case r: ReusedExchangeExec if onDocId(r.child) => r }
+    assert(reused.nonEmpty, s"df reads tf's doc_id exchange again:\n$plan")
+    // the nodes that first produce n_total; a ReusedExchange is a leaf here
+    val nTotal = plan.collect {
+      case p if p.output.exists(_.name == "n_total") &&
+        !p.children.exists(_.output.exists(_.name == "n_total")) => p
+    }
+    assert(nTotal.nonEmpty, plan)
+    assert(nTotal.forall(_.collect { case g: GenerateExec => g }.isEmpty),
+      s"n_total explodes no tokens of its own:\n$plan")
   }
 
   test("q_ewma runs on exactly one window (one shuffle past the daily agg)") {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, length, lit}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -54,6 +55,52 @@ class TokenQuerySpec extends SparkSpec {
     assert(got == oracle)
     val df = got.map(r => r.getAs[String]("term") -> r.getAs[Long]("df")).toMap
     assert(df == Map("a" -> 2L, "b" -> 1L, "c" -> 1L, "z" -> 0L))
+  }
+
+  test("q_tfidf: repeated, null and empty rows count as the oracle counts them") {
+    // doc 4: two en rows sharing b, plus an exact duplicate row; doc 5: a
+    // null-text row beside a text row; doc 6: only null text (in n_total,
+    // no terms); doc 7: empty text (the term ""); doc 8: null lang; and a
+    // null doc_id whose term f occurs nowhere else
+    val dir = Files.createTempDirectory("graft-tfidf-adv").toString
+    Seq[(Option[Long], Option[String], Option[String])](
+      (Some(4L), Some("a b"), Some("en")),
+      (Some(4L), Some("b c"), Some("en")),
+      (Some(4L), Some("b c"), Some("en")),
+      (Some(5L), None, Some("de")),
+      (Some(5L), Some("c d"), Some("de")),
+      (Some(6L), None, Some("en")),
+      (Some(7L), Some(""), Some("en")),
+      (Some(8L), Some("d e"), None),
+      (None, Some("e f"), Some("de")),
+      (None, None, None))
+      .toDF("doc_id", "text", "lang")
+      .withColumn("source", lit("web")).withColumn("n_chars", length(col("text")).cast("long"))
+      .write.parquet(s"$dir/documents.parquet")
+    spark.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("tfidf_adv")
+    // the same Spark SQL form of the DuckDB oracle as the test above
+    val score = "floor((tf * ln(try_divide(CAST(n_total AS DOUBLE), df)))" +
+      " * 1000000.0D + 0.5D) / 1000000.0D"
+    val oracle = spark.sql(
+      s"""WITH toks AS (SELECT doc_id, lang, explode(split(text, ' ')) AS term
+         |              FROM tfidf_adv),
+         |n AS (SELECT count(DISTINCT doc_id) AS n_total FROM tfidf_adv),
+         |tf AS (SELECT lang, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+         |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1)
+         |SELECT lang, term, tf, df, score, rk FROM (
+         |  SELECT lang, tf.term AS term, tf, df, $score AS score,
+         |    CAST(row_number() OVER (PARTITION BY lang
+         |      ORDER BY $score DESC NULLS LAST, tf.term ASC) AS BIGINT) AS rk
+         |  FROM tf JOIN df ON tf.term = df.term CROSS JOIN n)
+         |WHERE rk <= 5 ORDER BY lang NULLS FIRST, rk""".stripMargin)
+      .collect().toSeq
+    val got = LlmPipeline.qTfidf(spark, dir).collect().toSeq
+    assert(got == oracle)
+    val df = got.map(r => r.getAs[String]("term") -> r.getAs[Long]("df")).toMap
+    assert(df == Map("a" -> 1L, "b" -> 1L, "c" -> 2L, "d" -> 2L, "e" -> 1L, "f" -> 0L, "" -> 1L))
+    // n_total = 5 (ids 4-8, doc 6 included): a's score is 1 * ln(5 / 1)
+    val a = got.find(_.getAs[String]("term") == "a").get
+    assert(a.getAs[Double]("score") == math.floor(math.log(5.0) * 1e6 + 0.5) / 1e6)
   }
 
   private def explain(df: DataFrame): String =

@@ -2,6 +2,7 @@ package graft
 import scala.util.control.NonFatal
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Headline benchmark over the full `SparkEntry.queries` surface.
@@ -154,6 +155,23 @@ object Bench {
     (h.getCount - c0, (CodeGenerator.compileTime - ns0) / 1e9)
   }
 
+  /** Spark jobs `spark` started while `body` ran, counted by a job-start
+    * listener that is removed again once the listener bus has delivered
+    * every event the body posted; -1 when the bus did not drain. */
+  private[graft] def jobsDuring(spark: org.apache.spark.sql.SparkSession)(
+      body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    val drained =
+      try { body; org.apache.spark.sql.graft.Bridge.drainListeners(sc) }
+      finally sc.removeSparkListener(counter)
+    if (drained) n.get else -1
+  }
+
   /** Median; the mean of the two middle values at an even count. */
   private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -232,9 +250,10 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // (classes compiled, compile seconds) per timed pass: a pass that
     // compiles again what the one before it compiled has outgrown Spark's
-    // generated-class cache
+    // generated-class cache; and the jobs each pass started
+    val passJobs = scala.collection.mutable.ArrayBuffer[Int]()
     val passCodegen = (1 to reps).map { _ =>
-      codegenDuring {
+      codegenDuring { passJobs += jobsDuring(spark) {
         for (name <- order) {
           val fn = SparkEntry.queries(name)
           val t0 = System.nanoTime()
@@ -245,7 +264,7 @@ object Bench {
             case Some(e) => if (!errors.contains(name)) errors(name) = e
           }
         }
-      }
+      } }
     }
     // -1.0 marks a query that failed on every rep (same sentinel as before).
     val med = order.map(q =>
@@ -283,7 +302,7 @@ object Bench {
     val normTotal = if (windowIndex > 0) f3(total / windowIndex) else "-1.000"
     val errorsObj = errors.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
       .mkString("{", ",", "}")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","warmup_sec":$warmup,"reps":$reps,"window_index":$widx,"normalized_total":$normTotal,"queries":${obj(med)},"queries_min":${obj(mins)},"errors":$errorsObj,"codegen_compiles":${passCodegen.map(_._1).mkString("[", ",", "]")},"codegen_compile_s":${passCodegen.map(p => f3(p._2)).mkString("[", ",", "]")},"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","warmup_sec":$warmup,"reps":$reps,"window_index":$widx,"normalized_total":$normTotal,"queries":${obj(med)},"queries_min":${obj(mins)},"errors":$errorsObj,"codegen_compiles":${passCodegen.map(_._1).mkString("[", ",", "]")},"codegen_compile_s":${passCodegen.map(p => f3(p._2)).mkString("[", ",", "]")},"jobs":${passJobs.mkString("[", ",", "]")},"sf":"$sfDir"}"""
     // Compact summary printed LAST: artifact collectors that keep only the
     // tail of stdout (the driver stores 2000 chars) must still see the
     // totals, rep count, the slowest queries, the dedup-family

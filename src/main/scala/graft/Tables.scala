@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.PlanExpression
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 
 /** Fixture-table loaders.
   *
@@ -80,12 +84,34 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** Splits (read tasks) of `df`'s first file scan, from the planned
-    * scan's file listing on the driver; no job runs. */
+  /** Splits (read tasks) of one scan node: a v1 file scan or a DSv2
+    * batch scan, from the planned file listing on the driver; no job
+    * runs. None for any other node, and for a file scan whose files a
+    * subquery picks at run time. */
+  private def splitsOf(p: SparkPlan): Option[Int] = p match {
+    case f: FileSourceScanExec
+        if !f.partitionFilters.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) =>
+      Some(f.inputRDD.getNumPartitions)
+    case b: BatchScanExec => Some(b.inputRDD.getNumPartitions)
+    case _ => None
+  }
+
+  /** Splits of `df`'s first scan. */
   private[graft] def scanSplits(df: DataFrame): Option[Int] =
-    df.queryExecution.sparkPlan.collectFirst {
-      case f: FileSourceScanExec => f.inputRDD.getNumPartitions
+    df.queryExecution.sparkPlan.collectFirst(Function.unlift(splitsOf))
+
+  /** Total splits of the scans `p` reads in its own stage; a broadcast's
+    * build side runs as a job of its own and counts nothing. None when
+    * the stage reads a shuffle or a leaf that is no sized scan (a cache,
+    * a checkpoint, a JDBC read). */
+  private[graft] def stageSplits(p: SparkPlan): Option[Int] = p match {
+    case _: BroadcastExchangeExec => Some(0)
+    case _: ShuffleExchangeExec => None
+    case leaf if leaf.children.isEmpty => splitsOf(leaf)
+    case other => other.children.foldLeft(Option(0)) { (acc, c) =>
+      acc.flatMap(a => stageSplits(c).map(a + _))
     }
+  }
 
   /** `df` round-robin repartitioned to `defaultParallelism` partitions
     * when its file scan has fewer [[scanSplits]] than that, else `df`
@@ -95,5 +121,24 @@ object Tables {
   def spreadToCores(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     if (scanSplits(df).exists(_ < cores)) df.repartition(cores) else df
+  }
+
+  /** `df` totally ordered by `cols`, for a query's presentation sort.
+    * When `df`'s plan reads no shuffle and its scans have one split in
+    * total, the rows already sit in one task: `coalesce(1)` keeps them
+    * there and `sortWithinPartitions` sorts them in that task, so the
+    * range exchange and the boundary-sampling job that re-runs the scan
+    * go. Otherwise (a shuffle below, or many splits, as a corpus of
+    * thousands of files has) it is exactly `df.orderBy(cols)`. Decided on
+    * the driver from `df`'s physical plan and its scans' file listing;
+    * no job runs. Use [[graft.operators.TrainingData.sortedOutput]]
+    * instead over a shuffle (a join, window or aggregate result). */
+  def orderedRows(cols: Column*)(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    if (stageSplits(plan).exists(_ <= 1)) df.coalesce(1).sortWithinPartitions(cols: _*)
+    else df.orderBy(cols: _*)
   }
 }

@@ -147,7 +147,7 @@ object Analytics {
       .where(graft.Cols.mixBucket(col("l_orderkey")
         .bitwiseXOR(col("l_linenumber").cast("long") * lit(2654435761L)), 100) < 10)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      .orderBy("l_orderkey", "l_linenumber")
+      .transform(orderedRows(col("l_orderkey"), col("l_linenumber")))
 
   /** Keyed list/string aggregation (denormalization): each customer's
     * sorted order-key list as one CSV string. `collect_list` is

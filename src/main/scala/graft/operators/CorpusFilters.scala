@@ -179,7 +179,7 @@ object CorpusFilters {
         expr("aggregate(q, CAST(0 AS BIGINT), (a, c) -> a + abs(coalesce(c, CAST(0 AS BIGINT))))")
           .as("l1_codes"),
         Cols.r6(col("err")).as("recon_err"))
-      .orderBy("vec_id")
+      .transform(orderedRows(col("vec_id")))
 
   /** Inverted index (term → document-frequency + capped posting list): the
     * corpus asset retrieval and dedup-audit tooling read. One shuffle on the
@@ -252,7 +252,7 @@ object CorpusFilters {
       .where(graft.Cols.mixBucket(col("doc_id"), 100) <
         when(col("lang") === "en", lit(10L)).otherwise(lit(40L)))
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .orderBy("doc_id")
+      .transform(orderedRows(col("doc_id")))
 
   /** Zipf fit per language: token frequencies, rank by frequency (total
     * tiebreak on the token so ranks are deterministic), then least-squares
@@ -460,7 +460,7 @@ object CorpusFilters {
         md5(expr("array_join(slice(toks, tok_start, chunk_len), ' ')")))
       .select(col("doc_id"), col("chunk_idx"), col("tok_start"),
         col("chunk_len"), col("chunk_md5"))
-      .orderBy("doc_id", "chunk_idx")
+      .transform(orderedRows(col("doc_id"), col("chunk_idx")))
 
   /** Bigram-LM quality score — the tier above [[qUnigramLogprob]] on the
     * KenLM ladder (the published CCNet filter is a 5-gram LM; conditional

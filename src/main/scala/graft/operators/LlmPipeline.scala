@@ -526,7 +526,7 @@ object LlmPipeline {
       .where(col("cos_sim") >= 0.25)
       .select(col("a_id"), col("b_id"), col("label"),
         Cols.r6(col("cos_sim")).as("cos_sim"))
-      .orderBy("a_id", "b_id")
+      .transform(orderedRows(col("a_id"), col("b_id")))
   }
 
   /** k-NN label propagation: for probes vec_id < 10, majority label of the
@@ -647,7 +647,7 @@ object LlmPipeline {
         && col("nrm") > 0.78)
       .select(col("doc_id"), col("lang"), col("source"), col("label"),
         col("n_chars"), Cols.r6(col("nrm")).as("nrm"))
-      .orderBy("doc_id")
+      .transform(orderedRows(col("doc_id")))
   }
 
   val queries: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(

@@ -36,7 +36,7 @@ object Relational {
       Cols.r2(revenue).as("revenue"),
       Cols.r2(revenue * (lit(1.0) + col("l_tax"))).as("charge"),
       Cols.r2(col("l_quantity") * col("l_extendedprice")).as("gross"))
-      .orderBy("l_orderkey", "l_linenumber")
+      .transform(orderedRows(col("l_orderkey"), col("l_linenumber")))
 
   /** Conjunctive/disjunctive predicates, BETWEEN, IN, LIKE — all pushed to
     * the parquet scan by Catalyst (verify via PushedFilters in explain). */
@@ -47,7 +47,7 @@ object Relational {
         && (col("o_orderpriority").like("1-%") || col("o_orderpriority").like("2-%")))
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), col("o_orderpriority"))
-      .orderBy("o_orderkey")
+      .transform(orderedRows(col("o_orderkey")))
 
   // ---- §2.3 joins ----------------------------------------------------------
 
@@ -120,7 +120,7 @@ object Relational {
     val o = orders(s, d)
     c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
       .select(col("c_custkey"), col("c_name"))
-      .orderBy("c_custkey")
+      .transform(orderedRows(col("c_custkey")))
   }
 
   /** Left anti = NOT EXISTS. Restricted to recent orders so the result is
@@ -131,7 +131,7 @@ object Relational {
       .filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))
     c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"))
-      .orderBy("c_custkey")
+      .transform(orderedRows(col("c_custkey")))
   }
 
   /** Range (theta) join: event pairs within 1h per user, via
@@ -278,7 +278,8 @@ object Relational {
     * qualify via the disjunct), so Catalyst plans an EXISTENCE join that
     * carries the match bit as a column into the surviving Filter. Pinned
     * in PlanShapeSpec; same physics as a semi join at scale (hash on the
-    * correlation key, no row duplication). */
+    * correlation key, no row duplication). The presentation sort leaves
+    * the SQL text for [[graft.Tables.orderedRows]]. */
   def qExistsOr(s: SparkSession, d: String): DataFrame = {
     orders(s, d).createOrReplaceTempView("orders")
     customer(s, d).createOrReplaceTempView("customer")
@@ -287,8 +288,8 @@ object Relational {
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM customer
         |              WHERE c_custkey = o_custkey AND c_acctbal > 9000)
-        |   OR o_totalprice > 450000
-        |ORDER BY o_orderkey""".stripMargin)
+        |   OR o_totalprice > 450000""".stripMargin)
+      .transform(orderedRows(col("o_orderkey")))
   }
 
   /** Recursive CTE through the SQL front door (`WITH RECURSIVE`, Spark 4's

@@ -19,11 +19,15 @@ import graft.Tables._
   *
   * Scale shape: the write makes one file per input partition and the read
   * back is a plain FileScan, one task per split, so each side is as
-  * parallel as its input is split; nothing coalesces or goes through the
-  * driver. The fixture tables are one small file each, so on them both
-  * sides run as one task. Spreading that one-split write over the cores
-  * did not pay when sized (the csv round trip got a little faster, the
-  * vecbin one slower), so the write keeps its input's partitioning.
+  * parallel as its input is split; nothing goes through the driver. The
+  * fixture tables are one small file each, so on them both sides run as
+  * one task, and the read-back's presentation sort
+  * ([[graft.Tables.orderedRows]]) runs inside that scan task: no range
+  * exchange, no sampling job that reads the files a second time. A
+  * read-back of many splits keeps its parallel range sort. Spreading the
+  * one-split write over the cores did not pay when sized (the csv round
+  * trip got a little faster, the vecbin one slower), so the write keeps
+  * its input's partitioning.
   * Timestamps leave the query as epoch-microsecond BIGINT per the
   * repo-wide determinism convention.
   */
@@ -63,7 +67,7 @@ object Roundtrip {
       .option("ignoreTrailingWhiteSpace", "false")
       .csv(out)
     s.read.schema(customerSchema).option("header", "true").csv(out)
-      .orderBy("c_custkey")
+      .transform(orderedRows(col("c_custkey")))
   }
 
   private val ordersSchema = StructType(Seq(
@@ -86,7 +90,7 @@ object Roundtrip {
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), graft.Cols.epochUs(col("o_orderdate")).as("o_date_us"),
         col("o_orderpriority"))
-      .orderBy("o_orderkey")
+      .transform(orderedRows(col("o_orderkey")))
   }
 
   private val partSchema = StructType(Seq(
@@ -102,7 +106,8 @@ object Roundtrip {
   def qOrcRoundtrip(s: SparkSession, d: String): DataFrame = {
     val out = scratch(d, "part_orc")
     part(s, d).write.mode("overwrite").orc(out)
-    s.read.schema(partSchema).orc(out).orderBy("p_partkey")
+    s.read.schema(partSchema).orc(out)
+      .transform(orderedRows(col("p_partkey")))
   }
 
   private val supplierSchema = StructType(Seq(
@@ -121,7 +126,7 @@ object Roundtrip {
     val out = scratch(d, "supplier_xml")
     supplier(s, d).write.mode("overwrite").option("rowTag", "supplier").xml(out)
     s.read.schema(supplierSchema).option("rowTag", "supplier").xml(out)
-      .orderBy("s_suppkey")
+      .transform(orderedRows(col("s_suppkey")))
   }
 
   /** supplier → JDBC (embedded Derby — the engine Spark already ships for
@@ -164,7 +169,7 @@ object Roundtrip {
       .write.mode("overwrite").partitionBy("lang").parquet(out)
     partitionedRead(s, d)
       .select(col("doc_id"), col("source"), col("n_chars"), col("lang"))
-      .orderBy("doc_id")
+      .transform(orderedRows(col("doc_id")))
   }
 
   /** The read side of [[qPartitionedRoundtrip]] — separated so the spec can
@@ -205,7 +210,7 @@ object Roundtrip {
       .select(col("vec_id"), col("label"),
         element_at(col("embedding"), 1).as("dim0"),
         graft.Cols.r6(sqrt(fdot(col("embedding"), col("embedding")))).as("l2_norm"))
-      .orderBy("vec_id")
+      .transform(orderedRows(col("vec_id")))
   }
 
   /** Schema evolution across parquet batches — the drift every multi-year
@@ -228,7 +233,7 @@ object Roundtrip {
       .parquet(s"$out/batch=1", s"$out/batch=2")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
         col("batch").cast("long").as("batch"))
-      .orderBy("o_orderkey")
+      .transform(orderedRows(col("o_orderkey")))
   }
 
   /** The rewritten partition's date — fixed so the oracle can replay it. */

@@ -29,7 +29,7 @@ object Scalars {
         size(split(col("p_name"), " ")).cast("long").as("ntok"),
         regexp_extract(col("p_name"), "^([a-z]+)", 1).as("first_tok"),
         trim(concat(lit("  "), col("p_name"), lit("  "))).as("trimmed"))
-      .orderBy("p_partkey")
+      .transform(orderedRows(col("p_partkey")))
 
   /** Date/time functions over `orders`. Derived instants are emitted as
     * epoch-micros so timezone rendering can never diverge (SURVEY §2 box). */
@@ -43,7 +43,7 @@ object Scalars {
         datediff(lit("2024-06-01").cast("date"), col("o_orderdate"))
           .cast("long").as("days_to_mid24"),
         Cols.epochUs(add_months(col("o_orderdate"), 3)).as("plus3m_us"))
-      .orderBy("o_orderkey")
+      .transform(orderedRows(col("o_orderkey")))
 
   /** Math functions over `lineitem`, incl. a null-safe division via nullif +
     * coalesce. ln/sqrt go through libm on both engines — r6 absorbs the last
@@ -59,7 +59,7 @@ object Scalars {
         Cols.r6(sqrt(col("l_quantity"))).as("sq"),
         coalesce(Cols.r6(col("l_extendedprice") / nullif(col("l_discount"), lit(0.0))),
           lit(-1.0)).as("safe_div"))
-      .orderBy("l_orderkey", "l_linenumber")
+      .transform(orderedRows(col("l_orderkey"), col("l_linenumber")))
 
   /** CASE WHEN tiering + nullif/coalesce over `customer`, aggregated. */
   def qCase(s: SparkSession, d: String): DataFrame =
@@ -110,7 +110,7 @@ object Scalars {
         Cols.r6(when(size(col("embedding")) >= 1, l2Norm(v))).as("nrm"),
         Cols.r6(when(size(col("embedding")) >= 1,
           arraySum(toDouble(slice(col("embedding"), 1, 3))))).as("head3_sum"))
-      .orderBy("vec_id")
+      .transform(orderedRows(col("vec_id")))
   }
 
   /** Map functions: parse `props` to map<string,bigint>, explode to rows. */
@@ -119,7 +119,7 @@ object Scalars {
       .select(col("event_id"),
         explode(from_json(col("props"), MapType(StringType, LongType))))
       .toDF("event_id", "key", "val")
-      .orderBy("event_id", "key")
+      .transform(orderedRows(col("event_id"), col("key")))
 
   val queries: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(
     "q_str"   -> (qStr _),

@@ -128,7 +128,15 @@ object TrainingData {
     * lineage. Keys: the sort columns — near-unique on every wrapped head,
     * so the intermediate partitioning cannot concentrate load. Measured
     * against the unbarriered, checkpoint and persist flavors in
-    * OPTIMIZATION_r15.md §0 and §6 and OPTIMIZATION_r16.md §5. */
+    * OPTIMIZATION_r15.md §0 and §6 and OPTIMIZATION_r16.md §5.
+    *
+    * Which sort to use: this one over a stage that reads a shuffle (a
+    * join, window or aggregate result), where re-running the stage for
+    * the sample is the cost; [[graft.Tables.orderedRows]] over a
+    * shuffle-free pipeline (scan, filter, project, explode, a broadcast
+    * join's stream side), which sorts one-split input in its own task and
+    * is plain `orderBy` otherwise. A hash barrier there would add a
+    * shuffle to a pipeline that needs none. */
   private[graft] def sortedOutput(cols: Column*)(df: DataFrame): DataFrame =
     df.repartition(cols: _*).orderBy(cols: _*)
 
@@ -432,7 +440,7 @@ object TrainingData {
           + lit(0.2) * least(col("n_tok").cast("double") / 100.0, lit(1.0))))
       .select(col("doc_id"), col("n_tok"), col("n_dist"), col("ttr"),
         col("avg_tok_len"), col("stop_ratio"), col("quality"))
-      .orderBy("doc_id")
+      .transform(orderedRows(col("doc_id")))
   }
 
   /** Token counting per language: whitespace tokens vs a BPE-ish regex
@@ -602,7 +610,7 @@ object TrainingData {
         // deterministic fake decode (see Scaladoc): stands in for image WxH
         (length(col("payload")) % 256).cast("long").as("fake_width"),
         (col("n_chars") * 7 % 256).cast("long").as("fake_height"))
-      .orderBy("doc_id")
+      .transform(orderedRows(col("doc_id")))
 
   /** Output row of the stubbed media decoder — a columnar-friendly flat
     * struct, exactly what a real image/audio decode stage would emit. */
@@ -652,7 +660,7 @@ object TrainingData {
         }
       }
       .toDF()
-      .orderBy("doc_id")
+      .transform(orderedRows(col("doc_id")))
   }
 
   /** Frame sampling over the decoded media: every 5th frame index of each
@@ -667,7 +675,7 @@ object TrainingData {
       .where(col("frame_idx") % 5 === 0)
       .select(col("doc_id"), col("frame_idx"),
         (col("frame_idx") * 40000L).as("frame_us"), col("n_frames"))
-      .orderBy("doc_id", "frame_idx")
+      .transform(orderedRows(col("doc_id"), col("frame_idx")))
 
   /** Resize planning over the decoded media: letterbox every asset into a
     * 224×224 training canvas — integer-only arithmetic (scale in 1/10000
@@ -687,7 +695,7 @@ object TrainingData {
       .withColumn("pad_y", expr("(224L - out_h) div 2L"))
       .select(col("doc_id"), col("width"), col("height"), col("scale_bp"),
         col("out_w"), col("out_h"), col("pad_x"), col("pad_y"))
-      .orderBy("doc_id")
+      .transform(orderedRows(col("doc_id")))
   }
 
   /** Incremental dedup — the shape a DAILY ingest actually runs: the new

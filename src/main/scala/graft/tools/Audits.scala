@@ -3,13 +3,13 @@ package graft.tools
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
-/** The six static-plan audits: plan shapes that pass at fixture scale
+/** The seven static-plan audits: plan shapes that pass at fixture scale
   * and fail at 100 TB (ARCHITECTURE "Scale architecture"). Each audit's
   * one rule, `offenders(query, queryExecution)`, is what AuditsSpec
   * gates at sf0.001 and what this runner applies at any SF.
   *
   * The runner opens one AQE-off session (the audits judge the static
-  * planner's choices), builds each declared query once and runs all six
+  * planner's choices), builds each declared query once and runs all seven
   * rules on it. Prints `OFFENDER <audit> <query>: …` and
   * `FAILED <query>: <class>: <msg>` lines, then one
   * `{"metric":"audits",…}` line; exits 1 on any offender or failure.
@@ -23,7 +23,8 @@ object Audits {
     "scan" -> (ScanAudit.offenders _),
     "prune" -> (PruneAudit.offenders _),
     "window" -> (WindowAudit.offenders _),
-    "aqeflip" -> (AqeFlipAudit.offenders _))
+    "aqeflip" -> (AqeFlipAudit.offenders _),
+    "coalesce" -> (CoalesceAudit.offenders _))
 
   /** A physical node's children, with a cache scan descending into its
     * cached plan (the hazards apply at cache materialization too). */

@@ -41,4 +41,12 @@ object Bridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
       case _ => None
     }
+
+  /** Blocks until every event posted to `sc`'s listener bus so far has
+    * reached its listeners (`listenerBus` is spark-private), so a count a
+    * listener keeps is complete once the jobs it counts have returned.
+    * False when the bus did not drain within Spark's 10 s wait. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Boolean =
+    try { sc.listenerBus.waitUntilEmpty(); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.QueryExecution
 
-/** Full-surface gate of the six static-plan audits: every declared
+/** Full-surface gate of the seven static-plan audits: every declared
   * query's sf0.001 plans, built once with AQE off (the audits judge the
   * static planner's choices), must have no offender under any audit's
   * `offenders` rule — the same rules `graft.tools.Audits` runs at any SF.
@@ -46,7 +46,12 @@ class AuditsSpec extends SparkSpec {
     "aqeflip" -> ("no un-pinned corpus-keyed aggregate join side",
       "an aggregate join side keyed on corpus-cardinality keys can flip " +
         "to a multi-GB broadcast under AQE — pin the join's shuffle " +
-        "(merge hint) or record the written bound in decidedPins"))
+        "(merge hint) or record the written bound in decidedPins"),
+    "coalesce" -> ("no coalesce(1) collapses a shuffle or a many-split scan",
+      "coalesce(1) runs its whole input stage in ONE task — sort with " +
+        "Tables.orderedRows (which collapses only a one-split stage) or " +
+        "orderBy, or bound the rows first and list the query in " +
+        "CoalesceAudit.boundedByDesign"))
 
   for ((audit, rule) <- tools.Audits.all) {
     val (title, remedy) = cases(audit)

@@ -26,6 +26,17 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("GreaterThanOrEqual(o_totalprice"), "BETWEEN should push bounds")
   }
 
+  test("q_filter, q_str, q_csv_roundtrip and q_vecbin_roundtrip run as one job with no exchange") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    for (q <- Seq("q_filter", "q_str", "q_csv_roundtrip", "q_vecbin_roundtrip")) {
+      val df = SparkEntry.queries(q)(spark, d)
+      assert(!planOf(df).contains("Exchange"), s"$q:\n${planOf(df)}")
+      val jobs = Bench.jobsDuring(spark)(
+        df.write.format("noop").mode("overwrite").save())
+      assert(jobs == 1, s"$q ran $jobs jobs")
+    }
+  }
+
   test("q_project prunes the lineitem scan to the referenced columns") {
     val p = planOf(Relational.qProject(spark, d))
     val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")

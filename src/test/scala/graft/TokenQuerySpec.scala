@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, length, lit}
+import org.apache.spark.sql.functions.{col, length, lit, size}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -15,7 +15,8 @@ import graft.operators.{Insights, LlmPipeline, TrainingData}
 /** The corpus token queries on hand-built corpora: q_tfidf's document
   * frequency against a Spark SQL form of its oracle, q_bm25's spread of
   * an under-split `documents` scan over the cores, and the storage its
-  * per-doc profile holds across runs. */
+  * per-doc profile holds across runs; and the two split-gated helpers
+  * beside it, `Tables.spreadToCores` and `Tables.orderedRows`. */
 class TokenQuerySpec extends SparkSpec {
   import spark.implicits._
 
@@ -133,6 +134,57 @@ class TokenQuerySpec extends SparkSpec {
     val spread = Tables.spreadToCores(docs)
     assert(roundRobins(spread).isEmpty)
     assert(explain(spread) == explain(docs))
+  }
+
+  /** 300 rows with a repeated, null-bearing leading key `k`, a
+    * null-bearing string `s` and the unique tiebreak `id`, written as
+    * `files` parquet files. */
+  private def keyed(files: Int): DataFrame = {
+    val dir = Files.createTempDirectory("graft-ordered").toString
+    spark.range(300).selectExpr(
+        "CASE WHEN id % 11 = 0 THEN NULL ELSE CAST(id % 7 AS INT) END AS k",
+        "CASE WHEN id % 13 = 0 THEN NULL ELSE concat('s', CAST(id % 5 AS STRING)) END AS s",
+        "id")
+      .repartition(files).write.parquet(s"$dir/keyed.parquet")
+    spark.read.parquet(s"$dir/keyed.parquet")
+  }
+
+  private val orderings = Seq(
+    Seq(col("k").asc, col("id").asc),
+    Seq(col("k").desc, col("id").desc),
+    Seq(col("k").asc_nulls_last, col("id").asc),
+    Seq(col("k").desc_nulls_first, col("id").asc),
+    Seq(col("s").desc_nulls_last, col("k").asc_nulls_first, col("id").desc))
+
+  test("orderedRows sorts a one-file input in its scan task, in orderBy's order") {
+    val df = keyed(1)
+    assert(Tables.scanSplits(df) == Some(1))
+    for (o <- orderings) {
+      val out = Tables.orderedRows(o: _*)(df)
+      assert(out.collect().toSeq == df.orderBy(o: _*).collect().toSeq, o)
+      assert(!explain(out).contains("Exchange"), explain(out))
+    }
+  }
+
+  test("orderedRows is exactly orderBy over an input of >= cores files") {
+    val df = keyed(2 * spark.sparkContext.defaultParallelism)
+    assert(Tables.scanSplits(df).exists(_ >= spark.sparkContext.defaultParallelism))
+    // the exchange ids count plans built so far in the session
+    def plan(x: DataFrame) = explain(x).replaceAll("plan_id=\\d+", "plan_id")
+    for (o <- orderings)
+      assert(plan(Tables.orderedRows(o: _*)(df)) == plan(df.orderBy(o: _*)))
+  }
+
+  test("a one-file VecBin read-back counts as one split") {
+    val dir = Files.createTempDirectory("graft-vecbin-splits").toString
+    val fmt = "graft.sources.VecBinSource"
+    Tables.embeddings(spark, d).coalesce(1)
+      .where(size(col("embedding")) === sources.VecBin.DefaultDim && col("label").isNotNull)
+      .select(col("vec_id"), col("label"), col("embedding"))
+      .write.format(fmt).mode("overwrite").save(dir)
+    val back = spark.read.format(fmt).load(dir)
+    assert(Tables.scanSplits(back) == Some(1))
+    assert(!explain(Tables.orderedRows(col("vec_id"))(back)).contains("Exchange"))
   }
 
   test("q_bm25 returns the same rows whether or not its scan is spread") {

@@ -9,7 +9,7 @@
 #
 # Ordering is therefore MOST-CONTENTION-SENSITIVE FIRST:
 #   1. closing bench      — wall-clock timing; wants the freshest host.
-#   2. audits             — graft.tools.Audits, the six static-plan audits
+#   2. audits             — graft.tools.Audits, the seven static-plan audits
 #                           in one JVM per SF, at sf0.001 AND sf0.1 (plans
 #                           may differ across SFs via stats); fails on any
 #                           OFFENDER/FAILED line; insensitive to host state.
